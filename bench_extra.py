@@ -95,19 +95,26 @@ def explain_queries(sf_dir: str, cpus: int, names: list[str],
     spark.stop()
 
 
-def main() -> None:
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument("--time", default=None)
     ap.add_argument("--explain", default=None)
     ap.add_argument("--probe", action="store_true")
-    ap.add_argument("--repeats", type=int, default=3)
+    ap.add_argument("--repeats", type=_positive_int, default=3)
     ap.add_argument("--noop", action="store_true")
     ap.add_argument("--no-warm", action="store_true")
     ap.add_argument("--plans-dir", default=os.path.join(REPO, "plans", "r06"))
     ap.add_argument("--tag", default="before")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     if args.probe:
         print(json.dumps(host_parallel_capacity(4, 16, repeats=3)))

@@ -16,11 +16,13 @@ Physical design (SURVEY §4):
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import asdict
 
 import pandas as pd
 
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
@@ -379,7 +381,17 @@ def _collect_alias_map(alias_dict: DataFrame) -> dict[str, list[tuple[str, str, 
     return alias_map
 
 
-def stage_link(mentions: DataFrame, alias_dict: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def _alias_broadcast(sc: SparkContext, alias_dict: DataFrame | Broadcast) -> Broadcast:
+    """The alias map as a broadcast variable. A caller running several
+    stages passes one it already built: each collect of the dictionary is a
+    driver round trip of its own."""
+    if isinstance(alias_dict, Broadcast):
+        return alias_dict
+    return sc.broadcast(_collect_alias_map(alias_dict))
+
+
+def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
+               cfg: PipelineConfig) -> DataFrame:
     """Alias-dictionary resolution + embedding rerank for ambiguous aliases.
 
     The dictionary is the SMALL side (that is why the north star broadcasts
@@ -390,11 +402,12 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame, cfg: PipelineConfig) 
     groupBy-per-occurrence to regroup candidates — a full shuffle of all
     mentions — which this formulation eliminates.)
 
+    ``alias_dict`` is the dimension table, or its ``_alias_broadcast``.
+
     Output: RESOLVED (entity_id null => unresolved).
     """
     dim, seed = cfg.embedding_dim, cfg.seed
-    alias_map = _collect_alias_map(alias_dict)
-    bc = mentions.sparkSession.sparkContext.broadcast(alias_map)
+    bc = _alias_broadcast(mentions.sparkSession.sparkContext, alias_dict)
 
     def gen(batches):
         emb = get_embedder(dim, seed)
@@ -435,8 +448,7 @@ def _occ_node(prefix: str = "o:") -> F.Column:
         "#", F.col("url"), F.col("sent_idx"), F.col("begin"), F.col("end")))
 
 
-def stage_canon(resolved: DataFrame, mentions: DataFrame,
-                max_cc_iterations: int = 20,
+def stage_canon(resolved: DataFrame, max_cc_iterations: int = 20,
                 comp: DataFrame | dict | None = None) -> DataFrame:
     """Same-as evidence -> connected components -> occurrence->canonical.
 
@@ -459,7 +471,7 @@ def stage_canon(resolved: DataFrame, mentions: DataFrame,
     )
     unresolved = occ.where(F.col("entity_id").isNull())
     if comp is None:
-        comp = surface_components(resolved, mentions, max_cc_iterations)
+        comp = surface_components(resolved, None, max_cc_iterations)
     # else: caller already ran surface_components (run_pipeline branches on
     # its type) — reuse it rather than re-running the whole CC
     if isinstance(comp, dict):
@@ -485,37 +497,95 @@ def surface_components(
 ) -> dict[str, str] | DataFrame:
     """Connected components over the UNRESOLVED-surface graph.
 
+    ``resolved`` carries every mention's (url, norm), so it is also the
+    coref mention source; ``mentions`` may only be None or ``resolved``.
+
     Scale-adaptive physical strategy (AQE-style): the surface graph is tiny
     relative to the corpus (vocabulary, not occurrences), so under
     ``collect_threshold`` edges it is solved driver-side with union-find and
     returned as a dict (broadcastable); past the threshold the distributed
     large-star/small-star operator runs and a (surf, component) DataFrame is
-    returned."""
-    mentions = mentions if mentions is not None else resolved
-    if mentions is resolved:
-        # common case (run_pipeline passes the same frame twice): ONE
-        # distinct pass over the mention stream feeds all three derived
-        # sets — the old shape ran three separate (url, norm) distincts
-        # over the full 253k-row resolved frame (~1s at sf1.0). The
-        # unresolved flag rides the distinct for free: a norm resolves
-        # identically wherever it occurs (deterministic dictionary), so
-        # distinct (url, norm, unres) == distinct (url, norm).
-        uniq = resolved.select(
-            "url", "norm", F.col("entity_id").isNull().alias("unres")).distinct()
-        unresolved_pairs = uniq.where(F.col("unres"))
-        mention_pairs = uniq
+    returned. The edge count is found in as few Spark actions as the input
+    allows:
+      1. download at most ``collect_threshold`` graph rows (``_graph_rows``)
+         and build the edges from them in Python — ONE action, the common
+         case (the JVM edge frame's shuffles are a Spark job each);
+      2. graph rows grow with pages, edges with vocabulary: if the rows
+         overflow, download at most ``collect_threshold`` edges of the JVM
+         edge frame instead."""
+    if mentions is not None and mentions is not resolved:
+        raise ValueError("surface_components: mentions must be None or "
+                         "the resolved frame itself")
+    rows = _graph_rows(resolved)
+    table = rows.limit(collect_threshold + 1).toArrow()
+    if table.num_rows <= collect_threshold:
+        pairs = _surface_edges(table)
     else:
-        unresolved_pairs = (resolved.where(F.col("entity_id").isNull())
-                            .select("url", "norm").distinct())
-        mention_pairs = mentions.select("url", "norm").distinct()
+        table = _surface_edge_frame(rows).limit(collect_threshold + 1).toArrow()
+        pairs = list(zip(table.column("src").to_pylist(),
+                         table.column("dst").to_pylist()))
+    if len(pairs) <= collect_threshold:
+        from . import canon   # per-call lookup: wrappers of cc_unionfind apply
+        return canon.cc_unionfind(pairs)
+    # distributed branch. connected_components reads its input twice;
+    # persist (not localCheckpoint): DataFrame.unpersist() cannot release
+    # localCheckpoint blocks. Materialize the (much smaller) mapping so the
+    # edges cache AND the CC iteration state are released here — a lazy
+    # plan would pin them in storage for the session lifetime.
+    edges = _surface_edge_frame(rows).persist()
+    comp = connected_components(
+        edges, max_iterations=max_cc_iterations, materialize=True
+    ).withColumnRenamed("node", "surf")
+    edges.unpersist(blocking=True)
+    return comp
+
+
+def _graph_rows(resolved: DataFrame) -> DataFrame:
+    """Distinct (url, norm, unres) rows that can make a surface node or a
+    coref edge: unresolved norms (nodes, coref sources) and multi-word norms
+    (coref targets, resolved or not). The unresolved flag rides the distinct
+    for free: a norm resolves identically wherever it occurs (deterministic
+    dictionary), so distinct (url, norm, unres) == distinct (url, norm)."""
+    return (
+        resolved
+        .select("url", "norm", F.col("entity_id").isNull().alias("unres"))
+        .where(F.col("unres") | F.col("norm").contains(" "))
+        .distinct()
+    )
+
+
+def _surface_edges(table) -> list[tuple[str, str]]:
+    """The surface graph's edges from an Arrow table of ``_graph_rows``:
+      s:norm       — s:norm          (self edge: every unresolved surface)
+      s:last_word  — s:full_norm     (within-page partial-name coreference)
+    The same edge set ``_surface_edge_frame`` builds in the JVM, without
+    its join and distinct stages."""
+    unresolved: set[tuple[str, str]] = set()
+    by_last_word: dict[tuple[str, str], set[str]] = {}
+    for url, norm, unres in zip(table.column("url").to_pylist(),
+                                table.column("norm").to_pylist(),
+                                table.column("unres").to_pylist()):
+        if unres:
+            unresolved.add((url, norm))
+        if " " in norm:
+            by_last_word.setdefault((url, norm.rsplit(" ", 1)[1]), set()).add(norm)
+    nodes = {norm for _, norm in unresolved}
+    coref = {("s:" + key[1], "s:" + full)
+             for key in unresolved for full in by_last_word.get(key, ())}
+    return [("s:" + n, "s:" + n) for n in nodes] + list(coref)
+
+
+def _surface_edge_frame(rows: DataFrame) -> DataFrame:
+    """The JVM form of ``_surface_edges`` over ``_graph_rows``, for inputs
+    with too many graph rows to download."""
+    unresolved_pairs = rows.where(F.col("unres"))
     surface_nodes = (
         unresolved_pairs.select(F.concat(F.lit("s:"), F.col("norm")).alias("src"))
         .distinct()
         .withColumn("dst", F.col("src"))       # self edge keeps singletons
     )
     multiword = (
-        mention_pairs.select(F.col("url").alias("m_url"),
-                             F.col("norm").alias("full_norm"))
+        rows.select(F.col("url").alias("m_url"), F.col("norm").alias("full_norm"))
         .where(F.size(F.split("full_norm", " ")) > 1)
         .withColumn("lastw", F.element_at(F.split("full_norm", " "), -1))
     )
@@ -529,29 +599,12 @@ def surface_components(
                 F.concat(F.lit("s:"), F.col("full_norm")).alias("dst"))
         .distinct()
     )
-    # persist (not localCheckpoint): DataFrame.unpersist() cannot release
-    # localCheckpoint blocks (RDD-level, invisible to the CacheManager), and
-    # this frame must be releasable once the graph moves driver-side.
-    # connected_components localCheckpoints its own iteration state anyway.
-    edges = surface_nodes.unionByName(coref_edges).persist()
-    if edges.count() <= collect_threshold:
-        from .canon import cc_unionfind
-        pairs = [(r["src"], r["dst"]) for r in edges.collect()]
-        edges.unpersist(blocking=True)
-        return cc_unionfind(pairs)
-    # distributed branch: materialize the (much smaller) mapping so the
-    # edges cache AND the CC iteration state can be released here — a lazy
-    # plan would pin edges in storage for the session lifetime
-    comp = connected_components(
-        edges, max_iterations=max_cc_iterations, materialize=True
-    ).withColumnRenamed("node", "surf")
-    edges.unpersist(blocking=True)
-    return comp
+    return surface_nodes.unionByName(coref_edges)
 
 
 def stage_triples_inline(
     scored: DataFrame,
-    alias_dict: DataFrame,
+    alias_dict: DataFrame | Broadcast,
     surface_comp: dict[str, str],
     cfg: PipelineConfig,
 ) -> DataFrame:
@@ -564,7 +617,7 @@ def stage_triples_inline(
     so re-resolving here yields exactly stage_link's answer per occurrence."""
     dim, seed = cfg.embedding_dim, cfg.seed
     sc = scored.sparkSession.sparkContext
-    bc_alias = sc.broadcast(_collect_alias_map(alias_dict))
+    bc_alias = _alias_broadcast(sc, alias_dict)
     bc_cc = sc.broadcast(surface_comp)
 
     def gen(batches):
@@ -671,6 +724,10 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     ch = cfg.config_hash()
     mh = f"{cfg.model_name}:{extractor_hash()}"
+    # one alias collect feeds both stages that need it, made on first use:
+    # a resumed stage needs no dictionary
+    aliases = functools.cache(
+        lambda: _alias_broadcast(spark.sparkContext, alias_dict))
 
     sentences = checkpointed(
         lambda: repartition_by_length(stage_extract_sentences(pages), cfg),
@@ -690,7 +747,7 @@ def run_pipeline(
         .select("url", "sent_idx", "sentence", "c.*")
     )
     resolved = checkpointed(
-        lambda: stage_link(stage_mentions(ner_scored), alias_dict, cfg),
+        lambda: stage_link(stage_mentions(ner_scored), aliases(), cfg),
         spark, workdir, "s4_resolved", ch, mh)
     if workdir is None:
         resolved = resolved.persist()
@@ -701,13 +758,13 @@ def run_pipeline(
         # common case: surface graph fit the driver -> broadcast it and
         # resolve candidate args map-side (no occurrence-level joins)
         triples = checkpointed(
-            lambda: stage_triples_inline(scored, alias_dict, comp, cfg),
+            lambda: stage_triples_inline(scored, aliases(), comp, cfg),
             spark, workdir, "s5_triples", ch, mh)
     else:
         # at-scale fallback: distributed CC + occurrence-keyed equi-joins;
         # reuse the already-materialized component mapping (recomputing CC
         # here would double the most expensive stage-5 work)
-        canon_map = stage_canon(resolved, resolved, comp=comp)
+        canon_map = stage_canon(resolved, comp=comp)
         if workdir is None:
             canon_map = canon_map.persist()
             persisted.append(canon_map)

@@ -42,11 +42,7 @@ _SUBWORD_CHUNK = 4  # pieces of ≤4 chars → multi-piece words exercise consol
 _SENT_RE = re.compile(r"[^.!?\n]*[.!?]+|[^.!?\n]+", re.UNICODE)
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=1 << 20)
-@lru_cache(maxsize=1 << 17)
+@lru_cache(maxsize=1 << 20)
 def token_id(piece: str) -> int:
     """Stable 31-bit vocab id from the piece text (md5-derived; deterministic
     across processes, unlike Python's salted hash()). Cached: natural-language

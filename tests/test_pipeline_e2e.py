@@ -36,11 +36,105 @@ def triples(spark, tiny_pages_df, alias_df, cfg):
     return t
 
 
+def _last_execution_id(spark) -> int:
+    """Highest SQL execution id in the status store, once the listener bus
+    has delivered every finished execution."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    last = -1
+    while it.hasNext():
+        last = max(last, it.next().executionId())
+    return last
+
+
+@pytest.fixture
+def alias_collects(monkeypatch):
+    """Counts the pipeline's collects of the alias dictionary."""
+    import kgforge.pipeline as pl
+
+    calls = []
+    real = pl._collect_alias_map
+
+    def spy(alias_dict):
+        calls.append(alias_dict)
+        return real(alias_dict)
+
+    monkeypatch.setattr(pl, "_collect_alias_map", spy)
+    return calls
+
+
+def test_surface_graph_driver_edges_match_jvm_edges(spark):
+    """kg-web-sized graphs carry no coref edge, so the coref cases are
+    hand-built: the driver-side edges must equal the JVM edge frame, and
+    every gate outcome (rows fit; rows overflow but edges fit; edges
+    overflow -> distributed) must give union-find's mapping over it."""
+    from kgforge.canon import _release_local_checkpoint, cc_unionfind
+    from kgforge.pipeline import (_graph_rows, _surface_edge_frame,
+                                  _surface_edges, surface_components)
+
+    def m(url, sent_idx, word, entity_id=None):
+        norm = word.lower()
+        return (url, sent_idx, f"{word} was here.", word, "PER", 0,
+                len(word), norm, entity_id)
+
+    resolved = spark.createDataFrame([
+        # unresolved surname + resolved full name on one page -> edge;
+        # the surname repeats across sentences
+        m("https://t/a", 0, "Orla Quizzle", "PER_9001"),
+        m("https://t/a", 1, "Quizzle"),
+        m("https://t/a", 2, "Quizzle"),
+        m("https://t/a", 3, "Ida Vex", "PER_9002"),
+        # the full name's surname on ANOTHER page -> no edge
+        m("https://t/b", 0, "Vex"),
+        # unresolved multi-word norm: a node AND a coref target
+        m("https://t/c", 0, "Lena Drax"),
+        m("https://t/c", 1, "Lena Drax"),
+        m("https://t/c", 2, "Drax"),
+        # resolved single-word norms make neither node nor edge
+        m("https://t/c", 3, "Paris", "LOC_9003"),
+        # a full name on a second page: one more graph row, no more edges
+        m("https://t/d", 0, "Ida Vex", "PER_9002"),
+    ], schema=schemas.RESOLVED)
+
+    rows = _graph_rows(resolved)
+    assert rows.count() == 7
+    jvm_edges = [(r["src"], r["dst"]) for r in _surface_edge_frame(rows).collect()]
+    driver_edges = _surface_edges(rows.toArrow())
+    assert sorted(driver_edges) == sorted(jvm_edges) == sorted([
+        ("s:quizzle", "s:quizzle"), ("s:vex", "s:vex"),
+        ("s:lena drax", "s:lena drax"), ("s:drax", "s:drax"),
+        ("s:quizzle", "s:orla quizzle"), ("s:drax", "s:lena drax"),
+    ])
+    expected = {
+        "s:quizzle": "s:orla quizzle", "s:orla quizzle": "s:orla quizzle",
+        "s:vex": "s:vex",
+        "s:drax": "s:drax", "s:lena drax": "s:drax",
+    }
+    assert cc_unionfind(jvm_edges) == expected
+
+    assert surface_components(resolved, resolved) == expected
+    # 7 rows overflow, 6 edges fit: still the driver branch
+    assert surface_components(resolved, collect_threshold=6) == expected
+    distributed = surface_components(resolved, resolved, collect_threshold=5)
+    assert not isinstance(distributed, dict)
+    assert {r["surf"]: r["component"] for r in distributed.collect()} == expected
+    _release_local_checkpoint(distributed)
+    with pytest.raises(ValueError):
+        surface_components(resolved, resolved.select("*"))
+
+
+def test_in_memory_run_collects_alias_map_once(spark, tiny_pages_df, alias_df,
+                                               cfg, alias_collects):
+    """stage_link and stage_triples_inline share one alias broadcast."""
+    assert run_pipeline(spark, tiny_pages_df, alias_df, cfg).count() > 0
+    assert len(alias_collects) == 1
+
+
 def test_distributed_cc_branch_matches_driver_unionfind(spark, tiny_pages_df,
                                                         alias_df, cfg):
     """The at-scale fallback (surface graph > collect_threshold -> the
     distributed large-star/small-star operator) must produce exactly the
-    driver-side union-find mapping, and must release its edges cache."""
+    driver-side union-find mapping, and leave only that mapping cached."""
     from kgforge.pipeline import (repartition_by_length, stage_extract_sentences,
                                   stage_link, stage_mentions, stage_ner_score,
                                   surface_components)
@@ -54,8 +148,11 @@ def test_distributed_cc_branch_matches_driver_unionfind(spark, tiny_pages_df,
     resolved = stage_link(stage_mentions(ner), alias_df, cfg).persist()
     resolved.count()
 
+    first = _last_execution_id(spark)
     comp_dict = surface_components(resolved, resolved)
     assert isinstance(comp_dict, dict) and comp_dict
+    # the driver branch is one Arrow download: one SQL execution
+    assert _last_execution_id(spark) - first == 1
 
     before = n_cached()
     comp_df = surface_components(resolved, resolved, collect_threshold=0)
@@ -238,7 +335,7 @@ def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg):
     sent_ents = stage_ner(stage_sentences(pages_df.select("url", "lang", "text")), cfg)
     mentions = stage_mentions(sent_ents)
     resolved = stage_link(mentions, alias_df, cfg)
-    canon = stage_canon(resolved, resolved)
+    canon = stage_canon(resolved)
     joined = (
         resolved.withColumn("node", F.concat(F.lit("o:"), F.concat_ws(
             "#", "url", "sent_idx", "begin", "end")))
@@ -272,14 +369,18 @@ def test_non_english_pages_pruned(spark, tiny_pages_df, cfg):
     assert langs == {"en"}
 
 
-def test_checkpoint_resume_identical(spark, tiny_pages_df, alias_df, cfg, tmp_path):
+def test_checkpoint_resume_identical(spark, tiny_pages_df, alias_df, cfg, tmp_path,
+                                    alias_collects):
     wd = str(tmp_path / "wd")
     t1 = run_pipeline(spark, tiny_pages_df, alias_df, cfg, workdir=wd)
     rows1 = sorted(map(tuple, t1.collect()))
     assert os.path.exists(os.path.join(wd, "s5_triples", "_kg_manifest.json"))
+    assert len(alias_collects) == 1
     t2 = run_pipeline(spark, tiny_pages_df, alias_df, cfg, workdir=wd)
     rows2 = sorted(map(tuple, t2.collect()))
     assert rows1 == rows2
+    # a full resume builds no stage that needs the alias dictionary
+    assert len(alias_collects) == 1
 
 
 def test_length_bucketing_partitions_are_homogeneous(spark, tiny_pages_df, cfg):
