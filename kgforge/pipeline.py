@@ -2,12 +2,14 @@
 
 Physical design (SURVEY §4):
 - ONE shuffle between sentence production and inference: a repartition on
-  (length bucket, salted url hash) followed by sortWithinPartitions(n_tok),
-  so no Arrow batch mixes wildly different sequence lengths and hot domains
+  a hash of (url, sent_idx) followed by sortWithinPartitions(n_tok), so no
+  Arrow batch mixes wildly different sequence lengths and hot domains
   cannot concentrate in one task (anti-skew per BASELINE.json).
-- Models are per-worker singletons (kgforge.workers); all UDFs are
-  Arrow-batched mapInPandas / pandas_udf — no per-row Python.
-- The alias dictionary joins with an explicit ``broadcast()`` hint.
+- Each stage has one form: stages 1-4 are each ONE fused Arrow-batched
+  mapInPandas eval (stage_extract_sentences, stage_ner_score, stage_link,
+  stage_triples_inline), since every chained Python eval holds its own
+  worker. Models are per-worker singletons (kgforge.workers).
+- The alias dictionary ships to the mention stream as a broadcast variable.
 - Cheap filters run before expensive stages (sentences with <2 entities
   never reach the NLI scorer; non-target languages are pruned at the scan).
 - Stage boundaries can checkpoint to parquet with lineage manifests
@@ -24,7 +26,7 @@ import pandas as pd
 
 from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from . import schemas
 from .config import PipelineConfig
@@ -39,37 +41,7 @@ from .workers import get_embedder, get_nli, get_token_classifier
 
 
 # --------------------------------------------------------------------------
-# stage 1 — extract
-# --------------------------------------------------------------------------
-
-@F.pandas_udf(StringType())
-def extract_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_text(bytes(b)) if b is not None else "")
-
-
-def stage_extract(pages: DataFrame, langs: tuple[str, ...] = ("en",)) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (url, lang, text).
-
-    The language filter is applied BEFORE extraction so Catalyst pushes it to
-    the scan (partition pruning on a lang-partitioned table); only url/html/
-    lang columns are read (column pruning: never read `text` when extracting
-    from `html`).
-
-    This is the UNFUSED modular form (kept for stage-level tests and for
-    callers that only need extraction); the production pipeline uses the
-    fused ``stage_extract_sentences`` so one Python eval holds one worker.
-    The per-element ``.map`` inside ``extract_udf`` is inherent: extract_text
-    is per-document Python either way — Arrow batching amortizes transfer,
-    not the parse itself."""
-    return (
-        pages
-        .where(F.col("lang").isin(list(langs)))
-        .select("url", "lang", extract_udf("html").alias("text"))
-    )
-
-
-# --------------------------------------------------------------------------
-# stage 2a — sentence split + length bucketing
+# stages 1 + 2a — extract, sentence split, length bucketing
 # --------------------------------------------------------------------------
 
 def _piece_count(sentence: str) -> int:
@@ -77,25 +49,6 @@ def _piece_count(sentence: str) -> int:
         (len(m.group(0)) + _SUBWORD_CHUNK - 1) // _SUBWORD_CHUNK
         for m in _WORD_RE.finditer(sentence)
     )
-
-
-def stage_sentences(extracted: DataFrame) -> DataFrame:
-    def gen(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("url", "sent_idx", "sent_begin", "sentence", "n_tok", "bucket")}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                for i, (begin, sent) in enumerate(split_sentences(text or "")):
-                    n_tok = _piece_count(sent)
-                    out["url"].append(url)
-                    out["sent_idx"].append(i)
-                    out["sent_begin"].append(begin)
-                    out["sentence"].append(sent)
-                    out["n_tok"].append(n_tok)
-                    out["bucket"].append(int(math.ceil(math.log2(n_tok + 1))))
-            yield pd.DataFrame(out)
-
-    return extracted.mapInPandas(gen, schema=schemas.SENTENCES)
 
 
 def stage_extract_sentences(
@@ -152,67 +105,14 @@ def repartition_by_length(sentences: DataFrame, cfg: PipelineConfig) -> DataFram
 
 
 # --------------------------------------------------------------------------
-# stage 2b — NER inference
+# stages 2b + 3 — NER, candidate generation, zero-shot scoring
 # --------------------------------------------------------------------------
-
-def stage_ner(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """-> (url, sent_idx, sent_begin, sentence, entities[]) with char offsets
-    sentence-local. Encoder is a worker singleton; micro-batching and padding
-    happen inside predict_tokens exactly as the reference's batch loop."""
-    seed = cfg.seed
-    cfg_kwargs = asdict(cfg)
-
-    def gen(batches):
-        local_cfg = PipelineConfig(**cfg_kwargs)
-        enc = get_token_classifier(seed, local_cfg.tokenizer)
-        for pdf in batches:
-            texts = pdf["sentence"].tolist()
-            token_lists = predict_tokens(texts, enc, local_cfg)
-            entities = [
-                [
-                    {"word": e.word, "label": e.label, "score": e.score,
-                     "begin": e.begin, "end": e.end}
-                    for e in consolidate_entities(toks)
-                ]
-                for toks in token_lists
-            ]
-            yield pd.DataFrame({
-                "url": pdf["url"], "sent_idx": pdf["sent_idx"],
-                "sent_begin": pdf["sent_begin"], "sentence": pdf["sentence"],
-                "entities": entities,
-            })
-
-    return sentences.mapInPandas(gen, schema=schemas.SENTENCE_ENTITIES)
-
-
-# --------------------------------------------------------------------------
-# stage 3 — candidate generation + zero-shot scoring
-# --------------------------------------------------------------------------
-
-def stage_candidates(sentence_entities: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    max_dist = cfg.max_pair_distance
-
-    @F.pandas_udf(ArrayType(schemas.CANDIDATE))
-    def cand_udf(entities: pd.Series) -> pd.Series:
-        return entities.map(
-            lambda ents: [asdict(c) for c in generate_candidates(list(ents), max_dist)]
-        )
-
-    return (
-        sentence_entities
-        .where(F.size("entities") >= 2)      # cheap gate before the NLI stage
-        .withColumn("candidate", F.explode(cand_udf("entities")))
-        .select("url", "sent_idx", "sentence", "candidate.*")
-    )
-
 
 def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Fused model stage: NER + consolidation + BIOES + candidate generation
     + NLI scoring in ONE Python eval. The sentence stream crosses the
     JVM<->Python boundary once for all model work; downstream branches are
-    pure-JVM explodes of the two array columns. (Separate stage_ner /
-    stage_candidates_score remain as the modular forms used by tests and
-    ad-hoc queries.)"""
+    pure-JVM explodes of the two array columns."""
     seed = cfg.seed
     cfg_kwargs = asdict(cfg)
     scored_cand = StructType(
@@ -273,85 +173,6 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return sentences.mapInPandas(gen, schema=out_schema)
 
 
-def stage_candidates_score(sent_ents: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Fused stage 3: candidate generation + NLI scoring + threshold in ONE
-    Python eval (see stage_extract_sentences for why fusion matters). The
-    <2-entities gate still runs JVM-side before any Python."""
-    max_dist = cfg.max_pair_distance
-    bsz, thr = cfg.batch_size, cfg.relation_threshold
-    out_cols = ["url", "sent_idx", "sentence",
-                "subj_word", "subj_type", "subj_begin", "subj_end",
-                "obj_word", "obj_type", "obj_begin", "obj_end",
-                "pred", "hypothesis"]
-    out_schema = StructType(
-        [schemas.SENTENCES.fields[0], schemas.SENTENCES.fields[1],
-         StructField("sentence", StringType(), False)]
-        + list(schemas.CANDIDATE.fields)
-        + [StructField("score", DoubleType(), False)]
-    )
-
-    def gen(batches):
-        nli = get_nli(cfg.seed)
-        for pdf in batches:
-            rows = {c: [] for c in out_cols}
-            for url, sent_idx, sentence, ents in zip(
-                    pdf["url"], pdf["sent_idx"], pdf["sentence"], pdf["entities"]):
-                for c in generate_candidates(list(ents), max_dist):
-                    rows["url"].append(url)
-                    rows["sent_idx"].append(sent_idx)
-                    rows["sentence"].append(sentence)
-                    rows["subj_word"].append(c.subj_word)
-                    rows["subj_type"].append(c.subj_type)
-                    rows["subj_begin"].append(c.subj_begin)
-                    rows["subj_end"].append(c.subj_end)
-                    rows["obj_word"].append(c.obj_word)
-                    rows["obj_type"].append(c.obj_type)
-                    rows["obj_begin"].append(c.obj_begin)
-                    rows["obj_end"].append(c.obj_end)
-                    rows["pred"].append(c.pred)
-                    rows["hypothesis"].append(c.hypothesis)
-            out = pd.DataFrame(rows)
-            if len(out):
-                out["score"] = score_candidates(
-                    out["sentence"].tolist(), out["hypothesis"].tolist(), nli,
-                    bsz, cfg.nli_max_length)
-                out = out[out["score"] >= thr]
-            else:
-                out["score"] = pd.Series(dtype="float64")
-            yield out
-
-    return (
-        sent_ents
-        .where(F.size("entities") >= 2)
-        .mapInPandas(gen, schema=out_schema)
-    )
-
-
-def stage_score(candidates: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    seed, bsz, thr = cfg.seed, cfg.batch_size, cfg.relation_threshold
-    nli_max_len = cfg.nli_max_length
-    out_schema = StructType(candidates.schema.fields + [
-        StructField("score", DoubleType(), False)
-    ])
-
-    def gen(batches):
-        nli = get_nli(seed)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(score=pd.Series(dtype="float64"))
-                continue
-            scores = score_candidates(
-                pdf["sentence"].tolist(), pdf["hypothesis"].tolist(), nli,
-                bsz, nli_max_len
-            )
-            yield pdf.assign(score=scores)
-
-    return (
-        candidates.mapInPandas(gen, schema=out_schema)
-        .where(F.col("score") >= thr)
-    )
-
-
 # --------------------------------------------------------------------------
 # stage 4 — entity linking
 # --------------------------------------------------------------------------
@@ -390,6 +211,30 @@ def _alias_broadcast(sc: SparkContext, alias_dict: DataFrame | Broadcast) -> Bro
     return sc.broadcast(_collect_alias_map(alias_dict))
 
 
+def _resolve_norms(norms: list[str], sentences: pd.Series, amap: dict,
+                   emb) -> list[str | None]:
+    """Entity id per normalized mention (None: not in the dictionary). A
+    single candidate resolves directly; every ambiguous alias of the batch
+    goes through ONE embedding rerank on its sentence context."""
+    ids: list[str | None] = [None] * len(norms)
+    amb_idx, amb_ctx, amb_cands = [], [], []
+    for i, norm in enumerate(norms):
+        cands = amap.get(norm)
+        if not cands:
+            continue
+        if len(cands) == 1:
+            ids[i] = cands[0][0]
+        else:
+            amb_idx.append(i)
+            amb_ctx.append(sentences.iloc[i])
+            amb_cands.append(cands)
+    if amb_idx:
+        picked = rerank_ambiguous(amb_ctx, amb_cands, emb)
+        for i, eid in zip(amb_idx, picked):
+            ids[i] = eid
+    return ids
+
+
 def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
                cfg: PipelineConfig) -> DataFrame:
     """Alias-dictionary resolution + embedding rerank for ambiguous aliases.
@@ -414,26 +259,10 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
         amap = bc.value
         for pdf in batches:
             norms = [normalize_mention(w) for w in pdf["word"]]
-            pdf = pdf.assign(norm=norms)
-            ids: list[str | None] = [None] * len(pdf)
-            amb_idx, amb_ctx, amb_cands = [], [], []
-            for i, norm in enumerate(norms):
-                cands = amap.get(norm)
-                if not cands:
-                    continue
-                if len(cands) == 1:
-                    ids[i] = cands[0][0]
-                else:
-                    amb_idx.append(i)
-                    amb_ctx.append(pdf["sentence"].iloc[i])
-                    amb_cands.append(cands)
-            if amb_idx:
-                picked = rerank_ambiguous(amb_ctx, amb_cands, emb)
-                for i, eid in zip(amb_idx, picked):
-                    ids[i] = eid
             out = pdf[["url", "sent_idx", "sentence", "word", "label",
-                       "begin", "end", "norm"]].copy()
-            out["entity_id"] = ids
+                       "begin", "end"]].copy()
+            out["norm"] = norms
+            out["entity_id"] = _resolve_norms(norms, pdf["sentence"], amap, emb)
             yield out
 
     return mentions.mapInPandas(gen, schema=schemas.RESOLVED)
@@ -448,8 +277,7 @@ def _occ_node(prefix: str = "o:") -> F.Column:
         "#", F.col("url"), F.col("sent_idx"), F.col("begin"), F.col("end")))
 
 
-def stage_canon(resolved: DataFrame, max_cc_iterations: int = 20,
-                comp: DataFrame | dict | None = None) -> DataFrame:
+def stage_canon(resolved: DataFrame, comp: DataFrame) -> DataFrame:
     """Same-as evidence -> connected components -> occurrence->canonical.
 
     Dictionary/ANN-resolved occurrences already have a canonical id (the
@@ -462,7 +290,8 @@ def stage_canon(resolved: DataFrame, max_cc_iterations: int = 20,
     Graph over surface nodes only:
       s:norm       — s:norm          (self edge: every unresolved surface)
       s:last_word  — s:full_norm     (within-page partial-name coreference)
-    Component canonical = min surface node id (deterministic).
+    Component canonical = min surface node id (deterministic). ``comp`` is
+    the (surf, component) frame of surface_components' distributed branch.
     """
     occ = resolved.withColumn("node", _occ_node())
     resolved_map = (
@@ -470,20 +299,9 @@ def stage_canon(resolved: DataFrame, max_cc_iterations: int = 20,
         .select("node", F.col("entity_id").alias("canonical_id"))
     )
     unresolved = occ.where(F.col("entity_id").isNull())
-    if comp is None:
-        comp = surface_components(resolved, None, max_cc_iterations)
-    # else: caller already ran surface_components (run_pipeline branches on
-    # its type) — reuse it rather than re-running the whole CC
-    if isinstance(comp, dict):
-        spark = resolved.sparkSession
-        cc = F.broadcast(spark.createDataFrame(
-            [(k, v) for k, v in comp.items()],
-            schema="surf string, component string"))
-    else:
-        cc = comp
     unresolved_map = (
         unresolved.select("node", F.concat(F.lit("s:"), F.col("norm")).alias("surf"))
-        .join(cc, "surf")
+        .join(comp, "surf")
         .select("node", F.col("component").alias("canonical_id"))
     )
     return resolved_map.unionByName(unresolved_map)
@@ -610,11 +428,12 @@ def stage_triples_inline(
 ) -> DataFrame:
     """Canonical triples WITHOUT occurrence-level joins: candidate args are
     resolved map-side against the broadcast alias dictionary (+ embedding
-    rerank on the sentence context, identical to stage_link) and the tiny
-    surface-component map from connected components. The only shuffle left
-    in stage 5 is the final (url, subj, pred, obj) dedup aggregation — the
-    two big scored ⋈ canon_map joins are gone. Resolution is deterministic,
-    so re-resolving here yields exactly stage_link's answer per occurrence."""
+    rerank on the sentence context: stage_link's ``_resolve_norms``) and
+    the tiny surface-component map from connected components. The only
+    shuffle left in stage 5 is the final (url, subj, pred, obj) dedup
+    aggregation — the two big scored ⋈ canon_map joins are gone. Resolution
+    is deterministic, so re-resolving here yields exactly stage_link's
+    answer per occurrence."""
     dim, seed = cfg.embedding_dim, cfg.seed
     sc = scored.sparkSession.sparkContext
     bc_alias = _alias_broadcast(sc, alias_dict)
@@ -624,36 +443,18 @@ def stage_triples_inline(
         emb = get_embedder(dim, seed)
         amap, ccm = bc_alias.value, bc_cc.value
         for pdf in batches:
-            resolved_cols = {}
-            for side in ("subj", "obj"):
-                words = pdf[f"{side}_word"]
-                ids: list[str] = [""] * len(pdf)
-                amb_idx, amb_ctx, amb_cands = [], [], []
-                for i, w in enumerate(words):
-                    norm = normalize_mention(w)
-                    cands = amap.get(norm)
-                    if not cands:
-                        surf = "s:" + norm
-                        ids[i] = ccm.get(surf, surf)
-                    elif len(cands) == 1:
-                        ids[i] = cands[0][0]
-                    else:
-                        amb_idx.append(i)
-                        amb_ctx.append(pdf["sentence"].iloc[i])
-                        amb_cands.append(cands)
-                if amb_idx:
-                    picked = rerank_ambiguous(amb_ctx, amb_cands, emb)
-                    for i, eid in zip(amb_idx, picked):
-                        ids[i] = eid
-                resolved_cols[f"{side}_id"] = ids
             out = pdf[["url", "sent_idx", "pred", "subj_word", "obj_word",
                        "score"]].copy()
-            out["subj_id"] = resolved_cols["subj_id"]
-            out["obj_id"] = resolved_cols["obj_id"]
+            for side in ("subj", "obj"):
+                norms = [normalize_mention(w) for w in pdf[f"{side}_word"]]
+                ids = _resolve_norms(norms, pdf["sentence"], amap, emb)
+                # unresolved: the surface's component, else the surface itself
+                out[f"{side}_id"] = [
+                    eid if eid is not None else ccm.get("s:" + n, "s:" + n)
+                    for n, eid in zip(norms, ids)]
             yield out
 
-    from pyspark.sql.types import StructType as _St
-    out_schema = _St([
+    out_schema = StructType([
         schemas.TRIPLES["url"], schemas.TRIPLES["sent_idx"],
         schemas.TRIPLES["pred"], schemas.TRIPLES["subj_word"],
         schemas.TRIPLES["obj_word"], schemas.TRIPLES["score"],
@@ -764,7 +565,7 @@ def run_pipeline(
         # at-scale fallback: distributed CC + occurrence-keyed equi-joins;
         # reuse the already-materialized component mapping (recomputing CC
         # here would double the most expensive stage-5 work)
-        canon_map = stage_canon(resolved, comp=comp)
+        canon_map = stage_canon(resolved, comp)
         if workdir is None:
             canon_map = canon_map.persist()
             persisted.append(canon_map)

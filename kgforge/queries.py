@@ -49,7 +49,7 @@ def _fanout(df: DataFrame) -> DataFrame:
     passes). Fan the scan out to the session's parallelism FIRST (project
     the needed columns before calling, so the tiny exchange carries only
     them); at real scale the scan already has >= parallelism splits and
-    this no-ops — the same guard pages_from_documents has always had.
+    this no-ops.
 
     NOTE callers put row filters BEFORE this guard when they want scan
     pushdown (a filter above the repartition is pushed below it anyway,
@@ -2610,15 +2610,13 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table: page index = doc_id (pure function, no external data);
     the document's own word-soup text is appended as realistic no-entity
     filler so throughput numbers include honest dead weight."""
-    docs = _docs(spark, sf_dir).select("doc_id", F.col("text").alias("doc_text"))
     # small-file guard: a single-file scan yields ONE input partition, which
     # serializes the whole pre-shuffle Python chain (page gen + extract +
     # sentence split) onto one task. Fan the tiny input out to the session's
     # parallelism; at real scale the scan has >= parallelism splits already
     # and this branch never fires (no 100 TB repartition).
-    want = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < want:
-        docs = docs.repartition(want)
+    docs = _fanout(
+        _docs(spark, sf_dir).select("doc_id", F.col("text").alias("doc_text")))
 
     def gen(batches):
         from .synth import PageGen
@@ -2687,10 +2685,10 @@ def q_kg_triples(spark, sf_dir):
 def q_kg_entities(spark, sf_dir):
     """Stage-2 NER output (exploded mentions)."""
     from .pipeline import (repartition_by_length, stage_extract_sentences,
-                           stage_mentions, stage_ner)
+                           stage_mentions, stage_ner_score)
     cfg = PipelineConfig()
     pages = pages_from_documents(spark, sf_dir)
-    sent_ents = stage_ner(
+    sent_ents = stage_ner_score(
         repartition_by_length(stage_extract_sentences(pages), cfg), cfg)
     return stage_mentions(sent_ents).select(
         "url", "sent_idx", "word", "label", "begin", "end")
@@ -2718,10 +2716,10 @@ def q_kg_pagerank(spark, sf_dir):
 def q_kg_linked(spark, sf_dir):
     """Stage-4 resolution output."""
     from .pipeline import (repartition_by_length, stage_extract_sentences,
-                           stage_link, stage_mentions, stage_ner)
+                           stage_link, stage_mentions, stage_ner_score)
     cfg = PipelineConfig()
     pages = pages_from_documents(spark, sf_dir)
-    sent_ents = stage_ner(
+    sent_ents = stage_ner_score(
         repartition_by_length(stage_extract_sentences(pages), cfg), cfg)
     mentions = stage_mentions(sent_ents)
     return stage_link(mentions, _alias_df(spark), cfg).select(

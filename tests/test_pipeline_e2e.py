@@ -3,6 +3,7 @@ scale) + local-vs-Spark equivalence + checkpoint/resume."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
@@ -10,17 +11,15 @@ from pyspark.sql import functions as F
 
 from kgforge import schemas
 from kgforge.config import PipelineConfig
+from kgforge.extract import wrap_html
 from kgforge.metrics import triple_pr
 from kgforge.pipeline import (
     repartition_by_length,
     run_pipeline,
-    stage_candidates,
-    stage_extract,
+    stage_extract_sentences,
     stage_link,
     stage_mentions,
-    stage_ner,
-    stage_score,
-    stage_sentences,
+    stage_ner_score,
 )
 
 
@@ -61,6 +60,14 @@ def alias_collects(monkeypatch):
 
     monkeypatch.setattr(pl, "_collect_alias_map", spy)
     return calls
+
+
+def _pages_df(spark, texts: dict[str, str]):
+    """One English page per (url, text), its html wrapping the text."""
+    return spark.createDataFrame(
+        [{"url": url, "warc_ts": None, "html": wrap_html(text, url),
+          "text": text, "lang": "en"} for url, text in texts.items()],
+        schema=schemas.PAGES)
 
 
 def test_surface_graph_driver_edges_match_jvm_edges(spark):
@@ -135,9 +142,7 @@ def test_distributed_cc_branch_matches_driver_unionfind(spark, tiny_pages_df,
     """The at-scale fallback (surface graph > collect_threshold -> the
     distributed large-star/small-star operator) must produce exactly the
     driver-side union-find mapping, and leave only that mapping cached."""
-    from kgforge.pipeline import (repartition_by_length, stage_extract_sentences,
-                                  stage_link, stage_mentions, stage_ner_score,
-                                  surface_components)
+    from kgforge.pipeline import surface_components
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
@@ -252,11 +257,20 @@ def test_triples_schema_and_values(triples):
 
 
 def test_extract_matches_text_column(spark, tiny_pages_df):
-    """Stage-1 invariant on the Spark side: extracted == stored text."""
-    ext = stage_extract(tiny_pages_df, langs=("en", "fr", "de", "es"))
-    joined = ext.alias("e").join(tiny_pages_df.alias("p"), "url")
-    n_bad = joined.where(F.col("e.text") != F.col("p.text")).count()
-    assert n_bad == 0
+    """Stage-1 invariant on the Spark side: the sentences extracted from
+    html are exactly the split of the stored text, in every language."""
+    from kgforge.tokenization import split_sentences
+
+    langs = ("en", "fr", "de", "es")
+    got = sorted(
+        tuple(r) for r in stage_extract_sentences(tiny_pages_df, langs=langs)
+        .select("url", "sent_idx", "sent_begin", "sentence").collect())
+    want = sorted(
+        (r["url"], i, begin, sent)
+        for r in tiny_pages_df.where(F.col("lang").isin(list(langs)))
+        .select("url", "text").collect()
+        for i, (begin, sent) in enumerate(split_sentences(r["text"])))
+    assert got and got == want
 
 
 def test_spark_ner_matches_local(spark, tiny_pages_df, cfg):
@@ -267,10 +281,8 @@ def test_spark_ner_matches_local(spark, tiny_pages_df, cfg):
     from kgforge.synth import build_gazetteer
     from kgforge.tokenization import split_sentences
 
-    sent_ents = stage_ner(
-        repartition_by_length(stage_sentences(stage_extract(tiny_pages_df)), cfg),
-        cfg,
-    )
+    sent_ents = stage_ner_score(
+        repartition_by_length(stage_extract_sentences(tiny_pages_df), cfg), cfg)
     got = {
         (r["url"], r["sent_idx"]): [
             (e["word"], e["label"], e["begin"], e["end"], round(e["score"], 12))
@@ -298,75 +310,86 @@ def test_spark_ner_matches_local(spark, tiny_pages_df, cfg):
 def test_ambiguous_alias_resolved_by_context(spark, alias_df, cfg):
     """The 'Apex' alias must resolve via the ANN rerank to the entity whose
     signature words appear in the sentence."""
-    pages = [{
-        "url": "https://t/1", "warc_ts": None, "html": None,
-        "text": ("t\nIt is known that Amy Smith works for Apex near the "
-                 "mining shipping harbor."),
-        "lang": "en",
-    }, {
-        "url": "https://t/2", "warc_ts": None, "html": None,
-        "text": ("t\nIt is known that Amy Smith works for Apex near the "
-                 "software campus banking."),
-        "lang": "en",
-    }]
-    pages_df = spark.createDataFrame(pages, schema=schemas.PAGES)
-    mentions = stage_mentions(stage_ner(
-        stage_sentences(pages_df.select("url", "lang", "text")), cfg))
+    pages_df = _pages_df(spark, {
+        "https://t/1": ("t\nIt is known that Amy Smith works for Apex near the "
+                        "mining shipping harbor."),
+        "https://t/2": ("t\nIt is known that Amy Smith works for Apex near the "
+                        "software campus banking."),
+    })
+    mentions = stage_mentions(stage_ner_score(stage_extract_sentences(pages_df), cfg))
     resolved = stage_link(mentions, alias_df, cfg)
     by_url = {(r["url"], r["word"]): r["entity_id"] for r in resolved.collect()}
     assert by_url[("https://t/1", "Apex")] == "ORG_0100"  # Apex Mining Group
     assert by_url[("https://t/2", "Apex")] == "ORG_0101"  # Apex Software Labs
 
 
-def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg):
-    """'Orla Quizzle' (not in the alias dict) on two pages + a bare 'Quizzle'
-    mention must all share one canonical id via connected components."""
-    from kgforge.pipeline import stage_canon
+def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
+    """'Orla Quizzle' (not in the alias dict) and two bare 'Quizzle'
+    mentions, one of them on another page, must all share one canonical id
+    via connected components: in stage_canon's occurrence map, and in the
+    triples of both stage-5 branches of run_pipeline (driver union-find +
+    map-side resolution; distributed CC + occurrence-keyed joins)."""
+    import kgforge.pipeline as pl
+    from kgforge.canon import _release_local_checkpoint
 
-    pages = [
-        {"url": "https://t/a", "warc_ts": None, "html": None,
-         "text": "t\nOrla Quizzle visited Paris yesterday. Quizzle praised Berlin yesterday.",
-         "lang": "en"},
-        {"url": "https://t/b", "warc_ts": None, "html": None,
-         "text": "t\nOrla Quizzle visited Berlin yesterday.",
-         "lang": "en"},
-    ]
-    pages_df = spark.createDataFrame(pages, schema=schemas.PAGES)
-    sent_ents = stage_ner(stage_sentences(pages_df.select("url", "lang", "text")), cfg)
-    mentions = stage_mentions(sent_ents)
-    resolved = stage_link(mentions, alias_df, cfg)
-    canon = stage_canon(resolved)
+    pages_df = _pages_df(spark, {
+        "https://t/a": "t\nOrla Quizzle lives in Paris. Quizzle works for Acme Corp.",
+        "https://t/b": "t\nQuizzle lives in Berlin.",
+    })
+    resolved = stage_link(stage_mentions(stage_ner_score(
+        stage_extract_sentences(pages_df), cfg)), alias_df, cfg).persist()
+    comp = pl.surface_components(resolved, collect_threshold=0)
+    canon = pl.stage_canon(resolved, comp)
     joined = (
         resolved.withColumn("node", F.concat(F.lit("o:"), F.concat_ws(
             "#", "url", "sent_idx", "begin", "end")))
         .join(canon, "node")
+        .collect()
     )
-    rows = joined.where(F.col("word").contains("Quizzle")).collect()
+    _release_local_checkpoint(comp)
+    resolved.unpersist()
+    rows = [r for r in joined if "Quizzle" in r["word"]]
     assert len(rows) == 3
     canonical = {r["canonical_id"] for r in rows}
     assert len(canonical) == 1, rows
     # Paris/Berlin resolved normally
-    locs = {r["word"]: r["canonical_id"] for r in joined.collect()
+    locs = {r["word"]: r["canonical_id"] for r in joined
             if r["word"] in ("Paris", "Berlin")}
     assert locs["Paris"].startswith("LOC_") and locs["Berlin"].startswith("LOC_")
 
+    driver = sorted(map(tuple, run_pipeline(spark, pages_df, alias_df, cfg).collect()))
+    monkeypatch.setattr(pl, "surface_components", functools.partial(
+        pl.surface_components, collect_threshold=0))
+    triples = run_pipeline(spark, pages_df, alias_df, cfg).collect()
+    assert sorted(map(tuple, triples)) == driver
+    args = {(r[f"{side}_word"], r[f"{side}_id"])
+            for r in triples for side in ("subj", "obj")}
+    assert {eid for word, eid in args if "Quizzle" in word} == canonical
+    assert all(eid.startswith("LOC_") for word, eid in args
+               if word in ("Paris", "Berlin"))
+    assert {"Paris", "Berlin"} <= {word for word, _ in args}
+
 
 def test_distractors_produce_no_triples(spark, alias_df, cfg):
-    pages = [{
-        "url": "https://t/d", "warc_ts": None, "html": None,
-        "text": "t\nAmy Smith visited Paris yesterday. Amy Smith criticized Acme Corp yesterday.",
-        "lang": "en",
-    }]
-    pages_df = spark.createDataFrame(pages, schema=schemas.PAGES)
-    sent_ents = stage_ner(stage_sentences(pages_df.select("url", "lang", "text")), cfg)
-    scored = stage_score(stage_candidates(sent_ents, cfg), cfg)
-    assert scored.count() == 0
+    """Sentences with two entities but no relation the NLI head accepts:
+    candidates are generated and scored, and none survives."""
+    pages_df = _pages_df(spark, {
+        "https://t/d": ("t\nAmy Smith visited Paris yesterday. "
+                        "Amy Smith criticized Acme Corp yesterday."),
+    })
+    rows = stage_ner_score(stage_extract_sentences(pages_df), cfg).collect()
+    # both body sentences (not the title) reach candidate generation
+    assert sum(len(r["entities"]) >= 2 for r in rows) == 2, rows
+    assert all(len(r["cands"]) == 0 for r in rows)
 
 
 def test_non_english_pages_pruned(spark, tiny_pages_df, cfg):
-    ext = stage_extract(tiny_pages_df)  # default langs=("en",)
-    langs = {r["lang"] for r in ext.select("lang").distinct().collect()}
+    sents = stage_extract_sentences(tiny_pages_df)  # default langs=("en",)
+    langs = {r["lang"] for r in
+             sents.select("url").distinct().join(tiny_pages_df, "url")
+             .select("lang").distinct().collect()}
     assert langs == {"en"}
+    assert tiny_pages_df.where(F.col("lang") != "en").count() > 0
 
 
 def test_checkpoint_resume_identical(spark, tiny_pages_df, alias_df, cfg, tmp_path,
@@ -386,7 +409,7 @@ def test_checkpoint_resume_identical(spark, tiny_pages_df, alias_df, cfg, tmp_pa
 def test_length_bucketing_partitions_are_homogeneous(spark, tiny_pages_df, cfg):
     """Within a partition, token counts must be sorted (the anti-skew
     contract that keeps Arrow batches length-homogeneous)."""
-    sents = repartition_by_length(stage_sentences(stage_extract(tiny_pages_df)), cfg)
+    sents = repartition_by_length(stage_extract_sentences(tiny_pages_df), cfg)
 
     def check(it):
         import pandas as pd
@@ -403,19 +426,18 @@ def test_hot_domain_and_giant_doc_skew_balance(spark, cfg):
     """Anti-skew contract: with 90% of pages on one domain plus giant
     documents, the post-repartition sentence partitions stay balanced
     (max/mean row ratio bounded)."""
-    from kgforge.pipeline import repartition_by_length, stage_sentences
     from kgforge.synth import _filler_sentence
     import random
 
     rng = random.Random(0)
-    rows = []
+    texts = {}
     for i in range(300):
         domain = "hot.example.com" if i % 10 else f"cold{i}.example.com"
         n_sent = 120 if i % 37 == 0 else rng.randint(2, 6)  # giant-doc tail
-        text = "t\n" + "\n".join(_filler_sentence(rng) for _ in range(n_sent))
-        rows.append({"url": f"https://{domain}/p/{i}", "lang": "en", "text": text})
-    df = spark.createDataFrame(rows)
-    sents = repartition_by_length(stage_sentences(df), cfg)
+        texts[f"https://{domain}/p/{i}"] = "t\n" + "\n".join(
+            _filler_sentence(rng) for _ in range(n_sent))
+    sents = repartition_by_length(
+        stage_extract_sentences(_pages_df(spark, texts)), cfg)
     counts = [r["cnt"] for r in
               sents.groupBy(F.spark_partition_id().alias("pid"))
                    .agg(F.count(F.lit(1)).alias("cnt")).collect()]

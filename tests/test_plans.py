@@ -61,9 +61,9 @@ def test_link_stage_has_no_shuffle(spark, tiny_pages_df, alias_df):
     the NER output in the resolved plan (broadcast-dict map-side design)."""
     from kgforge.config import PipelineConfig
     from kgforge.pipeline import (stage_extract_sentences, stage_link,
-                                  stage_mentions, stage_ner)
+                                  stage_mentions, stage_ner_score)
     cfg = PipelineConfig()
-    sent_ents = stage_ner(stage_extract_sentences(tiny_pages_df), cfg)
+    sent_ents = stage_ner_score(stage_extract_sentences(tiny_pages_df), cfg)
     resolved = stage_link(stage_mentions(sent_ents), alias_df, cfg)
     plan = _plan(resolved)
     assert "Exchange" not in plan, plan
@@ -114,8 +114,11 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
 
 
 def test_pipeline_has_single_bigdata_exchange(spark, alias_df):
-    """The scored-candidates plan (pages -> sentences -> NER -> candidates ->
-    NLI) must contain exactly ONE Exchange: the length repartition.
+    """The production model chain (pages -> extract+sentences -> length
+    repartition -> fused NER/candidates/NLI) must contain exactly ONE
+    Exchange, the length repartition, and exactly TWO Python evals: the
+    fused stages, whose output columns (``bucket``, ``cands``) are what
+    per-layer attribution keys on.
 
     Uses its own input DataFrame: the session-scoped fixture's plan may be
     substituted by a cached (persisted) subtree from earlier e2e tests,
@@ -123,18 +126,23 @@ def test_pipeline_has_single_bigdata_exchange(spark, alias_df):
     from kgforge import schemas
     from kgforge.config import PipelineConfig
     from kgforge.pipeline import (repartition_by_length,
-                                  stage_candidates_score,
-                                  stage_extract_sentences, stage_ner)
+                                  stage_extract_sentences, stage_ner_score)
     from kgforge.synth import gen_pages
     pages, _ = gen_pages(500, 520)
     pages_df = spark.createDataFrame(pages, schema=schemas.PAGES)
     cfg = PipelineConfig()
-    scored = stage_candidates_score(
-        stage_ner(repartition_by_length(
-            stage_extract_sentences(pages_df), cfg), cfg), cfg)
+    scored = stage_ner_score(
+        repartition_by_length(stage_extract_sentences(pages_df), cfg), cfg)
     import re
     plan = _plan(scored)
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
+    # node details: "Arguments: gen(<inputs>)#n, [<outputs>], <flag>"
+    outputs = re.findall(
+        r"^\(\d+\) MapInPandas\n.*\nArguments: .*, \[([^\]]*)\], \w+$",
+        plan, re.M)
+    cols = [{c.split("#")[0] for c in out.split(", ")} for out in outputs]
+    assert [("bucket" in c, "cands" in c) for c in cols] == [
+        (True, False), (False, True)], plan
 
 
 def test_text_analysis_queries_have_no_shuffle(spark):
