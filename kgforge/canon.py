@@ -11,9 +11,11 @@ DataFrame transformations:
   small-star: for each node u, connect every neighbor v <= u (and u itself)
               to m = min(N_<=(u) ∪ {u})
 
-Node ids are strings ordered lexicographically; entity nodes are prefixed
-"e:" and mention/surface nodes "m:"/"s:", so "e:…" sorts first and a
-component containing a linked entity canonicalizes to that entity id.
+Node ids may be of any orderable type: the operators use only min / least /
+greatest / xxhash64 / equality, so a component's id is its minimum node in
+that type's order. The KG uses prefixed strings ("s:" surface nodes, ordered
+lexicographically); near-dup clustering uses bigint doc ids, whose minimum
+is the numerically smallest doc.
 
 Each iteration shuffles on the node id; lineage is cut with
 ``localCheckpoint`` every round (SURVEY §7 "CC at scale"); convergence is
@@ -75,10 +77,11 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     edges: DataFrame, max_iterations: int = 20, materialize: bool = False
 ) -> DataFrame:
-    """edges(src:string, dst:string) -> (node:string, component:string).
+    """edges(src, dst) -> (node, component), node ids of one orderable type
+    (e.g. prefixed strings, bigint).
 
-    component is the minimum node id of the node's component. Deterministic;
-    converges in O(log n) alternating rounds.
+    component is the minimum node id of the node's component in that type's
+    order. Deterministic; converges in O(log n) alternating rounds.
 
     Each round localCheckpoints its edge set (lineage would otherwise grow
     exponentially through the self-joins); RETIRED rounds' blocks are freed

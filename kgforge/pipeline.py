@@ -5,10 +5,11 @@ Physical design (SURVEY §4):
   a hash of (url, sent_idx) followed by sortWithinPartitions(n_tok), so no
   Arrow batch mixes wildly different sequence lengths and hot domains
   cannot concentrate in one task (anti-skew per BASELINE.json).
-- Each stage has one form: stages 1-4 are each ONE fused Arrow-batched
-  mapInPandas eval (stage_extract_sentences, stage_ner_score, stage_link,
-  stage_triples_inline), since every chained Python eval holds its own
-  worker. Models are per-worker singletons (kgforge.workers).
+- Each stage has one form: ONE fused Arrow-batched mapInPandas eval per
+  stage (stage_extract_sentences, stage_ner_score, stage_link,
+  stage_triples), since every chained Python eval holds its own worker;
+  stage 5's stage_triples serves both connected-components branches.
+  Models are per-worker singletons (kgforge.workers).
 - The alias dictionary ships to the mention stream as a broadcast variable.
 - Cheap filters run before expensive stages (sentences with <2 entities
   never reach the NLI scorer; non-target languages are pruned at the scan).
@@ -33,7 +34,7 @@ from .config import PipelineConfig
 from .extract import extract_text, extractor_hash
 from .ner import consolidate_entities, predict_tokens
 from .link import normalize_mention, rerank_ambiguous
-from .canon import connected_components
+from .canon import _release_local_checkpoint, connected_components
 from .checkpoint import checkpointed
 from .tokenization import _SUBWORD_CHUNK, _WORD_RE, split_sentences
 from .triples import generate_candidates, score_candidates
@@ -272,48 +273,19 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
 # stage 5 — canonicalization (connected components) + final triples
 # --------------------------------------------------------------------------
 
-def _occ_node(prefix: str = "o:") -> F.Column:
-    return F.concat(F.lit(prefix), F.concat_ws(
-        "#", F.col("url"), F.col("sent_idx"), F.col("begin"), F.col("end")))
-
-
-def stage_canon(resolved: DataFrame, comp: DataFrame) -> DataFrame:
-    """Same-as evidence -> connected components -> occurrence->canonical.
-
-    Dictionary/ANN-resolved occurrences already have a canonical id (the
-    entity), so they NEVER enter the graph — that keeps two entities sharing
-    an ambiguous alias from being merged, and shrinks the CC input from
-    O(mention occurrences) to O(distinct unresolved surfaces), which is the
-    property that keeps this stage viable at 10^12 documents (surface
-    vocabulary grows sub-linearly in corpus size).
-
-    Graph over surface nodes only:
-      s:norm       — s:norm          (self edge: every unresolved surface)
-      s:last_word  — s:full_norm     (within-page partial-name coreference)
-    Component canonical = min surface node id (deterministic). ``comp`` is
-    the (surf, component) frame of surface_components' distributed branch.
-    """
-    occ = resolved.withColumn("node", _occ_node())
-    resolved_map = (
-        occ.where(F.col("entity_id").isNotNull())
-        .select("node", F.col("entity_id").alias("canonical_id"))
-    )
-    unresolved = occ.where(F.col("entity_id").isNull())
-    unresolved_map = (
-        unresolved.select("node", F.concat(F.lit("s:"), F.col("norm")).alias("surf"))
-        .join(comp, "surf")
-        .select("node", F.col("component").alias("canonical_id"))
-    )
-    return resolved_map.unionByName(unresolved_map)
-
-
 def surface_components(
     resolved: DataFrame,
     mentions: DataFrame | None = None,
-    max_cc_iterations: int = 20,
     collect_threshold: int = 200_000,
 ) -> dict[str, str] | DataFrame:
     """Connected components over the UNRESOLVED-surface graph.
+
+    Dictionary/ANN-resolved occurrences already have a canonical id (the
+    entity), so they NEVER enter the graph: two entities sharing an
+    ambiguous alias are never merged, and the CC input is O(distinct
+    unresolved surfaces), not O(mention occurrences) — surface vocabulary
+    grows sub-linearly in corpus size. Component canonical = min surface
+    node id (deterministic).
 
     ``resolved`` carries every mention's (url, norm), so it is also the
     coref mention source; ``mentions`` may only be None or ``resolved``.
@@ -351,9 +323,8 @@ def surface_components(
     # edges cache AND the CC iteration state are released here — a lazy
     # plan would pin them in storage for the session lifetime.
     edges = _surface_edge_frame(rows).persist()
-    comp = connected_components(
-        edges, max_iterations=max_cc_iterations, materialize=True
-    ).withColumnRenamed("node", "surf")
+    comp = connected_components(edges, materialize=True).withColumnRenamed(
+        "node", "surf")
     edges.unpersist(blocking=True)
     return comp
 
@@ -420,24 +391,27 @@ def _surface_edge_frame(rows: DataFrame) -> DataFrame:
     return surface_nodes.unionByName(coref_edges)
 
 
-def stage_triples_inline(
+def stage_triples(
     scored: DataFrame,
     alias_dict: DataFrame | Broadcast,
-    surface_comp: dict[str, str],
+    comp: dict[str, str] | DataFrame,
     cfg: PipelineConfig,
 ) -> DataFrame:
-    """Canonical triples WITHOUT occurrence-level joins: candidate args are
-    resolved map-side against the broadcast alias dictionary (+ embedding
-    rerank on the sentence context: stage_link's ``_resolve_norms``) and
-    the tiny surface-component map from connected components. The only
-    shuffle left in stage 5 is the final (url, subj, pred, obj) dedup
-    aggregation — the two big scored ⋈ canon_map joins are gone. Resolution
-    is deterministic, so re-resolving here yields exactly stage_link's
-    answer per occurrence."""
+    """Canonical triples WITHOUT occurrence-level joins. Candidate args are
+    resolved map-side against the broadcast alias dictionary (stage_link's
+    ``_resolve_norms``; deterministic, so the same answer per occurrence).
+    An unresolved arg takes its surface's component from ``comp``, in
+    whichever form surface_components returned: a driver dict is broadcast
+    into the same eval; a distributed (surf, component) frame is
+    vocabulary-sized, so the eval keeps each unresolved arg's s:norm
+    surface and one left join per side swaps in the component (``surf``
+    holds only s: nodes, so entity ids never match). The only shuffle over
+    candidates is the final (url, subj, pred, obj) dedup aggregation."""
     dim, seed = cfg.embedding_dim, cfg.seed
     sc = scored.sparkSession.sparkContext
     bc_alias = _alias_broadcast(sc, alias_dict)
-    bc_cc = sc.broadcast(surface_comp)
+    on_driver = isinstance(comp, dict)
+    bc_cc = sc.broadcast(comp if on_driver else {})
 
     def gen(batches):
         emb = get_embedder(dim, seed)
@@ -460,39 +434,18 @@ def stage_triples_inline(
         schemas.TRIPLES["obj_word"], schemas.TRIPLES["score"],
         schemas.TRIPLES["subj_id"], schemas.TRIPLES["obj_id"],
     ])
+    args = scored.mapInPandas(gen, schema=out_schema)
+    if not on_driver:
+        for side in ("subj", "obj"):
+            args = (
+                args.join(comp.withColumnRenamed("surf", f"{side}_id"),
+                          f"{side}_id", "left")
+                .withColumn(f"{side}_id",
+                            F.coalesce("component", f"{side}_id"))
+                .drop("component")
+            )
     return (
-        scored.mapInPandas(gen, schema=out_schema)
-        .groupBy("url", "subj_id", "pred", "obj_id")
-        .agg(
-            F.min("sent_idx").alias("sent_idx"),
-            # min, not first: first() is nondeterministic across
-            # partitionings; materialized triples must be run-identical
-            F.min("subj_word").alias("subj_word"),
-            F.min("obj_word").alias("obj_word"),
-            F.max("score").alias("score"),
-        )
-        .select("url", "sent_idx", "subj_id", "pred", "obj_id",
-                "subj_word", "obj_word", "score")
-    )
-
-
-def stage_triples(scored: DataFrame, canon_map: DataFrame) -> DataFrame:
-    """Attach canonical ids to scored candidates; aggregate duplicates."""
-    subj_map = canon_map.select(F.col("node").alias("subj_node"),
-                                F.col("canonical_id").alias("subj_id"))
-    obj_map = canon_map.select(F.col("node").alias("obj_node"),
-                               F.col("canonical_id").alias("obj_id"))
-    with_nodes = (
-        scored
-        .withColumn("subj_node", F.concat(F.lit("o:"), F.concat_ws(
-            "#", "url", "sent_idx", "subj_begin", "subj_end")))
-        .withColumn("obj_node", F.concat(F.lit("o:"), F.concat_ws(
-            "#", "url", "sent_idx", "obj_begin", "obj_end")))
-    )
-    return (
-        with_nodes
-        .join(subj_map, "subj_node")
-        .join(obj_map, "obj_node")
+        args
         .groupBy("url", "subj_id", "pred", "obj_id")
         .agg(
             F.min("sent_idx").alias("sent_idx"),
@@ -555,22 +508,8 @@ def run_pipeline(
         persisted.append(resolved)
     # resolved carries (url, norm) so it doubles as the coref mention source
     comp = surface_components(resolved, resolved)
-    if isinstance(comp, dict):
-        # common case: surface graph fit the driver -> broadcast it and
-        # resolve candidate args map-side (no occurrence-level joins)
-        triples = checkpointed(
-            lambda: stage_triples_inline(scored, aliases(), comp, cfg),
-            spark, workdir, "s5_triples", ch, mh)
-    else:
-        # at-scale fallback: distributed CC + occurrence-keyed equi-joins;
-        # reuse the already-materialized component mapping (recomputing CC
-        # here would double the most expensive stage-5 work)
-        canon_map = stage_canon(resolved, comp)
-        if workdir is None:
-            canon_map = canon_map.persist()
-            persisted.append(canon_map)
-        triples = checkpointed(lambda: stage_triples(scored, canon_map),
-                               spark, workdir, "s5_triples", ch, mh)
+    triples = checkpointed(lambda: stage_triples(scored, aliases(), comp, cfg),
+                           spark, workdir, "s5_triples", ch, mh)
     if persisted:
         # cache discipline for long-lived sessions: materialize the (small)
         # triples result once, then release every intermediate cache. With a
@@ -582,7 +521,6 @@ def run_pipeline(
         # the component mapping was a materialized localCheckpoint; triples
         # are now materialized (parquet checkpoint or localCheckpoint above),
         # so its blocks can be released
-        from .canon import _release_local_checkpoint
         _release_local_checkpoint(comp)
     return triples
 

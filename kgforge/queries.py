@@ -555,23 +555,15 @@ def q_neardup_clusters(spark, sf_dir):
                 .withColumn("is_keeper",
                             F.col("doc_id") == F.col("cluster_id")))
 
-    def pad(c):
-        # 20 digits: lex order == numeric for every NON-NEGATIVE int64
-        # (lpad TRUNCATES longer strings — 12 would corrupt node identity
-        # above 10^12 ids). Non-negativity is the documents contract
-        # (doc_id is a row index); hash-derived ids (which can be
-        # negative, where '-' breaks lexicographic order) would need an
-        # order-preserving encoding such as offsetting by 2^63 first.
-        return F.lpad(F.col(c).cast("string"), 20, "0")
-
-    edges = pairs.select(pad("doc_a").alias("src"), pad("doc_b").alias("dst"))
+    # CC orders node ids in their own type: on the bigint doc ids the
+    # component minimum is the numerically smallest doc_id
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # materialize=True: CC localCheckpoints each round (eager jobs run at
     # frame-construction time, inherent to the iterative design); with it
     # the retired iteration state is freed and only the bounded final
     # mapping (one row per paired doc) stays pinned for the session
     mapped = connected_components(edges, materialize=True).select(
-        F.col("node").cast("bigint").alias("doc_id"),
-        F.col("component").cast("bigint").alias("cluster_id"))
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
     pairs.unpersist(blocking=True)
     return (
         docs
@@ -867,7 +859,12 @@ def q_mixture_sample(spark, sf_dir):
     per-source counts off a scan that reads ONLY the source column
     (plan-pinned; on a real lakehouse this pass is free from table
     statistics), pass 2 is the scan + broadcast-joined quota filter.
-    The driver never sees corpus rows; quotas are a #sources-row frame."""
+    The driver never sees corpus rows; quotas are a #sources-row frame.
+
+    Only sources both registered in MIXTURE_PARTS and present in the corpus
+    enter T (an inner join of counts and weights, on both engines): a
+    registered source with zero documents is left out of the mix rather
+    than forcing T to 0, and an unregistered source gets no quota."""
     P = sum(MIXTURE_PARTS.values())
     weights = spark.range(1).select(F.explode(F.array(*[
         F.struct(F.lit(s).alias("source"), F.lit(w).alias("w"))
@@ -894,6 +891,8 @@ def q_mixture_sample(spark, sf_dir):
 
 
 def _sql_mixture_sample():
+    # the counts JOIN weights inner join drops a registered source with zero
+    # documents from T, exactly as q_mixture_sample's Spark join does
     P = sum(MIXTURE_PARTS.values())
     rows = ", ".join(f"('{s}', {w})" for s, w in sorted(MIXTURE_PARTS.items()))
     return f"""

@@ -23,6 +23,11 @@ def test_cc_two_components_and_self_loop(spark):
     _check(spark, [("a", "b"), ("x", "y"), ("p", "p"), ("m", "n"), ("n", "o")])
 
 
+def test_cc_bigint_ids_use_numeric_order(spark):
+    # lexicographic minimum of {9, 10, 100} is 10; the numeric one is 9
+    _check(spark, [(9, 10), (10, 100), (2, 30)])
+
+
 def test_cc_star_and_cycle(spark):
     _check(spark, [("h", "a"), ("h", "b"), ("h", "c"),
                    ("c1", "c2"), ("c2", "c3"), ("c3", "c1")])

@@ -132,7 +132,7 @@ def test_surface_graph_driver_edges_match_jvm_edges(spark):
 
 def test_in_memory_run_collects_alias_map_once(spark, tiny_pages_df, alias_df,
                                                cfg, alias_collects):
-    """stage_link and stage_triples_inline share one alias broadcast."""
+    """stage_link and stage_triples share one alias broadcast."""
     assert run_pipeline(spark, tiny_pages_df, alias_df, cfg).count() > 0
     assert len(alias_collects) == 1
 
@@ -189,17 +189,26 @@ def test_empty_and_degenerate_pages(spark, alias_df, cfg):
     assert run_pipeline(spark, degen, alias_df, cfg).count() == 0
 
 
-def test_no_lingering_intermediate_caches(spark, tiny_pages_df, alias_df, cfg):
+def test_no_lingering_intermediate_caches(spark, tiny_pages_df, alias_df, cfg,
+                                          monkeypatch):
     """run_pipeline must release every intermediate cache (ner_scored,
-    resolved, surface edges) — long-lived sessions must not accumulate
-    cached stages. Only the returned result's own localCheckpoint survives."""
+    resolved, surface edges, the CC mapping) on both CC branches —
+    long-lived sessions must not accumulate cached stages. Only the
+    returned result's own localCheckpoint survives."""
+    import kgforge.pipeline as pl
+
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    before = n_cached()
-    t = run_pipeline(spark, tiny_pages_df, alias_df, cfg)
-    assert t.count() > 0
-    assert n_cached() - before <= 1  # just the eager result checkpoint
+    for forced_distributed in (False, True):
+        if forced_distributed:
+            monkeypatch.setattr(pl, "surface_components", functools.partial(
+                pl.surface_components, collect_threshold=0))
+        before = n_cached()
+        t = run_pipeline(spark, tiny_pages_df, alias_df, cfg)
+        assert t.count() > 0
+        # just the eager result checkpoint
+        assert n_cached() - before <= 1, forced_distributed
 
 
 def test_pr_gate(triples, gold_triples_df):
@@ -326,9 +335,9 @@ def test_ambiguous_alias_resolved_by_context(spark, alias_df, cfg):
 def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     """'Orla Quizzle' (not in the alias dict) and two bare 'Quizzle'
     mentions, one of them on another page, must all share one canonical id
-    via connected components: in stage_canon's occurrence map, and in the
-    triples of both stage-5 branches of run_pipeline (driver union-find +
-    map-side resolution; distributed CC + occurrence-keyed joins)."""
+    via connected components: in both forms of surface_components' answer
+    (distributed frame == driver dict), and in the triples of both stage-5
+    branches of run_pipeline (broadcast dict; joins of the frame)."""
     import kgforge.pipeline as pl
     from kgforge.canon import _release_local_checkpoint
 
@@ -338,22 +347,18 @@ def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     })
     resolved = stage_link(stage_mentions(stage_ner_score(
         stage_extract_sentences(pages_df), cfg)), alias_df, cfg).persist()
+    mentions = resolved.collect()
     comp = pl.surface_components(resolved, collect_threshold=0)
-    canon = pl.stage_canon(resolved, comp)
-    joined = (
-        resolved.withColumn("node", F.concat(F.lit("o:"), F.concat_ws(
-            "#", "url", "sent_idx", "begin", "end")))
-        .join(canon, "node")
-        .collect()
-    )
+    mapping = {r["surf"]: r["component"] for r in comp.collect()}
     _release_local_checkpoint(comp)
+    assert mapping == pl.surface_components(resolved)
     resolved.unpersist()
-    rows = [r for r in joined if "Quizzle" in r["word"]]
-    assert len(rows) == 3
-    canonical = {r["canonical_id"] for r in rows}
-    assert len(canonical) == 1, rows
+    quizzle = [r for r in mentions if "Quizzle" in r["word"]]
+    assert len(quizzle) == 3 and all(r["entity_id"] is None for r in quizzle)
+    canonical = {mapping["s:" + r["norm"]] for r in quizzle}
+    assert len(canonical) == 1, mapping
     # Paris/Berlin resolved normally
-    locs = {r["word"]: r["canonical_id"] for r in joined
+    locs = {r["word"]: r["entity_id"] for r in mentions
             if r["word"] in ("Paris", "Berlin")}
     assert locs["Paris"].startswith("LOC_") and locs["Berlin"].startswith("LOC_")
 

@@ -296,6 +296,28 @@ def test_neardup_distributed_branch_matches_driver_branch(spark, monkeypatch):
     assert got == want and len(got) > 0
 
 
+def test_mixture_sample_absent_and_unregistered_sources(spark, tmp_path):
+    """A registered source with zero documents (src9) is left out of T on
+    both engines, and a source missing from MIXTURE_PARTS gets no quota:
+    Spark must equal DuckDB and keep no row of the unregistered source."""
+    import pandas as pd
+
+    from kgforge.queries import _sql_mixture_sample, q_mixture_sample
+
+    sources = [f"src{i}" for i in range(9)] + ["unregistered"]
+    pd.DataFrame([
+        {"doc_id": i, "text": f"doc {i}", "lang": "en",
+         "source": sources[i % len(sources)], "n_chars": 5}
+        for i in range(400)]).to_parquet(f"{tmp_path}/documents.parquet")
+    got = q_mixture_sample(spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+    _compare("mixture_sample", got, con, _sql_mixture_sample())
+    kept = {r["source"] for r in got.collect()}
+    assert kept and kept <= set(sources[:9]), kept
+
+
 def test_pack_manifest_empty_doc_edge_and_continuity(spark, tmp_path, ddb):
     """Zero-token documents must occupy zero tokens of the packed stream
     (offset continuity: next offset == offset + n_tokens) while still
