@@ -21,7 +21,14 @@ Each iteration shuffles on the node id; lineage is cut with
 ``localCheckpoint`` every round (SURVEY §7 "CC at scale"); convergence is
 detected by an edge-set checksum (count + xor-ish hash agg) going stable.
 
-``cc_unionfind`` is the pure-Python oracle used by the pytest suite.
+``components`` is the one scale-adaptive policy every caller uses (stage
+5's surface graph, near-dup clustering): one ``limit(T+1)`` Arrow download
+decides the branch. At most ``COLLECT_THRESHOLD`` edges are solved on the
+driver by ``cc_unionfind`` (also the pytest oracle) and come back as a
+dict; more run the distributed operator and come back as a frame.
+``COLLECT_THRESHOLD`` (2M) is sized by driver memory: at 2M edges the
+driver branch grows the driver's Python RSS by about 0.5-0.9 GB
+(measurements beside the constant).
 """
 
 from __future__ import annotations
@@ -29,6 +36,15 @@ from __future__ import annotations
 import warnings
 
 from pyspark.sql import DataFrame, functions as F
+
+# Driver union-find ceiling, sized by driver memory. Measured growth of the
+# driver's Python RSS: union-find over random int pairs, 55-79 MB at 200k
+# pairs and 499-624 MB at 2M; the surface graph's edge builder
+# (pipeline._surface_edges) plus union-find over synthetic graph rows,
+# 50-99 MB at 200k rows and 471-920 MB at 2M (ranges: id and row shapes).
+# Past it, each distributed star round costs seconds of fixed Spark
+# overhead where union-find over sf1.0's 286k near-dup pairs takes ~0.2 s.
+COLLECT_THRESHOLD = 2_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -153,6 +169,29 @@ def connected_components(
         out = out.localCheckpoint(eager=True)
         _release_local_checkpoint(cur)
     return out
+
+
+def components(
+    edges: DataFrame, collect_threshold: int = COLLECT_THRESHOLD
+) -> dict | DataFrame:
+    """edges(src, dst) -> node -> component, as ``cc_unionfind``'s dict when
+    at most ``collect_threshold`` edges exist (one Arrow download; node ids
+    keep their Python type), else as ``connected_components``' materialized
+    (node, component) frame. Both are looked up in this module per call, so
+    wrappers patched onto it see either branch."""
+    table = edges.limit(collect_threshold + 1).toArrow()
+    if table.num_rows <= collect_threshold:
+        return cc_unionfind(list(zip(table.column("src").to_pylist(),
+                                     table.column("dst").to_pylist())))
+    # connected_components reads its input twice; persist (not
+    # localCheckpoint, which unpersist cannot release). The materialized
+    # mapping frees the edges and the CC iteration state here — a lazy plan
+    # would pin them in storage for the session lifetime.
+    edges = edges.persist()
+    try:
+        return connected_components(edges, materialize=True)
+    finally:
+        edges.unpersist(blocking=True)
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:

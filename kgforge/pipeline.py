@@ -34,7 +34,8 @@ from .config import PipelineConfig
 from .extract import extract_text, extractor_hash
 from .ner import consolidate_entities, predict_tokens
 from .link import normalize_mention, rerank_ambiguous
-from .canon import _release_local_checkpoint, connected_components
+from . import canon
+from .canon import _release_local_checkpoint
 from .checkpoint import checkpointed
 from .tokenization import _SUBWORD_CHUNK, _WORD_RE, split_sentences
 from .triples import generate_candidates, score_candidates
@@ -276,7 +277,7 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
 def surface_components(
     resolved: DataFrame,
     mentions: DataFrame | None = None,
-    collect_threshold: int = 200_000,
+    collect_threshold: int = canon.COLLECT_THRESHOLD,
 ) -> dict[str, str] | DataFrame:
     """Connected components over the UNRESOLVED-surface graph.
 
@@ -290,43 +291,25 @@ def surface_components(
     ``resolved`` carries every mention's (url, norm), so it is also the
     coref mention source; ``mentions`` may only be None or ``resolved``.
 
-    Scale-adaptive physical strategy (AQE-style): the surface graph is tiny
-    relative to the corpus (vocabulary, not occurrences), so under
-    ``collect_threshold`` edges it is solved driver-side with union-find and
-    returned as a dict (broadcastable); past the threshold the distributed
-    large-star/small-star operator runs and a (surf, component) DataFrame is
-    returned. The edge count is found in as few Spark actions as the input
-    allows:
-      1. download at most ``collect_threshold`` graph rows (``_graph_rows``)
-         and build the edges from them in Python — ONE action, the common
-         case (the JVM edge frame's shuffles are a Spark job each);
-      2. graph rows grow with pages, edges with vocabulary: if the rows
-         overflow, download at most ``collect_threshold`` edges of the JVM
-         edge frame instead."""
+    The branch follows the one CC policy, ``canon.components``: the answer
+    is a driver dict or a (surf, component) frame. The common case is ONE
+    Arrow download of at most ``collect_threshold`` graph rows
+    (``_graph_rows``) with the edges built in Python — the JVM edge
+    frame's shuffles are a Spark job each. Every coref edge comes from a
+    distinct multi-word row and every self edge from a distinct unresolved
+    row, so the edges number at most twice the rows and the row gate
+    bounds driver memory. Rows grow with pages, edges with vocabulary: if
+    the rows overflow, ``canon.components`` decides on the JVM edge
+    frame."""
     if mentions is not None and mentions is not resolved:
         raise ValueError("surface_components: mentions must be None or "
                          "the resolved frame itself")
     rows = _graph_rows(resolved)
     table = rows.limit(collect_threshold + 1).toArrow()
     if table.num_rows <= collect_threshold:
-        pairs = _surface_edges(table)
-    else:
-        table = _surface_edge_frame(rows).limit(collect_threshold + 1).toArrow()
-        pairs = list(zip(table.column("src").to_pylist(),
-                         table.column("dst").to_pylist()))
-    if len(pairs) <= collect_threshold:
-        from . import canon   # per-call lookup: wrappers of cc_unionfind apply
-        return canon.cc_unionfind(pairs)
-    # distributed branch. connected_components reads its input twice;
-    # persist (not localCheckpoint): DataFrame.unpersist() cannot release
-    # localCheckpoint blocks. Materialize the (much smaller) mapping so the
-    # edges cache AND the CC iteration state are released here — a lazy
-    # plan would pin them in storage for the session lifetime.
-    edges = _surface_edge_frame(rows).persist()
-    comp = connected_components(edges, materialize=True).withColumnRenamed(
-        "node", "surf")
-    edges.unpersist(blocking=True)
-    return comp
+        return canon.cc_unionfind(_surface_edges(table))
+    comp = canon.components(_surface_edge_frame(rows), collect_threshold)
+    return comp if isinstance(comp, dict) else comp.withColumnRenamed("node", "surf")
 
 
 def _graph_rows(resolved: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import schemas
+from . import canon, schemas
 from .config import PipelineConfig
 
 # small fixed stopword list (shared literal between engines)
@@ -483,19 +483,6 @@ WHERE a.doc_id < b.doc_id AND a.lang = b.lang
 """
 
 
-# driver-side union-find ceiling for near-dup clustering (see
-# q_neardup_clusters; tests monkeypatch this to force the distributed
-# branch). Sized by driver MEMORY, not caution: 2M pairs is ~32 MB of
-# int64 tuples + a component dict bounded by node count — far below the
-# 24g driver heap — while the distributed large-star/small-star rounds
-# cost seconds of fixed overhead per iteration (measured r6: 286k pairs
-# took the distributed branch under the old 200k ceiling and spent ~6s
-# where driver union-find takes 0.23s + one Arrow transfer). At real
-# corpus scale the pair graph blows past any driver ceiling and the
-# distributed branch still runs.
-NEARDUP_COLLECT_THRESHOLD = 2_000_000
-
-
 def q_neardup_clusters(spark, sf_dir):
     """Near-dup CLUSTERING + canonical-keeper selection: connected
     components over the banded-Jaccard pair graph (the same distributed
@@ -507,34 +494,20 @@ def q_neardup_clusters(spark, sf_dir):
     band-blocked (never all-pairs), CC is O(log n) shuffle rounds, and the
     final join is doc_id-keyed.
 
-    Scale-adaptive physical strategy (the same AQE-style switch the KG
-    pipeline's surface_components uses): the pair graph is threshold-gated
-    (jaccard >= 0.2) and orders of magnitude smaller than the corpus, so
-    under ``collect_threshold`` pairs it is solved driver-side with
-    union-find and mapped back via a broadcast dict + ONE Arrow projection
-    over doc_id — ZERO shuffle of the corpus (stage_link's broadcast-dict
-    map-side pattern). Past the threshold the distributed
-    large-star/small-star operator runs (the 100 TB path). Both branches
-    produce identical values (the driver union-find and the distributed CC
-    are each value-gated against the recursive-CTE oracle)."""
-    from .canon import cc_unionfind, connected_components
-
-    collect_threshold = NEARDUP_COLLECT_THRESHOLD
-    pairs = q_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # persist, not localCheckpoint: the frame must be releasable once the
-    # graph moves driver-side (CLAUDE.md block-release constraint)
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
+    The branch follows the one CC policy, ``canon.components`` (one Arrow
+    download of the pairs decides it), run on the bigint doc ids, whose
+    component minimum is the numerically smallest doc_id. A driver dict
+    maps back via a broadcast + ONE Arrow projection over doc_id — ZERO
+    shuffle of the corpus (stage_link's broadcast-dict map-side pattern);
+    a distributed (node, component) frame is left-joined on doc_id. Both
+    branches produce identical values (each is value-gated against the
+    recursive-CTE oracle)."""
+    edges = q_ngram_jaccard_pairs(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    # the constant is read per call, so patching it switches the branch
+    comp = canon.components(edges, canon.COLLECT_THRESHOLD)
     docs = _docs(spark, sf_dir).select("doc_id")
-    if n_pairs <= collect_threshold:
-        # Arrow transfer (toPandas), NOT row-wise collect(): the py4j row
-        # path measured ~8s for 286k pairs at sf1.0 where the columnar
-        # path is sub-second (guide §6 "Arrow for driver transfers");
-        # .tolist() yields exact Python ints from the int64 columns
-        ppdf = pairs.toPandas()
-        comp = cc_unionfind(list(zip(ppdf["doc_a"].tolist(),
-                                     ppdf["doc_b"].tolist())))
-        pairs.unpersist(blocking=True)
+    if isinstance(comp, dict):
         bcomp = spark.sparkContext.broadcast(comp)
 
         @F.pandas_udf("bigint")
@@ -555,16 +528,8 @@ def q_neardup_clusters(spark, sf_dir):
                 .withColumn("is_keeper",
                             F.col("doc_id") == F.col("cluster_id")))
 
-    # CC orders node ids in their own type: on the bigint doc ids the
-    # component minimum is the numerically smallest doc_id
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # materialize=True: CC localCheckpoints each round (eager jobs run at
-    # frame-construction time, inherent to the iterative design); with it
-    # the retired iteration state is freed and only the bounded final
-    # mapping (one row per paired doc) stays pinned for the session
-    mapped = connected_components(edges, materialize=True).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
-    pairs.unpersist(blocking=True)
+    mapped = comp.select(F.col("node").alias("doc_id"),
+                         F.col("component").alias("cluster_id"))
     return (
         docs
         .join(mapped, "doc_id", "left")

@@ -317,7 +317,10 @@ def _asof_enrich_buffered(events: DataFrame, horizon_sec: float,
         if absorbed:
             last_view = max(last_view, max(absorbed))
         view_ts = [v for v in view_ts if v > wm]
-        state.update((last_view, view_ts, keep_ids, keep_ts))
+        if last_view == NO_VIEW and not view_ts and not keep_ids:
+            state.remove()                # identical to holding no state
+        else:
+            state.update((last_view, view_ts, keep_ids, keep_ts))
         if keep_ts:
             # flush wake-up: timeout fires when the watermark passes the
             # earliest held purchase (must be set anew every invocation)

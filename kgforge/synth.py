@@ -333,15 +333,3 @@ def gen_pages(start: int, end: int) -> tuple[list[dict], list[dict]]:
         golds.extend(gd)
     return pages, golds
 
-
-def write_local(outdir: str, n_pages: int) -> None:
-    """Write pages/gold_triples/alias_dict parquet for local tests."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import os
-
-    os.makedirs(outdir, exist_ok=True)
-    pages, golds = gen_pages(0, n_pages)
-    pq.write_table(pa.Table.from_pylist(pages), f"{outdir}/pages.parquet")
-    pq.write_table(pa.Table.from_pylist(golds), f"{outdir}/gold_triples.parquet")
-    pq.write_table(pa.Table.from_pylist(alias_rows()), f"{outdir}/alias_dict.parquet")

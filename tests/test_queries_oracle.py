@@ -290,10 +290,23 @@ def test_neardup_distributed_branch_matches_driver_branch(spark, monkeypatch):
 
     want = sorted((r["doc_id"], r["cluster_id"], r["is_keeper"])
                   for r in q.q_neardup_clusters(spark, SF_DIR).collect())
-    monkeypatch.setattr(q, "NEARDUP_COLLECT_THRESHOLD", 0)
+    monkeypatch.setattr(q.canon, "COLLECT_THRESHOLD", 0)
     got = sorted((r["doc_id"], r["cluster_id"], r["is_keeper"])
                  for r in q.q_neardup_clusters(spark, SF_DIR).collect())
     assert got == want and len(got) > 0
+
+
+def test_neardup_driver_branch_is_one_sql_execution(spark):
+    """Building q_neardup_clusters on the driver branch runs one SQL
+    execution: the Arrow download of the pairs that picks the CC branch
+    and feeds union-find (no persist + count() beside it)."""
+    from kgforge import queries as q
+    from test_pipeline_e2e import _last_execution_id
+
+    first = _last_execution_id(spark)
+    out = q.q_neardup_clusters(spark, SF_DIR)
+    assert _last_execution_id(spark) - first == 1
+    assert out.where("NOT is_keeper").count() > 0      # pairs were clustered
 
 
 def test_mixture_sample_absent_and_unregistered_sources(spark, tmp_path):

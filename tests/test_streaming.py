@@ -457,6 +457,59 @@ def test_stream_asof_enrich_bounded_lateness_attributes_late_view(
             assert got == {2: (HOUR, _tsec(ts(0)))}, got
 
 
+def test_stream_asof_enrich_lateness_drains_purchase_only_state(
+        spark, tmp_path):
+    """Lateness mode: a user who only purchases holds state only while a
+    purchase waits for the watermark. Once it passes (flush via the
+    event-time timeout), the state row goes, so numRowsTotal falls to the
+    one user whose purchase the watermark has not yet passed; the emitted
+    rows stay the same (viewless purchases drop, inner as-of)."""
+    import datetime
+
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType, TimestampType)
+
+    from kgforge.streaming import stream_asof_enrich
+
+    ev_schema = StructType([
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ])
+    indir, outdir = str(tmp_path / "in"), str(tmp_path / "out")
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def run_batch(rows):
+        spark.createDataFrame(
+            [(eid, t0 + datetime.timedelta(minutes=m), u, "purchase", 1.0,
+              "{}") for eid, m, u in rows],
+            schema=ev_schema).coalesce(1).write.mode("append").parquet(indir)
+        q = (stream_asof_enrich(
+                spark.readStream.schema(ev_schema).format("parquet")
+                .load(indir), lateness_horizon_sec=3600.0)
+             .writeStream.format("parquet")
+             .option("path", outdir)
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .outputMode("append")
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination(120)
+        return [op["numRowsTotal"] for p in q.recentProgress
+                for op in (p["stateOperators"] or [])][-1]
+
+    # five purchase-only users over two batches, all held (within horizon)
+    assert run_batch([(1, 0, 1), (2, 5, 2), (3, 10, 3)]) == 3
+    assert run_batch([(4, 20, 4), (5, 30, 1), (6, 40, 5)]) == 5
+    # user 9's purchase at +10h moves the watermark past all of them; a
+    # last batch lets the timeouts fire, and only user 9 still holds state
+    run_batch([(90, 600, 9)])
+    assert run_batch([(91, 600, 9)]) == 1
+    assert spark.read.parquet(outdir).count() == 0
+
+
 def _tsec(dt):
     import calendar
     return float(calendar.timegm(dt.timetuple()))
