@@ -5,12 +5,15 @@ Physical design (SURVEY §4):
   a hash of (url, sent_idx) followed by sortWithinPartitions(n_tok), so no
   Arrow batch mixes wildly different sequence lengths and hot domains
   cannot concentrate in one task (anti-skew per BASELINE.json).
-- Each stage has one form: ONE fused Arrow-batched mapInPandas eval per
-  stage (stage_extract_sentences, stage_ner_score, stage_link,
-  stage_triples), since every chained Python eval holds its own worker;
-  stage 5's stage_triples serves both connected-components branches.
-  Models are per-worker singletons (kgforge.workers).
-- The alias dictionary ships to the mention stream as a broadcast variable.
+- Two Python evals per run, since every chained Python eval holds its own
+  worker and every Spark stage holding one pays a fixed boundary cost:
+  stage_extract_sentences (stages 1 + 2a) and stage_ner_score (stages 2b
+  to 4: NER, candidates, NLI scoring and entity resolution). Linking's
+  output is a JVM explode of the fused eval (stage_mentions), and stage 5
+  (stage_triples) is a JVM join plus the dedup aggregation on both
+  connected-components branches. Models are per-worker singletons
+  (kgforge.workers).
+- The alias dictionary ships to the fused eval as a broadcast variable.
 - Cheap filters run before expensive stages (sentences with <2 entities
   never reach the NLI scorer; non-target languages are pruned at the scan).
 - Stage boundaries can checkpoint to parquet with lineage manifests
@@ -19,15 +22,15 @@ Physical design (SURVEY §4):
 
 from __future__ import annotations
 
-import functools
+import hashlib
 import math
 from dataclasses import asdict
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from . import schemas
 from .config import PipelineConfig
@@ -40,6 +43,12 @@ from .checkpoint import checkpointed
 from .tokenization import _SUBWORD_CHUNK, _WORD_RE, split_sentences
 from .triples import generate_candidates, score_candidates
 from .workers import get_embedder, get_nli, get_token_classifier
+
+# Part of every checkpoint's identity: a workdir written with other stage
+# output schemas is recomputed, not resumed into a plan that cannot read it.
+STAGE_FORMAT = hashlib.sha256("".join(
+    s.json() for s in (schemas.SENTENCES, schemas.NER_SCORED,
+                       schemas.RESOLVED, schemas.TRIPLES)).encode()).hexdigest()[:12]
 
 
 # --------------------------------------------------------------------------
@@ -107,29 +116,34 @@ def repartition_by_length(sentences: DataFrame, cfg: PipelineConfig) -> DataFram
 
 
 # --------------------------------------------------------------------------
-# stages 2b + 3 — NER, candidate generation, zero-shot scoring
+# stages 2b + 3 + 4 — NER, candidates, zero-shot scoring, entity resolution
 # --------------------------------------------------------------------------
 
-def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
+                    alias_dict: DataFrame | Broadcast | None = None) -> DataFrame:
     """Fused model stage: NER + consolidation + BIOES + candidate generation
-    + NLI scoring in ONE Python eval. The sentence stream crosses the
-    JVM<->Python boundary once for all model work; downstream branches are
-    pure-JVM explodes of the two array columns."""
-    seed = cfg.seed
+    + NLI scoring + entity resolution in ONE Python eval. The sentence
+    stream crosses the JVM<->Python boundary once for all per-sentence
+    work; downstream stages are pure-JVM explodes, joins and aggregations.
+
+    Every entity gets its ``norm`` and, against ``alias_dict`` (the
+    dimension table or its ``_alias_broadcast``), its ``entity_id``: all
+    entities of an Arrow batch resolve in one ``_resolve_norms`` call, each
+    with its own sentence as rerank context. With no ``alias_dict`` every
+    ``entity_id`` is null. Every kept candidate copies the ids of its two
+    argument entities, matched by (begin, end); an unresolved argument gets
+    its surface node ``"s:" + norm``. Output: ``schemas.NER_SCORED``."""
+    seed, dim = cfg.seed, cfg.embedding_dim
     cfg_kwargs = asdict(cfg)
-    scored_cand = StructType(
-        list(schemas.CANDIDATE.fields) + [StructField("score", DoubleType(), False)]
-    )
-    out_schema = StructType(
-        schemas.SENTENCES.fields[:4]
-        + [StructField("entities", ArrayType(schemas.ENTITY), False),
-           StructField("cands", ArrayType(scored_cand), False)]
-    )
+    bc = (None if alias_dict is None else
+          _alias_broadcast(sentences.sparkSession.sparkContext, alias_dict))
 
     def gen(batches):
         local_cfg = PipelineConfig(**cfg_kwargs)
         enc = get_token_classifier(seed, local_cfg.tokenizer)
         nli = get_nli(seed)
+        emb = get_embedder(dim, seed)
+        amap = bc.value if bc is not None else {}
         for pdf in batches:
             texts = pdf["sentence"].tolist()
             token_lists = predict_tokens(texts, enc, local_cfg)
@@ -137,11 +151,14 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
             row_cands: list[list[dict]] = []
             flat_prem: list[str] = []
             flat_hyp: list[str] = []
+            ent_ctx: list[str] = []
             for text, toks in zip(texts, token_lists):
-                ents = consolidate_entities(toks)
                 eds = [{"word": e.word, "label": e.label, "score": e.score,
-                        "begin": e.begin, "end": e.end} for e in ents]
+                        "begin": e.begin, "end": e.end,
+                        "norm": normalize_mention(e.word)}
+                       for e in consolidate_entities(toks)]
                 all_entities.append(eds)
+                ent_ctx += [text] * len(eds)
                 if len(eds) >= 2:
                     cands = [asdict(c) for c in
                              generate_candidates(eds, local_cfg.max_pair_distance)]
@@ -151,20 +168,27 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 for c in cands:
                     flat_prem.append(text)
                     flat_hyp.append(c["hypothesis"])
+            flat_ents = [e for eds in all_entities for e in eds]
+            ids = _resolve_norms([e["norm"] for e in flat_ents], ent_ctx, amap, emb)
+            for e, eid in zip(flat_ents, ids):
+                e["entity_id"] = eid
             if flat_prem:
                 scores = score_candidates(flat_prem, flat_hyp, nli,
                                           local_cfg.batch_size,
                                           local_cfg.nli_max_length)
             pos = 0
             out_cands = []
-            for cands in row_cands:
+            for eds, cands in zip(all_entities, row_cands):
+                arg_id = {(e["begin"], e["end"]): e["entity_id"] or "s:" + e["norm"]
+                          for e in eds}
                 kept = []
                 for c in cands:
                     sc = float(scores[pos]); pos += 1
                     if sc >= local_cfg.relation_threshold:
-                        c = dict(c)
-                        c["score"] = sc
-                        kept.append(c)
+                        kept.append({
+                            **c, "score": sc,
+                            "subj_id": arg_id[c["subj_begin"], c["subj_end"]],
+                            "obj_id": arg_id[c["obj_begin"], c["obj_end"]]})
                 out_cands.append(kept)
             yield pd.DataFrame({
                 "url": pdf["url"], "sent_idx": pdf["sent_idx"],
@@ -172,24 +196,18 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 "entities": all_entities, "cands": out_cands,
             })
 
-    return sentences.mapInPandas(gen, schema=out_schema)
+    return sentences.mapInPandas(gen, schema=schemas.NER_SCORED)
 
 
-# --------------------------------------------------------------------------
-# stage 4 — entity linking
-# --------------------------------------------------------------------------
-
-def stage_mentions(sentence_entities: DataFrame) -> DataFrame:
-    """Pure-JVM explode (no Python eval); normalization happens inside the
-    linking stage's single Python eval."""
+def stage_mentions(ner_scored: DataFrame) -> DataFrame:
+    """Pure-JVM explode (no Python eval) of the fused eval's entities into
+    RESOLVED rows: normalization and resolution happened in
+    ``stage_ner_score``."""
     return (
-        sentence_entities
+        ner_scored
         .select("url", "sent_idx", "sentence", F.explode("entities").alias("e"))
-        .select(
-            "url", "sent_idx", "sentence",
-            F.col("e.word").alias("word"), F.col("e.label").alias("label"),
-            F.col("e.begin").alias("begin"), F.col("e.end").alias("end"),
-        )
+        .select("url", "sent_idx", "sentence", "e.word", "e.label",
+                "e.begin", "e.end", "e.norm", "e.entity_id")
     )
 
 
@@ -213,11 +231,12 @@ def _alias_broadcast(sc: SparkContext, alias_dict: DataFrame | Broadcast) -> Bro
     return sc.broadcast(_collect_alias_map(alias_dict))
 
 
-def _resolve_norms(norms: list[str], sentences: pd.Series, amap: dict,
+def _resolve_norms(norms: list[str], contexts: list[str], amap: dict,
                    emb) -> list[str | None]:
     """Entity id per normalized mention (None: not in the dictionary). A
     single candidate resolves directly; every ambiguous alias of the batch
-    goes through ONE embedding rerank on its sentence context."""
+    goes through ONE embedding rerank, mention i against ``contexts[i]``,
+    its sentence."""
     ids: list[str | None] = [None] * len(norms)
     amb_idx, amb_ctx, amb_cands = [], [], []
     for i, norm in enumerate(norms):
@@ -228,7 +247,7 @@ def _resolve_norms(norms: list[str], sentences: pd.Series, amap: dict,
             ids[i] = cands[0][0]
         else:
             amb_idx.append(i)
-            amb_ctx.append(sentences.iloc[i])
+            amb_ctx.append(contexts[i])
             amb_cands.append(cands)
     if amb_idx:
         picked = rerank_ambiguous(amb_ctx, amb_cands, emb)
@@ -239,7 +258,11 @@ def _resolve_norms(norms: list[str], sentences: pd.Series, amap: dict,
 
 def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
                cfg: PipelineConfig) -> DataFrame:
-    """Alias-dictionary resolution + embedding rerank for ambiguous aliases.
+    """Stage 4 on its own: alias-dictionary resolution + embedding rerank
+    for ambiguous aliases, one Python eval over a mention stream. The
+    pipeline resolves inside ``stage_ner_score`` instead; this per-mention
+    form is the reference that resolution is tested against, and it
+    overwrites any ``norm``/``entity_id`` its input carries.
 
     The dictionary is the SMALL side (that is why the north star broadcasts
     it); we pre-aggregate it per alias and ship it as an explicit Spark
@@ -255,19 +278,19 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
     """
     dim, seed = cfg.embedding_dim, cfg.seed
     bc = _alias_broadcast(mentions.sparkSession.sparkContext, alias_dict)
+    cols = ["url", "sent_idx", "sentence", "word", "label", "begin", "end"]
 
     def gen(batches):
         emb = get_embedder(dim, seed)
         amap = bc.value
         for pdf in batches:
             norms = [normalize_mention(w) for w in pdf["word"]]
-            out = pdf[["url", "sent_idx", "sentence", "word", "label",
-                       "begin", "end"]].copy()
-            out["norm"] = norms
-            out["entity_id"] = _resolve_norms(norms, pdf["sentence"], amap, emb)
-            yield out
+            pdf["norm"] = norms
+            pdf["entity_id"] = _resolve_norms(norms, pdf["sentence"].tolist(),
+                                              amap, emb)
+            yield pdf
 
-    return mentions.mapInPandas(gen, schema=schemas.RESOLVED)
+    return mentions.select(*cols).mapInPandas(gen, schema=schemas.RESOLVED)
 
 
 # --------------------------------------------------------------------------
@@ -374,59 +397,44 @@ def _surface_edge_frame(rows: DataFrame) -> DataFrame:
     return surface_nodes.unionByName(coref_edges)
 
 
-def stage_triples(
-    scored: DataFrame,
-    alias_dict: DataFrame | Broadcast,
-    comp: dict[str, str] | DataFrame,
-    cfg: PipelineConfig,
-) -> DataFrame:
-    """Canonical triples WITHOUT occurrence-level joins. Candidate args are
-    resolved map-side against the broadcast alias dictionary (stage_link's
-    ``_resolve_norms``; deterministic, so the same answer per occurrence).
-    An unresolved arg takes its surface's component from ``comp``, in
-    whichever form surface_components returned: a driver dict is broadcast
-    into the same eval; a distributed (surf, component) frame is
-    vocabulary-sized, so the eval keeps each unresolved arg's s:norm
-    surface and one left join per side swaps in the component (``surf``
-    holds only s: nodes, so entity ids never match). The only shuffle over
-    candidates is the final (url, subj, pred, obj) dedup aggregation."""
-    dim, seed = cfg.embedding_dim, cfg.seed
-    sc = scored.sparkSession.sparkContext
-    bc_alias = _alias_broadcast(sc, alias_dict)
-    on_driver = isinstance(comp, dict)
-    bc_cc = sc.broadcast(comp if on_driver else {})
+def _moved_surfaces(spark: SparkSession,
+                    comp: dict[str, str] | DataFrame) -> DataFrame:
+    """The (surf, component) pairs of ``comp`` whose component is not the
+    surface itself: the only ones a join can change. A driver dict goes to
+    the JVM as one Arrow table, a LocalRelation (no Python RDD)."""
+    if not isinstance(comp, dict):
+        return comp.where(F.col("surf") != F.col("component"))
+    moved = {s: c for s, c in comp.items() if s != c}
+    return spark.createDataFrame(pa.table({
+        "surf": pa.array(list(moved), pa.string()),
+        "component": pa.array(list(moved.values()), pa.string())}))
 
-    def gen(batches):
-        emb = get_embedder(dim, seed)
-        amap, ccm = bc_alias.value, bc_cc.value
-        for pdf in batches:
-            out = pdf[["url", "sent_idx", "pred", "subj_word", "obj_word",
-                       "score"]].copy()
-            for side in ("subj", "obj"):
-                norms = [normalize_mention(w) for w in pdf[f"{side}_word"]]
-                ids = _resolve_norms(norms, pdf["sentence"], amap, emb)
-                # unresolved: the surface's component, else the surface itself
-                out[f"{side}_id"] = [
-                    eid if eid is not None else ccm.get("s:" + n, "s:" + n)
-                    for n, eid in zip(norms, ids)]
-            yield out
 
-    out_schema = StructType([
-        schemas.TRIPLES["url"], schemas.TRIPLES["sent_idx"],
-        schemas.TRIPLES["pred"], schemas.TRIPLES["subj_word"],
-        schemas.TRIPLES["obj_word"], schemas.TRIPLES["score"],
-        schemas.TRIPLES["subj_id"], schemas.TRIPLES["obj_id"],
-    ])
-    args = scored.mapInPandas(gen, schema=out_schema)
-    if not on_driver:
-        for side in ("subj", "obj"):
-            args = (
-                args.join(comp.withColumnRenamed("surf", f"{side}_id"),
-                          f"{side}_id", "left")
-                .withColumn(f"{side}_id",
-                            F.coalesce("component", f"{side}_id"))
-                .drop("component")
-            )
+def stage_triples(ner_scored: DataFrame,
+                  comp: dict[str, str] | DataFrame) -> DataFrame:
+    """Canonical triples in the JVM, with no Python eval and no
+    occurrence-level joins. The fused eval's kept candidates carry their
+    argument ids: a dictionary entity, or an unresolved surface node
+    s:norm. One left join per side swaps a moved surface for its
+    component, in whichever form ``surface_components`` returned it; only
+    moved surfaces are joined (``_moved_surfaces``), so when none moved the
+    joined frame is empty and the optimizer drops both joins. The only
+    shuffle over candidates is the final (url, subj, pred, obj) dedup
+    aggregation."""
+    moved = _moved_surfaces(ner_scored.sparkSession, comp)
+    args = (
+        ner_scored
+        .select("url", "sent_idx", F.explode("cands").alias("c"))
+        .select("url", "sent_idx", "c.pred", "c.subj_word", "c.obj_word",
+                "c.score", "c.subj_id", "c.obj_id")
+    )
+    for side in ("subj", "obj"):
+        args = (
+            args.join(moved.withColumnRenamed("surf", f"{side}_id"),
+                      f"{side}_id", "left")
+            .withColumn(f"{side}_id", F.coalesce("component", f"{side}_id"))
+            .drop("component")
+        )
     return (
         args
         .groupBy("url", "subj_id", "pred", "obj_id")
@@ -460,46 +468,30 @@ def run_pipeline(
     manifest and resumes from it when re-run with the same config."""
     cfg = cfg or PipelineConfig()
     ch = cfg.config_hash()
-    mh = f"{cfg.model_name}:{extractor_hash()}"
-    # one alias collect feeds both stages that need it, made on first use:
-    # a resumed stage needs no dictionary
-    aliases = functools.cache(
-        lambda: _alias_broadcast(spark.sparkContext, alias_dict))
-
+    mh = f"{cfg.model_name}:{extractor_hash()}:{STAGE_FORMAT}"
     sentences = checkpointed(
         lambda: repartition_by_length(stage_extract_sentences(pages), cfg),
         spark, workdir, "s1_sentences", ch, mh)
-    ner_scored = checkpointed(lambda: stage_ner_score(sentences, cfg),
+    # the one alias collect of a run, made only if this stage is computed:
+    # a resumed run needs no dictionary
+    ner_scored = checkpointed(lambda: stage_ner_score(sentences, cfg, alias_dict),
                               spark, workdir, "s2s3_ner_scored", ch, mh)
-    persisted: list[DataFrame] = []
     if workdir is None:
-        # feeds BOTH the triples branch and the linking branch; without a
-        # parquet checkpoint, persist so inference runs once
+        # feeds BOTH the surface graph and the triples; without a parquet
+        # checkpoint, persist so inference runs once
         ner_scored = ner_scored.persist()
-        persisted.append(ner_scored)
-    scored = (
-        ner_scored
-        .where(F.size("cands") >= 1)
-        .select("url", "sent_idx", "sentence", F.explode("cands").alias("c"))
-        .select("url", "sent_idx", "sentence", "c.*")
-    )
-    resolved = checkpointed(
-        lambda: stage_link(stage_mentions(ner_scored), aliases(), cfg),
-        spark, workdir, "s4_resolved", ch, mh)
-    if workdir is None:
-        resolved = resolved.persist()
-        persisted.append(resolved)
+    resolved = checkpointed(lambda: stage_mentions(ner_scored),
+                            spark, workdir, "s4_resolved", ch, mh)
     # resolved carries (url, norm) so it doubles as the coref mention source
     comp = surface_components(resolved, resolved)
-    triples = checkpointed(lambda: stage_triples(scored, aliases(), comp, cfg),
+    triples = checkpointed(lambda: stage_triples(ner_scored, comp),
                            spark, workdir, "s5_triples", ch, mh)
-    if persisted:
+    if workdir is None:
         # cache discipline for long-lived sessions: materialize the (small)
-        # triples result once, then release every intermediate cache. With a
+        # triples result once, then release the inference cache. With a
         # workdir the stages live in parquet and nothing was persisted.
         triples = triples.localCheckpoint(eager=True)
-        for df in persisted:
-            df.unpersist()
+        ner_scored.unpersist()
     if not isinstance(comp, dict):
         # the component mapping was a materialized localCheckpoint; triples
         # are now materialized (parquet checkpoint or localCheckpoint above),

@@ -2678,15 +2678,15 @@ def q_kg_pagerank(spark, sf_dir):
 
 
 def q_kg_linked(spark, sf_dir):
-    """Stage-4 resolution output."""
+    """Stage-4 resolution output, as the fused NER/NLI eval resolves it."""
     from .pipeline import (repartition_by_length, stage_extract_sentences,
-                           stage_link, stage_mentions, stage_ner_score)
+                           stage_mentions, stage_ner_score)
     cfg = PipelineConfig()
     pages = pages_from_documents(spark, sf_dir)
-    sent_ents = stage_ner_score(
-        repartition_by_length(stage_extract_sentences(pages), cfg), cfg)
-    mentions = stage_mentions(sent_ents)
-    return stage_link(mentions, _alias_df(spark), cfg).select(
+    ner_scored = stage_ner_score(
+        repartition_by_length(stage_extract_sentences(pages), cfg), cfg,
+        _alias_df(spark))
+    return stage_mentions(ner_scored).select(
         "url", "sent_idx", "word", "label", "norm", "entity_id")
 
 

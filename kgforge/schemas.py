@@ -38,9 +38,6 @@ ENTITY = StructType([
     StructField("end", IntegerType(), False),
 ])
 
-SENTENCE_ENTITIES = StructType(
-    SENTENCES.fields[:4] + [StructField("entities", ArrayType(ENTITY), False)]
-)
 
 CANDIDATE = StructType([
     StructField("subj_word", StringType(), False),
@@ -53,6 +50,22 @@ CANDIDATE = StructType([
     StructField("obj_end", IntegerType(), False),
     StructField("pred", StringType(), False),
     StructField("hypothesis", StringType(), False),
+])
+
+# The fused NER/NLI output (stages 2b-4): every entity carries its
+# normalized surface and dictionary id (null: unresolved), every kept
+# candidate its score and its two arguments' ids (an unresolved argument's
+# id is its surface node, "s:" + norm).
+NER_SCORED = StructType(SENTENCES.fields[:4] + [
+    StructField("entities", ArrayType(StructType(ENTITY.fields + [
+        StructField("norm", StringType(), False),
+        StructField("entity_id", StringType(), True),
+    ])), False),
+    StructField("cands", ArrayType(StructType(CANDIDATE.fields + [
+        StructField("score", DoubleType(), False),
+        StructField("subj_id", StringType(), False),
+        StructField("obj_id", StringType(), False),
+    ])), False),
 ])
 
 MENTIONS = StructType([

@@ -278,7 +278,7 @@ def _asof_enrich_buffered(events: DataFrame, horizon_sec: float,
         # Without a timeout the function runs only for keys present in the
         # current micro-batch, so a buffered purchase of an idle user would
         # never flush. EventTimeTimeout re-invokes the group (empty input)
-        # once the watermark passes the earliest buffered purchase.
+        # once the watermark passes the earliest buffered event.
         if state.exists:
             last_view, view_ts, p_ids, p_ts = state.get
             view_ts, p_ids, p_ts = list(view_ts), list(p_ids), list(p_ts)
@@ -321,10 +321,13 @@ def _asof_enrich_buffered(events: DataFrame, horizon_sec: float,
             state.remove()                # identical to holding no state
         else:
             state.update((last_view, view_ts, keep_ids, keep_ts))
-        if keep_ts:
-            # flush wake-up: timeout fires when the watermark passes the
-            # earliest held purchase (must be set anew every invocation)
-            state.setTimeoutTimestamp(int(min(keep_ts) * 1000) + 1)
+        pending = keep_ts or view_ts
+        if pending:
+            # wake-up (must be set anew every invocation): the timeout fires
+            # when the watermark passes the earliest held purchase, or, with
+            # none held, the earliest held view, which then folds into
+            # last_view even if the user sends nothing more
+            state.setTimeoutTimestamp(int(min(pending) * 1000) + 1)
         if out["purchase_id"]:
             yield pd.DataFrame(out)
 

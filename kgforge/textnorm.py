@@ -16,7 +16,7 @@ def normalize_mention(surface: str) -> str:
     """Pure function of the surface string; cached because mention surfaces
     are a small, highly repetitive vocabulary while the NFKD + combining
     scan costs ~µs per call and runs per mention occurrence (253k rows at
-    sf1.0 in stage_link alone, then again per candidate arg in stage 5)."""
+    sf1.0, once per entity inside the fused NER/NLI eval)."""
     s = unicodedata.normalize("NFKD", surface.casefold())
     s = "".join(ch for ch in s if not unicodedata.combining(ch))
     return " ".join(s.split())

@@ -14,6 +14,7 @@ from kgforge.config import PipelineConfig
 from kgforge.extract import wrap_html
 from kgforge.metrics import triple_pr
 from kgforge.pipeline import (
+    STAGE_FORMAT,
     repartition_by_length,
     run_pipeline,
     stage_extract_sentences,
@@ -132,7 +133,8 @@ def test_surface_graph_driver_edges_match_jvm_edges(spark):
 
 def test_in_memory_run_collects_alias_map_once(spark, tiny_pages_df, alias_df,
                                                cfg, alias_collects):
-    """stage_link and stage_triples share one alias broadcast."""
+    """The fused NER/NLI eval is the only stage that reads the alias map:
+    one collect of the dictionary per run."""
     assert run_pipeline(spark, tiny_pages_df, alias_df, cfg).count() > 0
     assert len(alias_collects) == 1
 
@@ -316,15 +318,19 @@ def test_spark_ner_matches_local(spark, tiny_pages_df, cfg):
     assert checked > 100
 
 
+# 'Apex' is an ambiguous alias: the sentence context picks the entity
+_APEX_PAGES = {
+    "https://t/1": ("t\nIt is known that Amy Smith works for Apex near the "
+                    "mining shipping harbor."),
+    "https://t/2": ("t\nIt is known that Amy Smith works for Apex near the "
+                    "software campus banking."),
+}
+
+
 def test_ambiguous_alias_resolved_by_context(spark, alias_df, cfg):
     """The 'Apex' alias must resolve via the ANN rerank to the entity whose
     signature words appear in the sentence."""
-    pages_df = _pages_df(spark, {
-        "https://t/1": ("t\nIt is known that Amy Smith works for Apex near the "
-                        "mining shipping harbor."),
-        "https://t/2": ("t\nIt is known that Amy Smith works for Apex near the "
-                        "software campus banking."),
-    })
+    pages_df = _pages_df(spark, _APEX_PAGES)
     mentions = stage_mentions(stage_ner_score(stage_extract_sentences(pages_df), cfg))
     resolved = stage_link(mentions, alias_df, cfg)
     by_url = {(r["url"], r["word"]): r["entity_id"] for r in resolved.collect()}
@@ -332,12 +338,29 @@ def test_ambiguous_alias_resolved_by_context(spark, alias_df, cfg):
     assert by_url[("https://t/2", "Apex")] == "ORG_0101"  # Apex Software Labs
 
 
+def test_fused_resolution_matches_stage_link(spark, tiny_pages_df, alias_df,
+                                            cfg):
+    """The fused eval's resolution equals the per-mention stage_link on
+    every RESOLVED column, on the tiny corpus and on the ambiguous-alias
+    pages, where the rerank context decides."""
+    cols = schemas.RESOLVED.fieldNames()
+    for pages_df in (tiny_pages_df, _pages_df(spark, _APEX_PAGES)):
+        sentences = repartition_by_length(stage_extract_sentences(pages_df), cfg)
+        linked = stage_link(stage_mentions(stage_ner_score(sentences, cfg)),
+                            alias_df, cfg)
+        fused = stage_mentions(stage_ner_score(sentences, cfg, alias_df))
+        want = sorted(map(tuple, linked.select(*cols).collect()))
+        got = sorted(map(tuple, fused.select(*cols).collect()))
+        assert want and got == want
+        assert any(r[-1] is not None for r in got)
+
+
 def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     """'Orla Quizzle' (not in the alias dict) and two bare 'Quizzle'
     mentions, one of them on another page, must all share one canonical id
     via connected components: in both forms of surface_components' answer
-    (distributed frame == driver dict), and in the triples of both stage-5
-    branches of run_pipeline (broadcast dict; joins of the frame)."""
+    (distributed frame == driver dict), and in the triples of run_pipeline
+    on both CC branches, whose moved surfaces stage 5 joins in."""
     import kgforge.pipeline as pl
     from kgforge.canon import _release_local_checkpoint
 
@@ -409,6 +432,39 @@ def test_checkpoint_resume_identical(spark, tiny_pages_df, alias_df, cfg, tmp_pa
     assert rows1 == rows2
     # a full resume builds no stage that needs the alias dictionary
     assert len(alias_collects) == 1
+
+
+def test_checkpoint_of_older_stage_format_is_recomputed(spark, tiny_pages_df,
+                                                      alias_df, cfg, triples,
+                                                      tmp_path):
+    """A workdir whose fused stage was written in an older output format
+    (entities without norm/entity_id, candidates without argument ids)
+    under the identity of that time must be recomputed, not resumed: the
+    run gives the fresh run's triples."""
+    import json
+
+    from kgforge.checkpoint import write_stage
+    from kgforge.extract import extractor_hash
+
+    wd = str(tmp_path / "wd")
+    old_cand = [f.name for f in schemas.CANDIDATE.fields] + ["score"]
+    ner = stage_ner_score(
+        repartition_by_length(stage_extract_sentences(tiny_pages_df), cfg), cfg)
+    old = ner.select(
+        "url", "sent_idx", "sent_begin", "sentence",
+        F.transform("entities", lambda e: F.struct(
+            *[e[c].alias(c) for c in schemas.ENTITY.fieldNames()])
+        ).alias("entities"),
+        F.transform("cands", lambda c: F.struct(
+            *[c[n].alias(n) for n in old_cand])).alias("cands"))
+    path = os.path.join(wd, "s2s3_ner_scored")
+    write_stage(old, path, "s2s3_ner_scored", cfg.config_hash(),
+                f"{cfg.model_name}:{extractor_hash()}")
+
+    got = run_pipeline(spark, tiny_pages_df, alias_df, cfg, workdir=wd)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, triples.collect()))
+    with open(os.path.join(path, "_kg_manifest.json")) as f:
+        assert json.load(f)["model_hash"].endswith(":" + STAGE_FORMAT)
 
 
 def test_length_bucketing_partitions_are_homogeneous(spark, tiny_pages_df, cfg):

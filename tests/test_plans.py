@@ -58,7 +58,8 @@ def test_lang_filter_before_python_stage(spark, tiny_pages_df):
 
 def test_link_stage_has_no_shuffle(spark, tiny_pages_df, alias_df):
     """Entity linking must not shuffle the mention stream: no Exchange above
-    the NER output in the resolved plan (broadcast-dict map-side design)."""
+    the NER output in the resolved plan (broadcast-dict map-side design),
+    in the per-mention stage_link and in the fused eval's resolution."""
     from kgforge.config import PipelineConfig
     from kgforge.pipeline import (stage_extract_sentences, stage_link,
                                   stage_mentions, stage_ner_score)
@@ -66,6 +67,10 @@ def test_link_stage_has_no_shuffle(spark, tiny_pages_df, alias_df):
     sent_ents = stage_ner_score(stage_extract_sentences(tiny_pages_df), cfg)
     resolved = stage_link(stage_mentions(sent_ents), alias_df, cfg)
     plan = _plan(resolved)
+    assert "Exchange" not in plan, plan
+    fused = stage_mentions(stage_ner_score(
+        stage_extract_sentences(tiny_pages_df), cfg, alias_df))
+    plan = _plan(fused)
     assert "Exchange" not in plan, plan
 
 
@@ -113,6 +118,15 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
+def _pipeline_pages(spark, lo: int, hi: int):
+    """Synthetic pages [lo, hi) in a frame of its own, which no earlier
+    test has cached."""
+    from kgforge import schemas
+    from kgforge.synth import gen_pages
+    pages, _ = gen_pages(lo, hi)
+    return spark.createDataFrame(pages, schema=schemas.PAGES)
+
+
 def test_pipeline_has_single_bigdata_exchange(spark, alias_df):
     """The production model chain (pages -> extract+sentences -> length
     repartition -> fused NER/candidates/NLI) must contain exactly ONE
@@ -123,13 +137,10 @@ def test_pipeline_has_single_bigdata_exchange(spark, alias_df):
     Uses its own input DataFrame: the session-scoped fixture's plan may be
     substituted by a cached (persisted) subtree from earlier e2e tests,
     which changes the physical plan under test."""
-    from kgforge import schemas
     from kgforge.config import PipelineConfig
     from kgforge.pipeline import (repartition_by_length,
                                   stage_extract_sentences, stage_ner_score)
-    from kgforge.synth import gen_pages
-    pages, _ = gen_pages(500, 520)
-    pages_df = spark.createDataFrame(pages, schema=schemas.PAGES)
+    pages_df = _pipeline_pages(spark, 500, 520)
     cfg = PipelineConfig()
     scored = stage_ner_score(
         repartition_by_length(stage_extract_sentences(pages_df), cfg), cfg)
@@ -143,6 +154,70 @@ def test_pipeline_has_single_bigdata_exchange(spark, alias_df):
     cols = [{c.split("#")[0] for c in out.split(", ")} for out in outputs]
     assert [("bucket" in c, "cands" in c) for c in cols] == [
         (True, False), (False, True)], plan
+
+
+def test_in_memory_run_has_two_python_evals(spark, alias_df):
+    """An in-memory run_pipeline runs exactly two Python evals, the fused
+    stages whose outputs hold ``bucket`` and ``cands``: linking and stage 5
+    run in the JVM. Read from the plan graphs of every SQL execution the
+    run made. The run uses at most 7 Spark jobs (it took 8 with a linking
+    and a stage-5 eval)."""
+    import re
+    from kgforge.config import PipelineConfig
+    from kgforge.pipeline import run_pipeline
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        last = -1
+        while it.hasNext():
+            last = max(last, it.next().executionId())
+        return last
+
+    pages_df = _pipeline_pages(spark, 520, 560)
+    first = last_execution() + 1
+    sc.setJobGroup("two-python-evals", "one in-memory run_pipeline")
+    try:
+        triples = run_pipeline(spark, pages_df, alias_df, PipelineConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("two-python-evals")) <= 7
+    assert triples.count() > 0
+
+    evals = set()
+    for eid in range(first, last_execution() + 1):
+        nodes = store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            node = nodes.next()
+            if node.name() == "MapInPandas":
+                # desc: "MapInPandas gen(<inputs>)#n, [<outputs>], <flag>"
+                out = re.search(r", \[([^\]]*)\], \w+$", node.desc()).group(1)
+                evals.add(frozenset(c.split("#")[0] for c in out.split(", ")))
+    assert len(evals) == 2, evals
+    assert sorted(("bucket" in c, "cands" in c) for c in evals) == [
+        (False, True), (True, False)], evals
+
+
+def test_stage_triples_without_moved_surface_has_no_join(spark, alias_df):
+    """Stage 5 joins only surfaces whose component is another surface.
+    When none moved, the joined frame is an empty LocalRelation and the
+    optimizer drops both joins; a moved surface brings them back."""
+    from kgforge.config import PipelineConfig
+    from kgforge.pipeline import (stage_extract_sentences, stage_ner_score,
+                                  stage_triples)
+    cfg = PipelineConfig()
+    ner = stage_ner_score(
+        stage_extract_sentences(_pipeline_pages(spark, 560, 570)), cfg, alias_df)
+
+    def optimized(comp) -> str:
+        return stage_triples(ner, comp)._jdf.queryExecution().optimizedPlan().toString()
+
+    for comp in ({}, {"s:quizzle": "s:quizzle"}):
+        assert "Join" not in optimized(comp), comp
+    assert "Join" in optimized({"s:quizzle": "s:orla quizzle"})
 
 
 def test_text_analysis_queries_have_no_shuffle(spark):

@@ -510,6 +510,67 @@ def test_stream_asof_enrich_lateness_drains_purchase_only_state(
     assert spark.read.parquet(outdir).count() == 0
 
 
+def test_stream_asof_enrich_lateness_folds_view_only_state(spark, tmp_path):
+    """Lateness mode: views of a user who holds no purchase must still fold
+    into ``last_view`` once the watermark passes them. The event-time
+    timeout is armed on the earliest held view, so no later event of that
+    user is needed; read back from the state store, the view-only user
+    keeps no view list, only its latest view. The emitted rows are those of
+    the buffered purchase alone."""
+    import datetime
+
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType, TimestampType)
+
+    from kgforge.streaming import stream_asof_enrich
+
+    ev_schema = StructType([
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ])
+    indir, outdir = str(tmp_path / "in"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def ts(minutes):
+        return t0 + datetime.timedelta(minutes=minutes)
+
+    def run_batch(rows):
+        spark.createDataFrame(
+            [(eid, ts(m), u, et, 1.0, "{}") for eid, m, u, et in rows],
+            schema=ev_schema).coalesce(1).write.mode("append").parquet(indir)
+        q = (stream_asof_enrich(
+                spark.readStream.schema(ev_schema).format("parquet")
+                .load(indir), lateness_horizon_sec=3600.0)
+             .writeStream.format("parquet")
+             .option("path", outdir)
+             .option("checkpointLocation", ckpt)
+             .outputMode("append")
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination(120)
+
+    # user 1 only views; user 2 views, then purchases (held in state)
+    run_batch([(1, 0, 1, "view"), (2, 5, 1, "view"),
+               (3, 0, 2, "view"), (4, 10, 2, "purchase")])
+    # user 9's views at +10h move the watermark past all of them; the last
+    # batch lets the timeouts fire
+    run_batch([(90, 600, 9, "view")])
+    run_batch([(91, 601, 9, "view")])
+
+    state = {r["key"]["user_id"]: r["value"]["groupState"] for r in
+             spark.read.format("statestore").load(ckpt).collect()}
+    assert list(state[1]["view_ts"]) == []
+    assert state[1]["last_view"] == _tsec(ts(5))
+    assert list(state[1]["p_ids"]) == []
+    got = [tuple(r) for r in spark.read.parquet(outdir).collect()]
+    assert got == [(4, 2, _tsec(ts(10)), _tsec(ts(0)), 600.0)]
+
+
 def _tsec(dt):
     import calendar
     return float(calendar.timegm(dt.timetuple()))
