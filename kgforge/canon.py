@@ -24,8 +24,12 @@ detected by an edge-set checksum (count + xor-ish hash agg) going stable.
 ``components`` is the one scale-adaptive policy every caller uses (stage
 5's surface graph, near-dup clustering): one ``limit(T+1)`` Arrow download
 decides the branch. At most ``COLLECT_THRESHOLD`` edges are solved on the
-driver by ``cc_unionfind`` (also the pytest oracle) and come back as a
-dict; more run the distributed operator and come back as a frame.
+driver by ``cc_unionfind`` (also the pytest oracle); more run the
+distributed operator. Either way the answer has one form: a
+(node, component) frame of the MOVED nodes only, those whose component is
+not the node itself (``moved_frame`` ships the driver's as one Arrow
+LocalRelation). A node missing from it is its own component, so every
+caller applies it with one left join plus ``coalesce``.
 ``COLLECT_THRESHOLD`` (2M) is sized by driver memory: at 2M edges the
 driver branch grows the driver's Python RSS by about 0.5-0.9 GB
 (measurements beside the constant).
@@ -35,7 +39,8 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # Driver union-find ceiling, sized by driver memory. Measured growth of the
 # driver's Python RSS: union-find over random int pairs, 55-79 MB at 200k
@@ -173,25 +178,41 @@ def connected_components(
 
 def components(
     edges: DataFrame, collect_threshold: int = COLLECT_THRESHOLD
-) -> dict | DataFrame:
-    """edges(src, dst) -> node -> component, as ``cc_unionfind``'s dict when
-    at most ``collect_threshold`` edges exist (one Arrow download; node ids
-    keep their Python type), else as ``connected_components``' materialized
-    (node, component) frame. Both are looked up in this module per call, so
-    wrappers patched onto it see either branch."""
+) -> DataFrame:
+    """edges(src, dst) -> (node, component) frame of the nodes whose
+    component is not the node itself, ids in the edge columns' type. At
+    most ``collect_threshold`` edges (one Arrow download) run
+    ``cc_unionfind`` and come back through ``moved_frame``; more run
+    ``connected_components``' materialized mapping. Both are looked up in
+    this module per call, so wrappers patched onto it see either branch."""
     table = edges.limit(collect_threshold + 1).toArrow()
     if table.num_rows <= collect_threshold:
-        return cc_unionfind(list(zip(table.column("src").to_pylist(),
-                                     table.column("dst").to_pylist())))
+        mapping = cc_unionfind(list(zip(table.column("src").to_pylist(),
+                                        table.column("dst").to_pylist())))
+        return moved_frame(edges.sparkSession, mapping,
+                           table.schema.field("src").type)
     # connected_components reads its input twice; persist (not
     # localCheckpoint, which unpersist cannot release). The materialized
     # mapping frees the edges and the CC iteration state here — a lazy plan
     # would pin them in storage for the session lifetime.
     edges = edges.persist()
     try:
-        return connected_components(edges, materialize=True)
+        return connected_components(edges, materialize=True).where(
+            F.col("node") != F.col("component"))
     finally:
         edges.unpersist(blocking=True)
+
+
+def moved_frame(spark: SparkSession, mapping: dict,
+                id_type: pa.DataType) -> DataFrame:
+    """The (node, component) pairs of a driver mapping whose component is
+    not the node itself, as one Arrow table of ``id_type`` columns: a
+    LocalRelation (no Python RDD), so bigint ids stay exact and an empty
+    mapping is an empty frame the optimizer can drop joins against."""
+    moved = {n: c for n, c in mapping.items() if n != c}
+    return spark.createDataFrame(pa.table({
+        "node": pa.array(list(moved), id_type),
+        "component": pa.array(list(moved.values()), id_type)}))
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:

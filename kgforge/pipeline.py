@@ -29,7 +29,6 @@ from dataclasses import asdict
 import pandas as pd
 import pyarrow as pa
 
-from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
@@ -120,14 +119,14 @@ def repartition_by_length(sentences: DataFrame, cfg: PipelineConfig) -> DataFram
 # --------------------------------------------------------------------------
 
 def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
-                    alias_dict: DataFrame | Broadcast | None = None) -> DataFrame:
+                    alias_dict: DataFrame | None = None) -> DataFrame:
     """Fused model stage: NER + consolidation + BIOES + candidate generation
     + NLI scoring + entity resolution in ONE Python eval. The sentence
     stream crosses the JVM<->Python boundary once for all per-sentence
     work; downstream stages are pure-JVM explodes, joins and aggregations.
 
-    Every entity gets its ``norm`` and, against ``alias_dict`` (the
-    dimension table or its ``_alias_broadcast``), its ``entity_id``: all
+    Every entity gets its ``norm`` and, against the ``alias_dict`` table
+    (collected once and broadcast), its ``entity_id``: all
     entities of an Arrow batch resolve in one ``_resolve_norms`` call, each
     with its own sentence as rerank context. With no ``alias_dict`` every
     ``entity_id`` is null. Every kept candidate copies the ids of its two
@@ -135,8 +134,8 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
     its surface node ``"s:" + norm``. Output: ``schemas.NER_SCORED``."""
     seed, dim = cfg.seed, cfg.embedding_dim
     cfg_kwargs = asdict(cfg)
-    bc = (None if alias_dict is None else
-          _alias_broadcast(sentences.sparkSession.sparkContext, alias_dict))
+    bc = (None if alias_dict is None else sentences.sparkSession.sparkContext
+          .broadcast(_collect_alias_map(alias_dict)))
 
     def gen(batches):
         local_cfg = PipelineConfig(**cfg_kwargs)
@@ -222,15 +221,6 @@ def _collect_alias_map(alias_dict: DataFrame) -> dict[str, list[tuple[str, str, 
     return alias_map
 
 
-def _alias_broadcast(sc: SparkContext, alias_dict: DataFrame | Broadcast) -> Broadcast:
-    """The alias map as a broadcast variable. A caller running several
-    stages passes one it already built: each collect of the dictionary is a
-    driver round trip of its own."""
-    if isinstance(alias_dict, Broadcast):
-        return alias_dict
-    return sc.broadcast(_collect_alias_map(alias_dict))
-
-
 def _resolve_norms(norms: list[str], contexts: list[str], amap: dict,
                    emb) -> list[str | None]:
     """Entity id per normalized mention (None: not in the dictionary). A
@@ -256,7 +246,7 @@ def _resolve_norms(norms: list[str], contexts: list[str], amap: dict,
     return ids
 
 
-def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
+def stage_link(mentions: DataFrame, alias_dict: DataFrame,
                cfg: PipelineConfig) -> DataFrame:
     """Stage 4 on its own: alias-dictionary resolution + embedding rerank
     for ambiguous aliases, one Python eval over a mention stream. The
@@ -272,12 +262,10 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame | Broadcast,
     groupBy-per-occurrence to regroup candidates — a full shuffle of all
     mentions — which this formulation eliminates.)
 
-    ``alias_dict`` is the dimension table, or its ``_alias_broadcast``.
-
     Output: RESOLVED (entity_id null => unresolved).
     """
     dim, seed = cfg.embedding_dim, cfg.seed
-    bc = _alias_broadcast(mentions.sparkSession.sparkContext, alias_dict)
+    bc = mentions.sparkSession.sparkContext.broadcast(_collect_alias_map(alias_dict))
     cols = ["url", "sent_idx", "sentence", "word", "label", "begin", "end"]
 
     def gen(batches):
@@ -301,7 +289,7 @@ def surface_components(
     resolved: DataFrame,
     mentions: DataFrame | None = None,
     collect_threshold: int = canon.COLLECT_THRESHOLD,
-) -> dict[str, str] | DataFrame:
+) -> DataFrame:
     """Connected components over the UNRESOLVED-surface graph.
 
     Dictionary/ANN-resolved occurrences already have a canonical id (the
@@ -314,11 +302,11 @@ def surface_components(
     ``resolved`` carries every mention's (url, norm), so it is also the
     coref mention source; ``mentions`` may only be None or ``resolved``.
 
-    The branch follows the one CC policy, ``canon.components``: the answer
-    is a driver dict or a (surf, component) frame. The common case is ONE
-    Arrow download of at most ``collect_threshold`` graph rows
-    (``_graph_rows``) with the edges built in Python — the JVM edge
-    frame's shuffles are a Spark job each. Every coref edge comes from a
+    The answer follows the one CC policy, ``canon.components``: a
+    (node, component) frame of the surfaces that moved, on either branch.
+    The common case is ONE Arrow download of at most ``collect_threshold``
+    graph rows (``_graph_rows``) with the edges built in Python — the JVM
+    edge frame's shuffles are a Spark job each. Every coref edge comes from a
     distinct multi-word row and every self edge from a distinct unresolved
     row, so the edges number at most twice the rows and the row gate
     bounds driver memory. Rows grow with pages, edges with vocabulary: if
@@ -330,9 +318,10 @@ def surface_components(
     rows = _graph_rows(resolved)
     table = rows.limit(collect_threshold + 1).toArrow()
     if table.num_rows <= collect_threshold:
-        return canon.cc_unionfind(_surface_edges(table))
-    comp = canon.components(_surface_edge_frame(rows), collect_threshold)
-    return comp if isinstance(comp, dict) else comp.withColumnRenamed("node", "surf")
+        return canon.moved_frame(resolved.sparkSession,
+                                 canon.cc_unionfind(_surface_edges(table)),
+                                 pa.string())
+    return canon.components(_surface_edge_frame(rows), collect_threshold)
 
 
 def _graph_rows(resolved: DataFrame) -> DataFrame:
@@ -397,31 +386,15 @@ def _surface_edge_frame(rows: DataFrame) -> DataFrame:
     return surface_nodes.unionByName(coref_edges)
 
 
-def _moved_surfaces(spark: SparkSession,
-                    comp: dict[str, str] | DataFrame) -> DataFrame:
-    """The (surf, component) pairs of ``comp`` whose component is not the
-    surface itself: the only ones a join can change. A driver dict goes to
-    the JVM as one Arrow table, a LocalRelation (no Python RDD)."""
-    if not isinstance(comp, dict):
-        return comp.where(F.col("surf") != F.col("component"))
-    moved = {s: c for s, c in comp.items() if s != c}
-    return spark.createDataFrame(pa.table({
-        "surf": pa.array(list(moved), pa.string()),
-        "component": pa.array(list(moved.values()), pa.string())}))
-
-
-def stage_triples(ner_scored: DataFrame,
-                  comp: dict[str, str] | DataFrame) -> DataFrame:
+def stage_triples(ner_scored: DataFrame, moved: DataFrame) -> DataFrame:
     """Canonical triples in the JVM, with no Python eval and no
     occurrence-level joins. The fused eval's kept candidates carry their
     argument ids: a dictionary entity, or an unresolved surface node
-    s:norm. One left join per side swaps a moved surface for its
-    component, in whichever form ``surface_components`` returned it; only
-    moved surfaces are joined (``_moved_surfaces``), so when none moved the
-    joined frame is empty and the optimizer drops both joins. The only
-    shuffle over candidates is the final (url, subj, pred, obj) dedup
-    aggregation."""
-    moved = _moved_surfaces(ner_scored.sparkSession, comp)
+    s:norm. One left join per side with ``moved``, the (node, component)
+    frame of ``surface_components``, swaps a moved surface for its
+    component; when no surface moved the frame is empty and the optimizer
+    drops both joins. The only shuffle over candidates is the final
+    (url, subj, pred, obj) dedup aggregation."""
     args = (
         ner_scored
         .select("url", "sent_idx", F.explode("cands").alias("c"))
@@ -430,7 +403,7 @@ def stage_triples(ner_scored: DataFrame,
     )
     for side in ("subj", "obj"):
         args = (
-            args.join(moved.withColumnRenamed("surf", f"{side}_id"),
+            args.join(moved.withColumnRenamed("node", f"{side}_id"),
                       f"{side}_id", "left")
             .withColumn(f"{side}_id", F.coalesce("component", f"{side}_id"))
             .drop("component")
@@ -483,8 +456,8 @@ def run_pipeline(
     resolved = checkpointed(lambda: stage_mentions(ner_scored),
                             spark, workdir, "s4_resolved", ch, mh)
     # resolved carries (url, norm) so it doubles as the coref mention source
-    comp = surface_components(resolved, resolved)
-    triples = checkpointed(lambda: stage_triples(ner_scored, comp),
+    moved = surface_components(resolved, resolved)
+    triples = checkpointed(lambda: stage_triples(ner_scored, moved),
                            spark, workdir, "s5_triples", ch, mh)
     if workdir is None:
         # cache discipline for long-lived sessions: materialize the (small)
@@ -492,11 +465,10 @@ def run_pipeline(
         # workdir the stages live in parquet and nothing was persisted.
         triples = triples.localCheckpoint(eager=True)
         ner_scored.unpersist()
-    if not isinstance(comp, dict):
-        # the component mapping was a materialized localCheckpoint; triples
-        # are now materialized (parquet checkpoint or localCheckpoint above),
-        # so its blocks can be released
-        _release_local_checkpoint(comp)
+    # triples are now materialized (parquet checkpoint or localCheckpoint
+    # above), so the distributed branch's localCheckpointed mapping can be
+    # released; a driver LocalRelation holds no blocks
+    _release_local_checkpoint(moved)
     return triples
 
 

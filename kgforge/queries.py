@@ -496,43 +496,20 @@ def q_neardup_clusters(spark, sf_dir):
 
     The branch follows the one CC policy, ``canon.components`` (one Arrow
     download of the pairs decides it), run on the bigint doc ids, whose
-    component minimum is the numerically smallest doc_id. A driver dict
-    maps back via a broadcast + ONE Arrow projection over doc_id — ZERO
-    shuffle of the corpus (stage_link's broadcast-dict map-side pattern);
-    a distributed (node, component) frame is left-joined on doc_id. Both
-    branches produce identical values (each is value-gated against the
+    component minimum is the numerically smallest doc_id. Either branch
+    answers with the (node, component) frame of the docs that moved, which
+    is left-joined on doc_id: under the collect threshold it is a
+    LocalRelation the optimizer broadcasts, so the corpus never shuffles.
+    Both branches produce identical values (each is value-gated against the
     recursive-CTE oracle)."""
     edges = q_ngram_jaccard_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # the constant is read per call, so patching it switches the branch
-    comp = canon.components(edges, canon.COLLECT_THRESHOLD)
-    docs = _docs(spark, sf_dir).select("doc_id")
-    if isinstance(comp, dict):
-        bcomp = spark.sparkContext.broadcast(comp)
-
-        @F.pandas_udf("bigint")
-        def cluster_of(s: pd.Series) -> pd.Series:
-            # int64-exact lookup: map ONLY the matched subset (a whole-
-            # series map would upcast everything to float64 the moment one
-            # id misses, silently rounding ids above 2^53); unmatched docs
-            # are their own singleton cluster
-            m = bcomp.value
-            out = s.copy()
-            hit = s.isin(m)
-            if hit.any():
-                out[hit] = s[hit].map(m).astype("int64")
-            return out
-
-        return (docs
-                .select("doc_id", cluster_of("doc_id").alias("cluster_id"))
-                .withColumn("is_keeper",
-                            F.col("doc_id") == F.col("cluster_id")))
-
-    mapped = comp.select(F.col("node").alias("doc_id"),
-                         F.col("component").alias("cluster_id"))
+    moved = canon.components(edges, canon.COLLECT_THRESHOLD).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
     return (
-        docs
-        .join(mapped, "doc_id", "left")
+        _docs(spark, sf_dir).select("doc_id")
+        .join(moved, "doc_id", "left")
         .select("doc_id",
                 F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"))
         .withColumn("is_keeper", F.col("doc_id") == F.col("cluster_id"))

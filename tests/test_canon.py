@@ -61,6 +61,17 @@ def test_cc_long_path_log_rounds(spark):
     assert len(got) == 64
 
 
+def _moved(mapping: dict) -> dict:
+    """The nodes of a union-find mapping whose component is another node."""
+    return {n: c for n, c in mapping.items() if n != c}
+
+
+def _surface_oracle(resolved) -> dict:
+    """Union-find's moved surfaces over the surface graph of ``resolved``."""
+    from kgforge.pipeline import _graph_rows, _surface_edges
+    return _moved(cc_unionfind(_surface_edges(_graph_rows(resolved).toArrow())))
+
+
 def test_release_local_checkpoint_frees_blocks_through_projections(spark):
     """ADVICE r2: surface_components returns the checkpointed frame wrapped
     in withColumnRenamed, so the release helper must find the LogicalRDD
@@ -84,33 +95,44 @@ def test_release_local_checkpoint_frees_blocks_through_projections(spark):
 
 
 def test_components_picks_branch_at_threshold(spark):
-    """At exactly T edges canon.components answers with cc_unionfind's
-    dict, at T+1 with a frame holding the same mapping; ids keep their
-    type on both branches, zero edges give {}, and the distributed call
-    leaves only its materialized mapping cached."""
+    """At exactly T edges canon.components runs cc_unionfind, at T+1 the
+    distributed operator; both answer with a (node, component) frame of
+    exactly union-find's moved nodes, in the edge columns' type. Zero edges
+    give an empty frame of that type, and the distributed call leaves only
+    its materialized mapping cached."""
     from kgforge.canon import _release_local_checkpoint, components
+    from perfbench.workloads import canon_metrics, watch_components
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    def typed(frame):
+        return [(f.name, f.dataType) for f in frame.schema]
 
     for edges, schema in (([("b", "a"), ("c", "d"), ("d", "b")],
                            "src string, dst string"),
                           ([(30, 4), (9, 10), (10, 100)],
                            "src bigint, dst bigint")):
         df = spark.createDataFrame(edges, schema)
-        want = cc_unionfind(edges)
-        got = components(df, collect_threshold=len(edges))
-        assert got == want
-        assert {type(x) for pair in got.items() for x in pair} == {type(edges[0][0])}
-        before = n_cached()
-        frame = components(df, collect_threshold=len(edges) - 1)
-        assert not isinstance(frame, dict)
-        assert n_cached() - before <= 1
-        rows = frame.collect()
-        assert {r["node"]: r["component"] for r in rows} == want
-        assert {type(v) for r in rows for v in r} == {type(edges[0][0])}
-        _release_local_checkpoint(frame)
-    assert components(spark.createDataFrame([], "src string, dst string")) == {}
+        want = _moved(cc_unionfind(edges))
+        assert want
+        for distributed in (False, True):
+            before = n_cached()
+            with watch_components() as seen:
+                frame = components(df, len(edges) - distributed)
+            assert canon_metrics(seen)["canon.distributed"] == distributed
+            assert n_cached() - before <= 1
+            assert typed(frame) == typed(df.toDF("node", "component"))
+            rows = frame.collect()
+            assert {r["node"]: r["component"] for r in rows} == want
+            assert len(rows) == len(want)
+            assert {type(v) for r in rows for v in r} == {type(edges[0][0])}
+            _release_local_checkpoint(frame)
+    for schema in ("src string, dst string", "src bigint, dst bigint"):
+        empty = spark.createDataFrame([], schema)
+        frame = components(empty)
+        assert typed(frame) == typed(empty.toDF("node", "component"))
+        assert frame.count() == 0
 
 
 def test_watch_components_sees_distributed_surface_graph(spark):
@@ -126,8 +148,9 @@ def test_watch_components_sees_distributed_surface_graph(spark):
         ("https://t/a", 1, "s", "Quizzle", "PER", 0, 1, "quizzle", None),
     ], schema=schemas.RESOLVED)
     with watch_components() as seen:
-        comp = surface_components(resolved, resolved, collect_threshold=0)
+        moved = surface_components(resolved, resolved, collect_threshold=0)
     assert canon_metrics(seen)["canon.distributed"] == 1
-    assert {r["surf"]: r["component"] for r in comp.collect()} == {
-        "s:quizzle": "s:orla quizzle", "s:orla quizzle": "s:orla quizzle"}
-    _release_local_checkpoint(comp)
+    want = _surface_oracle(resolved)
+    assert want == {"s:quizzle": "s:orla quizzle"}
+    assert {r["node"]: r["component"] for r in moved.collect()} == want
+    _release_local_checkpoint(moved)

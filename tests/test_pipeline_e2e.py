@@ -22,6 +22,7 @@ from kgforge.pipeline import (
     stage_mentions,
     stage_ner_score,
 )
+from test_canon import _moved, _surface_oracle
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +64,28 @@ def alias_collects(monkeypatch):
     return calls
 
 
+def _moved_by(call) -> tuple[dict, float]:
+    """Run a CC producer under perfbench's spy. -> (node -> component of
+    the frame it answers, its ``canon.distributed``); the frame's
+    checkpoint, if any, is released."""
+    from kgforge.canon import _release_local_checkpoint
+    from perfbench.workloads import canon_metrics, watch_components
+
+    with watch_components() as seen:
+        moved = call()
+    mapping = {r["node"]: r["component"] for r in moved.collect()}
+    _release_local_checkpoint(moved)
+    return mapping, canon_metrics(seen)["canon.distributed"]
+
+
+# 'Orla Quizzle' is not in the alias dictionary: the bare 'Quizzle'
+# surfaces move to its component
+_QUIZZLE_PAGES = {
+    "https://t/a": "t\nOrla Quizzle lives in Paris. Quizzle works for Acme Corp.",
+    "https://t/b": "t\nQuizzle lives in Berlin.",
+}
+
+
 def _pages_df(spark, texts: dict[str, str]):
     """One English page per (url, text), its html wrapping the text."""
     return spark.createDataFrame(
@@ -75,8 +98,9 @@ def test_surface_graph_driver_edges_match_jvm_edges(spark):
     """kg-web-sized graphs carry no coref edge, so the coref cases are
     hand-built: the driver-side edges must equal the JVM edge frame, and
     every gate outcome (rows fit; rows overflow but edges fit; edges
-    overflow -> distributed) must give union-find's mapping over it."""
-    from kgforge.canon import _release_local_checkpoint, cc_unionfind
+    overflow -> distributed) must give union-find's moved surfaces over
+    it."""
+    from kgforge.canon import cc_unionfind
     from kgforge.pipeline import (_graph_rows, _surface_edge_frame,
                                   _surface_edges, surface_components)
 
@@ -120,13 +144,15 @@ def test_surface_graph_driver_edges_match_jvm_edges(spark):
     }
     assert cc_unionfind(jvm_edges) == expected
 
-    assert surface_components(resolved, resolved) == expected
+    moved = _moved(expected)
+    assert moved == {"s:quizzle": "s:orla quizzle", "s:lena drax": "s:drax"}
+
+    assert _moved_by(lambda: surface_components(resolved, resolved)) == (moved, 0)
     # 7 rows overflow, 6 edges fit: still the driver branch
-    assert surface_components(resolved, collect_threshold=6) == expected
-    distributed = surface_components(resolved, resolved, collect_threshold=5)
-    assert not isinstance(distributed, dict)
-    assert {r["surf"]: r["component"] for r in distributed.collect()} == expected
-    _release_local_checkpoint(distributed)
+    assert _moved_by(lambda: surface_components(
+        resolved, collect_threshold=6)) == (moved, 0)
+    assert _moved_by(lambda: surface_components(
+        resolved, resolved, collect_threshold=5)) == (moved, 1)
     with pytest.raises(ValueError):
         surface_components(resolved, resolved.select("*"))
 
@@ -139,36 +165,39 @@ def test_in_memory_run_collects_alias_map_once(spark, tiny_pages_df, alias_df,
     assert len(alias_collects) == 1
 
 
-def test_distributed_cc_branch_matches_driver_unionfind(spark, tiny_pages_df,
-                                                        alias_df, cfg):
+def test_distributed_cc_branch_matches_driver_unionfind(spark, alias_df, cfg):
     """The at-scale fallback (surface graph > collect_threshold -> the
     distributed large-star/small-star operator) must produce exactly the
-    driver-side union-find mapping, and leave only that mapping cached."""
+    driver-side union-find moved surfaces, a non-empty set on these pages,
+    and leave only that mapping cached."""
+    from kgforge.canon import _release_local_checkpoint
     from kgforge.pipeline import surface_components
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    ner = stage_ner_score(
-        repartition_by_length(stage_extract_sentences(tiny_pages_df), cfg),
-        cfg).persist()
+    def mapping(moved):
+        return {r["node"]: r["component"] for r in moved.collect()}
+
+    ner = stage_ner_score(repartition_by_length(stage_extract_sentences(
+        _pages_df(spark, _QUIZZLE_PAGES)), cfg), cfg).persist()
     resolved = stage_link(stage_mentions(ner), alias_df, cfg).persist()
-    resolved.count()
+    want = _surface_oracle(resolved)
+    assert want
 
     first = _last_execution_id(spark)
-    comp_dict = surface_components(resolved, resolved)
-    assert isinstance(comp_dict, dict) and comp_dict
+    driver = surface_components(resolved, resolved)
     # the driver branch is one Arrow download: one SQL execution
     assert _last_execution_id(spark) - first == 1
+    assert mapping(driver) == want
 
     before = n_cached()
-    comp_df = surface_components(resolved, resolved, collect_threshold=0)
-    assert not isinstance(comp_df, dict)
-    mapping = {r["surf"]: r["component"] for r in comp_df.collect()}
-    assert mapping == comp_dict
+    distributed = surface_components(resolved, resolved, collect_threshold=0)
+    assert mapping(distributed) == want
     # cache discipline: edges and every retired CC iteration state are
     # freed eagerly; only the materialized mapping itself remains
     assert n_cached() - before <= 1, (n_cached(), before)
+    _release_local_checkpoint(distributed)
     ner.unpersist()
     resolved.unpersist()
 
@@ -358,27 +387,24 @@ def test_fused_resolution_matches_stage_link(spark, tiny_pages_df, alias_df,
 def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     """'Orla Quizzle' (not in the alias dict) and two bare 'Quizzle'
     mentions, one of them on another page, must all share one canonical id
-    via connected components: in both forms of surface_components' answer
-    (distributed frame == driver dict), and in the triples of run_pipeline
-    on both CC branches, whose moved surfaces stage 5 joins in."""
+    via connected components: in surface_components' moved surfaces on
+    both CC branches (each equal to union-find's), and in the triples of
+    run_pipeline on both CC branches, whose moved surfaces stage 5 joins
+    in."""
     import kgforge.pipeline as pl
-    from kgforge.canon import _release_local_checkpoint
 
-    pages_df = _pages_df(spark, {
-        "https://t/a": "t\nOrla Quizzle lives in Paris. Quizzle works for Acme Corp.",
-        "https://t/b": "t\nQuizzle lives in Berlin.",
-    })
+    pages_df = _pages_df(spark, _QUIZZLE_PAGES)
     resolved = stage_link(stage_mentions(stage_ner_score(
         stage_extract_sentences(pages_df), cfg)), alias_df, cfg).persist()
     mentions = resolved.collect()
-    comp = pl.surface_components(resolved, collect_threshold=0)
-    mapping = {r["surf"]: r["component"] for r in comp.collect()}
-    _release_local_checkpoint(comp)
-    assert mapping == pl.surface_components(resolved)
+    mapping = _surface_oracle(resolved)
+    assert _moved_by(lambda: pl.surface_components(resolved)) == (mapping, 0)
+    assert _moved_by(lambda: pl.surface_components(
+        resolved, collect_threshold=0)) == (mapping, 1)
     resolved.unpersist()
     quizzle = [r for r in mentions if "Quizzle" in r["word"]]
     assert len(quizzle) == 3 and all(r["entity_id"] is None for r in quizzle)
-    canonical = {mapping["s:" + r["norm"]] for r in quizzle}
+    canonical = {mapping.get(s, s) for s in ("s:" + r["norm"] for r in quizzle)}
     assert len(canonical) == 1, mapping
     # Paris/Berlin resolved normally
     locs = {r["word"]: r["entity_id"] for r in mentions

@@ -205,6 +205,9 @@ def test_stage_triples_without_moved_surface_has_no_join(spark, alias_df):
     """Stage 5 joins only surfaces whose component is another surface.
     When none moved, the joined frame is an empty LocalRelation and the
     optimizer drops both joins; a moved surface brings them back."""
+    import pyarrow as pa
+
+    from kgforge.canon import moved_frame
     from kgforge.config import PipelineConfig
     from kgforge.pipeline import (stage_extract_sentences, stage_ner_score,
                                   stage_triples)
@@ -212,11 +215,12 @@ def test_stage_triples_without_moved_surface_has_no_join(spark, alias_df):
     ner = stage_ner_score(
         stage_extract_sentences(_pipeline_pages(spark, 560, 570)), cfg, alias_df)
 
-    def optimized(comp) -> str:
-        return stage_triples(ner, comp)._jdf.queryExecution().optimizedPlan().toString()
+    def optimized(mapping) -> str:
+        moved = moved_frame(spark, mapping, pa.string())
+        return stage_triples(ner, moved)._jdf.queryExecution().optimizedPlan().toString()
 
-    for comp in ({}, {"s:quizzle": "s:quizzle"}):
-        assert "Join" not in optimized(comp), comp
+    for mapping in ({}, {"s:quizzle": "s:quizzle"}):
+        assert "Join" not in optimized(mapping), mapping
     assert "Join" in optimized({"s:quizzle": "s:orla quizzle"})
 
 
@@ -364,14 +368,19 @@ def test_exact_quantiles_shares_median_rank_shape(spark):
 
 
 def test_neardup_driver_branch_maps_without_shuffle(spark):
-    """Under the collect threshold the cluster assignment is a broadcast
-    dict + one Arrow projection over doc_id: ZERO Exchange and no Join in
-    the returned frame's plan (the pair-graph jobs ran eagerly)."""
+    """Under the collect threshold the moved docs come back as a
+    LocalRelation that the doc_id left join broadcasts: no shuffle of the
+    corpus and no Python eval in the returned frame's plan (the pair-graph
+    jobs ran eagerly)."""
+    import re
+
     from kgforge.queries import q_neardup_clusters
     plan = _plan(q_neardup_clusters(spark, SF))
-    assert "Exchange" not in plan, plan
-    assert "Join" not in plan, plan
-    assert "ArrowEvalPython" in plan or "EvalPython" in plan, plan
+    assert "hashpartitioning" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "EvalPython" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert re.search(r"BroadcastExchange \(\d+\)\n\s*\+- LocalTableScan", plan), plan
 
 
 def test_doc_repetition_is_map_side_only(spark):

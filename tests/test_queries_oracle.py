@@ -204,6 +204,32 @@ def test_neardup_clusters_with_no_pairs(spark, tmp_path):
     assert rows == {0: (0, True), 1: (1, True), 2: (2, True)}
 
 
+def test_neardup_clusters_exact_above_2_53(spark, tmp_path, monkeypatch):
+    """Doc ids past 2^53 must come back exact on both CC branches: any
+    float64 step on the way would round 2^53 + 1 to 2^53 and 2^53 + 3 to
+    2^53 + 4. Two duplicate-text clusters and one singleton."""
+    import pandas as pd
+    from kgforge import queries as q
+
+    base = 2 ** 53
+    texts = {base + 1: "alpha beta gamma delta epsilon zeta",
+             base + 3: "alpha beta gamma delta epsilon zeta",
+             base + 2: "one two three four five six seven",
+             base + 7: "red orange yellow green blue indigo",
+             base + 5: "red orange yellow green blue indigo"}
+    pd.DataFrame([
+        {"doc_id": i, "text": t, "lang": "en", "source": "t", "n_chars": len(t)}
+        for i, t in texts.items()]).to_parquet(f"{tmp_path}/documents.parquet")
+    want = {base + 1: (base + 1, True), base + 3: (base + 1, False),
+            base + 2: (base + 2, True),
+            base + 5: (base + 5, True), base + 7: (base + 5, False)}
+    for threshold in (q.canon.COLLECT_THRESHOLD, 0):
+        monkeypatch.setattr(q.canon, "COLLECT_THRESHOLD", threshold)
+        rows = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+                for r in q.q_neardup_clusters(spark, str(tmp_path)).collect()}
+        assert rows == want, threshold
+
+
 def test_new_event_queries_on_degenerate_events(spark, tmp_path):
     """Edges for the event-analytics family: no 'view' events (funnel all
     zeros), a single-event type (median of one), and event types absent
