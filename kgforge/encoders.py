@@ -126,10 +126,13 @@ class StandInTokenClassifier:
         label_ids = self._lookup(input_ids)
         if continuation_mask is not None:
             # continuation positions inherit the label of the word-initial
-            # piece to their left (what a trained contextual model does)
-            for col in range(1, t):
-                inherit = continuation_mask[:, col].astype(bool)
-                label_ids[inherit, col] = label_ids[inherit, col - 1]
+            # piece to their left (what a trained contextual model does):
+            # each column reads the last non-continuation column at or
+            # before it; column 0 always reads itself
+            cols = np.arange(t)
+            anchor = np.where(continuation_mask.astype(bool), 0, cols)
+            anchor = np.maximum.accumulate(anchor, axis=1)
+            label_ids = np.take_along_axis(label_ids, anchor, axis=1)
         rows = np.arange(b)[:, None], np.arange(t)[None, :]
         bump = np.where(label_ids == 0, 0, 8.0)
         logits[rows[0], rows[1], label_ids] += bump

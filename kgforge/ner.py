@@ -2,10 +2,18 @@
 
 Pure-Python/numpy port of the reference's pipeline semantics (NOT its code):
 
-- ``predict_tokens``   <- TokenClassificationModel::predict
-  (src/pipelines/token_classification.rs:957-1042): featurize, micro-batch,
-  pad to batch max, forward, softmax, argmax, decode owned positions only,
-  then optional sub-token consolidation.
+- ``featurize`` + ``forward_spans`` <- TokenClassificationModel::predict
+  (src/pipelines/token_classification.rs:957-1042): featurize a whole batch
+  of texts into flat arrays (sliding windows and ownership flags as
+  ``tokenization.generate_features`` builds them per text), micro-batch, pad
+  to batch max, forward, softmax, argmax.
+- ``predict_entity_lists`` decodes those arrays by mask arithmetic: owned
+  non-special positions, sub-word groups and their score product, BIOES
+  over the runs of non-O words; ``Entity`` objects are built last. The
+  fused Spark eval (``pipeline.stage_ner_score``) calls it once per Arrow
+  batch.
+- ``predict_tokens`` decodes the same arrays into per-text ``Token`` lists
+  (owned positions only), then optional sub-token consolidation.
 - ``consolidate_tokens`` <- token_classification.rs:1137-1202 (score product
   with 1-score for disagreeing sub-tokens; label aggregation First/Last/Mode
   with the Mode tie-break by (count, max score), :1218-1232).
@@ -15,8 +23,9 @@ Pure-Python/numpy port of the reference's pipeline semantics (NOT its code):
   joined by " ", score = product of token scores, offset = [first.begin,
   last.end].
 
-The Spark stage at the bottom wraps ``predict_tokens`` in ``mapInPandas`` —
-one encoder per Python worker, Arrow batches in/out, no per-row Python.
+The per-text ``consolidate_tokens`` / ``consolidate_entities`` are the
+reference ``predict_entity_lists`` is tested against (bit-identical
+scores); ``predict_pos`` uses them.
 """
 
 from __future__ import annotations
@@ -30,19 +39,21 @@ import numpy as np
 from .config import NER_LABELS, PipelineConfig
 from .encoders import StandInTokenClassifier, softmax
 from .tokenization import (
+    CLS_ID,
     MASK_CONTINUATION,
     MASK_SPECIAL,
     PAD_ID,
-    InputFeature,
-    generate_features,
+    SEP_ID,
+    tokenize_with_offsets,
 )
 
 
 @dataclass(slots=True)
 class Token:
-    """Reference Token struct (token_classification.rs:150-171).
-    slots=True: created once per decoded sub-word token (130k per 600
-    pages) — slot storage measurably cuts allocation + attribute cost."""
+    """Reference Token struct (token_classification.rs:150-171): what
+    ``predict_tokens`` returns per owned position, for the per-text
+    consolidation and POS tagging. The NER batch path
+    (``predict_entity_lists``) builds none."""
     text: str
     score: float
     label: str
@@ -65,23 +76,154 @@ class Entity:
     end: int
 
 
-def _pad_features(
-    features: list[InputFeature],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Pad ids to max-in-batch; attention mask 1 on real tokens
-    (port of pad_features, token_classification.rs:1044-1090). Also returns
-    the continuation mask the stand-in encoder uses for word-consistent
-    continuation labels."""
-    max_len = max(len(f.input_ids) for f in features)
-    ids = np.full((len(features), max_len), PAD_ID, dtype=np.int64)
-    mask = np.zeros((len(features), max_len), dtype=np.int64)
-    cont = np.zeros((len(features), max_len), dtype=np.int64)
-    for i, f in enumerate(features):
-        n = len(f.input_ids)
-        ids[i, :n] = f.input_ids
-        mask[i, :n] = 1
-        cont[i, :n] = [1 if m == MASK_CONTINUATION else 0 for m in f.masks]
-    return ids, mask, cont
+@dataclass(slots=True)
+class Features:
+    """Every sliding-window span of a batch of texts as flat arrays: span
+    ``f`` (spans in text order, then window order) holds positions
+    ``start[f]:start[f + 1]``. One span is one reference InputFeature
+    (token_classification.rs:193-207)."""
+    ids: np.ndarray      # int64 piece ids, [CLS] ... [SEP]
+    begins: np.ndarray   # int64 char offsets, -1 on specials
+    ends: np.ndarray     # int64, -1 on specials
+    masks: np.ndarray    # int64 MASK_*
+    owned: np.ndarray    # bool: the reference_feature flag
+    column: np.ndarray   # int64 position within its span
+    start: np.ndarray    # int64 (n_spans + 1,)
+    example: np.ndarray  # int64 (n_spans,) text index of each span
+
+
+def featurize(texts: list[str], cfg: PipelineConfig, tokenizer=None) -> Features:
+    """``generate_features`` (token_classification.rs:808-928) for a whole
+    batch at once. Only the tokenizer and the window loop run per text;
+    special tokens, offsets and ownership flags are index arithmetic over
+    the concatenated pieces."""
+    max_content, stride = cfg.max_content_length, cfg.doc_stride
+    ids: list[int] = []
+    begins: list[int] = []
+    ends: list[int] = []
+    masks: list[int] = []
+    lo: list[int] = []       # window [lo, hi) over its text's pieces
+    hi: list[int] = []
+    total: list[int] = []
+    example: list[int] = []
+    base: list[int] = []     # offset of the window's text in the piece lists
+    for ex, text in enumerate(texts):
+        tok = (tokenizer.tokenize_with_offsets(text) if tokenizer is not None
+               else tokenize_with_offsets(text))
+        n, offset = len(tok.ids), len(ids)
+        ids += tok.ids
+        begins += tok.begins
+        ends += tok.ends
+        masks += tok.masks
+        s = spans = 0
+        while spans * stride < n:
+            e = min(s + max_content, n)
+            lo.append(s)
+            hi.append(e)
+            total.append(n)
+            example.append(ex)
+            base.append(offset)
+            spans += 1
+            if e == n:
+                break
+            s = e - stride
+    lo_a = np.array(lo, dtype=np.int64)
+    hi_a = np.array(hi, dtype=np.int64)
+    width = hi_a - lo_a + 2                       # [CLS] content [SEP]
+    start = np.zeros(len(lo) + 1, dtype=np.int64)
+    np.cumsum(width, out=start[1:])
+    span = np.repeat(np.arange(len(lo)), width)
+    column = np.arange(start[-1]) - start[span]
+    first = column == 0
+    last = column == (width - 1)[span]
+    special = first | last
+    src = np.where(special, 0, (np.array(base, dtype=np.int64) + lo_a - 1)[span]
+                   + column)
+
+    def gather(values: list[int], fill: int) -> np.ndarray:
+        out = np.array(values, dtype=np.int64)[src]
+        out[special] = fill
+        return out
+
+    flat_ids = gather(ids, CLS_ID)
+    flat_ids[last] = SEP_ID
+    # get_reference_feature_flag (:885-928): an interior window edge disowns
+    # doc_stride/2 pieces plus its special token (content is never special)
+    half = stride // 2
+    start_cut = np.where(lo_a > 0, half + 1, 0)
+    end_cut = np.where(hi_a < np.array(total, dtype=np.int64),
+                       width - half - 1, width)
+    return Features(
+        ids=flat_ids, begins=gather(begins, -1), ends=gather(ends, -1),
+        masks=gather(masks, MASK_SPECIAL),
+        owned=(column >= start_cut[span]) & (column < end_cut[span]),
+        column=column, start=start,
+        example=np.array(example, dtype=np.int64))
+
+
+def _piece_texts(feats: Features, texts: list[str], spans: range,
+                 width: int) -> list[list[str]]:
+    """Per-position piece texts (``##`` on continuations, "" on specials
+    and padding) for encoders that set ``needs_token_texts``."""
+    out = []
+    for f in spans:
+        text = texts[feats.example[f]]
+        p0, p1 = feats.start[f], feats.start[f + 1]
+        row = [("##" if m == MASK_CONTINUATION else "") + text[b:e]
+               if b >= 0 else ""
+               for b, e, m in zip(feats.begins[p0:p1].tolist(),
+                                  feats.ends[p0:p1].tolist(),
+                                  feats.masks[p0:p1].tolist())]
+        out.append(row + [""] * (width - len(row)))
+    return out
+
+
+def forward_spans(feats: Features, texts: list[str], encoder,
+                  cfg: PipelineConfig) -> tuple[np.ndarray, np.ndarray]:
+    """Micro-batches of ``cfg.batch_size`` spans, each padded to its longest
+    span (pad_features, token_classification.rs:1044-1090), through
+    ``encoder.forward``, softmax and argmax (:991-1000). -> (argmax label
+    index, its softmax score) per flat position."""
+    n_spans = len(feats.example)
+    label = np.zeros(len(feats.ids), dtype=np.int64)
+    score = np.zeros(len(feats.ids), dtype=np.float64)
+    needs_texts = getattr(encoder, "needs_token_texts", False)
+    for f0 in range(0, n_spans, cfg.batch_size):
+        f1 = min(f0 + cfg.batch_size, n_spans)
+        p0, p1 = feats.start[f0], feats.start[f1]
+        width = np.diff(feats.start[f0:f1 + 1])
+        rows = np.repeat(np.arange(f1 - f0), width)
+        cols = feats.column[p0:p1]
+        shape = (f1 - f0, int(width.max()))
+        ids = np.full(shape, PAD_ID, dtype=np.int64)
+        ids[rows, cols] = feats.ids[p0:p1]
+        attn = np.zeros(shape, dtype=np.int64)
+        attn[rows, cols] = 1
+        cont = np.zeros(shape, dtype=np.int64)
+        cont[rows, cols] = feats.masks[p0:p1] == MASK_CONTINUATION
+        piece_texts = (_piece_texts(feats, texts, range(f0, f1), shape[1])
+                       if needs_texts else None)
+        scores = softmax(encoder.forward(ids, attn, cont, piece_texts), axis=-1)
+        li = np.argmax(scores, axis=-1)[rows, cols]
+        label[p0:p1] = li
+        score[p0:p1] = scores[rows, cols, li]
+    return label, score
+
+
+def _featurize_forward(texts: list[str], encoder, cfg: PipelineConfig
+                       ) -> tuple[Features, np.ndarray, np.ndarray]:
+    from .workers import get_tokenizer
+    kind = getattr(cfg, "tokenizer", "chunk")
+    enc_kind = getattr(encoder, "tokenizer_kind", None)
+    if enc_kind is not None and enc_kind != kind:
+        # the gazetteer is keyed on ITS tokenizer's pieces; featurizing with
+        # a different one silently misses every entity (all-O output) —
+        # refuse loudly instead
+        raise ValueError(
+            f"encoder gazetteer keyed for tokenizer {enc_kind!r} but "
+            f"cfg.tokenizer={kind!r}")
+    feats = featurize(texts, cfg, get_tokenizer(kind))
+    return (feats, *forward_spans(feats, texts, encoder, cfg))
 
 
 def predict_tokens(
@@ -94,85 +236,134 @@ def predict_tokens(
 ) -> list[list[Token]]:
     """Port of TokenClassificationModel::predict (token_classification.rs:957-1042)."""
     labels = labels or NER_LABELS
-    from .workers import get_tokenizer
-    kind = getattr(cfg, "tokenizer", "chunk")
-    enc_kind = getattr(encoder, "tokenizer_kind", None)
-    if enc_kind is not None and enc_kind != kind:
-        # the gazetteer is keyed on ITS tokenizer's pieces; featurizing with
-        # a different one silently misses every entity (all-O output) —
-        # refuse loudly instead
-        raise ValueError(
-            f"encoder gazetteer keyed for tokenizer {enc_kind!r} but "
-            f"cfg.tokenizer={kind!r}")
-    tokenizer = get_tokenizer(kind)
-    features: list[InputFeature] = []
-    for example_index, text in enumerate(texts):
-        features.extend(
-            generate_features(text, example_index, cfg.max_length,
-                              cfg.n_special_tokens, tokenizer)
-        )
+    feats, label, score = _featurize_forward(texts, encoder, cfg)
+    keep = feats.owned if return_special else (
+        feats.owned & (feats.masks != MASK_SPECIAL))
+    sel = np.flatnonzero(keep)
+    span = np.repeat(np.arange(len(feats.example)), np.diff(feats.start))[sel]
+    # word_index counts the word-initial kept positions of the span so far
+    # (the reference restarts it in every span)
+    initial = feats.masks[sel] != MASK_CONTINUATION
+    seen = np.cumsum(initial)
+    span_first = np.ones(len(sel), dtype=bool)
+    span_first[1:] = span[1:] != span[:-1]
+    word_index = seen - np.maximum.accumulate(
+        np.where(span_first, seen - initial, 0))
 
     example_tokens: list[list[Token]] = [[] for _ in texts]
-    for start in range(0, len(features), cfg.batch_size):
-        batch = features[start:start + cfg.batch_size]
-        ids, attn, cont = _pad_features(batch)
-        if getattr(encoder, "needs_token_texts", False):
-            piece_texts = [
-                [
-                    ("##" if f.masks[p] == MASK_CONTINUATION else "")
-                    + texts[f.example_index][f.begins[p]:f.ends[p]]
-                    if f.begins[p] >= 0 else ""
-                    for p in range(len(f.input_ids))
-                ] + [""] * (ids.shape[1] - len(f.input_ids))
-                for f in batch
-            ]
-        else:
-            piece_texts = None
-        logits = encoder.forward(ids, attn, cont, piece_texts)
-        scores = softmax(logits, axis=-1)
-        label_idx = np.argmax(scores, axis=-1)
-        # gather each position's winning score in ONE vectorized pass (the
-        # per-token scores[bi, pos, li] numpy indexing dominated this loop);
-        # .tolist() hands the decode loop plain Python ints/floats with the
-        # identical float64 bits
-        top_scores = np.take_along_axis(
-            scores, label_idx[..., None], axis=-1)[..., 0]
-        for bi, feat in enumerate(batch):
-            word_idx = 0
-            text = texts[feat.example_index]
-            tlen = len(text)
-            toks = example_tokens[feat.example_index]
-            li_row = label_idx[bi].tolist()
-            sc_row = top_scores[bi].tolist()
-            fmasks, fbegins, fends = feat.masks, feat.begins, feat.ends
-            for pos, owned in enumerate(feat.reference_feature):
-                if not owned:
-                    continue
-                mask = fmasks[pos]
-                if mask == MASK_SPECIAL and not return_special:
-                    continue
-                if mask != MASK_CONTINUATION:
-                    word_idx += 1
-                li = li_row[pos]
-                begin, end = fbegins[pos], fends[pos]
-                # decode_token: char-offset slice of the original string
-                # (token_classification.rs:1108-1117), end clamped to len
-                tok_text = text[begin:min(end, tlen)] if begin >= 0 else ""
-                toks.append(Token(
-                    text=tok_text,
-                    score=sc_row[pos],
-                    label=labels[li],
-                    label_index=li,
-                    sentence=feat.example_index,
-                    index=pos,
-                    word_index=word_idx,
-                    begin=begin,
-                    end=end,
-                    mask=mask,
-                ))
+    for ex, pos, wi, li, sc, begin, end, mask in zip(
+            feats.example[span].tolist(), feats.column[sel].tolist(),
+            word_index.tolist(), label[sel].tolist(), score[sel].tolist(),
+            feats.begins[sel].tolist(), feats.ends[sel].tolist(),
+            feats.masks[sel].tolist()):
+        text = texts[ex]
+        example_tokens[ex].append(Token(
+            # decode_token: char-offset slice of the original string
+            # (token_classification.rs:1108-1117), end clamped to len
+            text=text[begin:min(end, len(text))] if begin >= 0 else "",
+            score=sc, label=labels[li], label_index=li, sentence=ex,
+            index=pos, word_index=wi, begin=begin, end=end, mask=mask))
     if consolidate_sub_tokens:
         return [consolidate_tokens(toks, cfg.label_aggregation) for toks in example_tokens]
     return example_tokens
+
+
+def _word_labels(aggregation: str, label: np.ndarray, score: np.ndarray,
+                 word_of: np.ndarray, word_first: np.ndarray,
+                 n_labels: int) -> np.ndarray:
+    """``_consolidate_label`` for every word at once."""
+    if aggregation == "first":
+        return label[word_first]
+    if aggregation == "last":
+        return label[np.append(word_first[1:], len(label)) - 1]
+    # mode: max by (count, max score); a full tie goes to the label seen
+    # first, as max() over the insertion-ordered stats dict does
+    n_words = len(word_first)
+    key = word_of * n_labels + label
+    count = np.bincount(key, minlength=n_words * n_labels).reshape(n_words, n_labels)
+    best = np.full(n_words * n_labels, -np.inf)
+    np.maximum.at(best, key, score)
+    seen = np.full(n_words * n_labels, len(key))
+    np.minimum.at(seen, key, np.arange(len(key)))
+    tied = count == count.max(axis=1, keepdims=True)
+    best = np.where(tied, best.reshape(n_words, n_labels), -np.inf)
+    tied &= best == best.max(axis=1, keepdims=True)
+    return np.where(tied, seen.reshape(n_words, n_labels), len(key)).argmin(axis=1)
+
+
+def predict_entity_lists(texts: list[str], encoder,
+                         cfg: PipelineConfig) -> list[list[Entity]]:
+    """NER entities per text: the same lists as ``consolidate_entities(t)``
+    for ``t`` in ``predict_tokens(texts, encoder, cfg)``, decoded on the
+    flat arrays instead of ``Token`` objects. The owned non-special pieces
+    form words (a word starts at every non-continuation piece; a text's
+    first owned piece is always one); a word's label follows
+    ``cfg.label_aggregation`` and its score is the ``consolidate_tokens``
+    product, one ``np.multiply.reduceat``. The BIOES machine then walks
+    only the non-O words, and ``Entity`` objects are built last."""
+    aggregation = cfg.label_aggregation
+    if aggregation not in ("first", "last", "mode"):
+        raise ValueError(f"unknown label aggregation {aggregation!r}")
+    labels = NER_LABELS
+    feats, label, score = _featurize_forward(texts, encoder, cfg)
+    sel = np.flatnonzero(feats.owned & (feats.masks != MASK_SPECIAL))
+    entities: list[list[Entity]] = [[] for _ in texts]
+    if not len(sel):
+        return entities
+    label, score = label[sel], score[sel]
+    starts = feats.masks[sel] != MASK_CONTINUATION
+    word_first = np.flatnonzero(starts)
+    word_of = np.cumsum(starts) - 1
+    word_label = _word_labels(aggregation, label, score, word_of, word_first,
+                              len(labels))
+    word_score = np.multiply.reduceat(
+        np.where(label == word_label[word_of], score, 1.0 - score), word_first)
+
+    # BIOES over the runs of non-O words; _tag_of raises on an invalid tag
+    # as consolidate_entities does
+    tags, classes = {}, {}
+    inside = np.zeros(len(labels), dtype=bool)
+    for li in np.unique(word_label).tolist():
+        tags[li], classes[li] = _tag_of(labels[li]), _class_of(labels[li])
+        inside[li] = tags[li] != "O"
+    word_example = np.repeat(feats.example, np.diff(feats.start))[sel[word_first]]
+    chunk = np.flatnonzero(inside[word_label])
+    spans: list[tuple[int, int, str]] = []   # (first word, end word, class)
+    opened: tuple[int, str, str] | None = None
+    prev = prev_ex = -1
+    for w, li, ex in zip(chunk.tolist(), word_label[chunk].tolist(),
+                         word_example[chunk].tolist()):
+        tag, cls = tags[li], classes[li]
+        if opened is not None and (
+                w != prev + 1 or ex != prev_ex or tag in ("B", "S")
+                or opened[1] in ("E", "S") or opened[2] != cls):
+            spans.append((opened[0], prev + 1, opened[2]))
+            opened = None
+        if opened is None:
+            opened = (w, tag, cls)
+        prev, prev_ex = w, ex
+    if opened is not None:
+        spans.append((opened[0], prev + 1, opened[2]))
+    if not spans:
+        return entities
+
+    bounds = np.array([(s, e) for s, e, _ in spans], dtype=np.int64).ravel()
+    ent_scores = np.multiply.reduceat(np.append(word_score, 1.0), bounds)[::2]
+    begins, ends = feats.begins[sel].tolist(), feats.ends[sel].tolist()
+    starts_l = starts.tolist()
+    word_first_l = np.append(word_first, len(sel)).tolist()
+    for (w0, w1, cls), sc in zip(spans, ent_scores.tolist()):
+        ex = int(word_example[w0])
+        text = texts[ex]
+        tlen = len(text)
+        p0, p1 = word_first_l[w0], word_first_l[w1]
+        # words joined by " ", a word's pieces concatenated (ner.rs:404-408)
+        word = "".join((" " if starts_l[p] and p > p0 else "")
+                       + text[begins[p]:min(ends[p], tlen)]
+                       for p in range(p0, p1))
+        entities[ex].append(Entity(word=word, score=sc, label=cls,
+                                   begin=begins[p0], end=ends[p1 - 1]))
+    return entities
 
 
 def predict_pos(texts: list[str], cfg: PipelineConfig, seed: int = 42) -> list[list[dict]]:

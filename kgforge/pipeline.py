@@ -8,7 +8,9 @@ Physical design (SURVEY §4):
 - Two Python evals per run, since every chained Python eval holds its own
   worker and every Spark stage holding one pays a fixed boundary cost:
   stage_extract_sentences (stages 1 + 2a) and stage_ner_score (stages 2b
-  to 4: NER, candidates, NLI scoring and entity resolution). Linking's
+  to 4: NER, candidates, NLI scoring and entity resolution). NER decodes
+  each Arrow batch as flat numpy arrays (ner.predict_entity_lists), with
+  no per-token Python objects. Linking's
   output is a JVM explode of the fused eval (stage_mentions), and stage 5
   (stage_triples) is a JVM join plus the dedup aggregation on both
   connected-components branches. Models are per-worker singletons
@@ -34,13 +36,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import schemas
 from .config import PipelineConfig
 from .extract import extract_text, extractor_hash
-from .ner import consolidate_entities, predict_tokens
+from .ner import predict_entity_lists
 from .link import normalize_mention, rerank_ambiguous
 from . import canon
 from .canon import _release_local_checkpoint
 from .checkpoint import checkpointed
 from .tokenization import _SUBWORD_CHUNK, _WORD_RE, split_sentences
-from .triples import generate_candidates, score_candidates
+from .triples import Candidate, generate_candidates, score_candidates
 from .workers import get_embedder, get_nli, get_token_classifier
 
 # Part of every checkpoint's identity: a workdir written with other stage
@@ -125,6 +127,11 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
     stream crosses the JVM<->Python boundary once for all per-sentence
     work; downstream stages are pure-JVM explodes, joins and aggregations.
 
+    NER runs once per Arrow batch (``ner.predict_entity_lists``): the
+    batch is featurized, forwarded and decoded as flat arrays, and only
+    the entities become Python objects. Candidates stay ``Candidate``
+    objects until a kept one becomes its output dict.
+
     Every entity gets its ``norm`` and, against the ``alias_dict`` table
     (collected once and broadcast), its ``entity_id``: all
     entities of an Arrow batch resolve in one ``_resolve_norms`` call, each
@@ -145,28 +152,26 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
         amap = bc.value if bc is not None else {}
         for pdf in batches:
             texts = pdf["sentence"].tolist()
-            token_lists = predict_tokens(texts, enc, local_cfg)
             all_entities = []
-            row_cands: list[list[dict]] = []
+            row_cands: list[list[Candidate]] = []
             flat_prem: list[str] = []
             flat_hyp: list[str] = []
             ent_ctx: list[str] = []
-            for text, toks in zip(texts, token_lists):
+            for text, ents in zip(texts, predict_entity_lists(texts, enc, local_cfg)):
                 eds = [{"word": e.word, "label": e.label, "score": e.score,
                         "begin": e.begin, "end": e.end,
                         "norm": normalize_mention(e.word)}
-                       for e in consolidate_entities(toks)]
+                       for e in ents]
                 all_entities.append(eds)
                 ent_ctx += [text] * len(eds)
                 if len(eds) >= 2:
-                    cands = [asdict(c) for c in
-                             generate_candidates(eds, local_cfg.max_pair_distance)]
+                    cands = generate_candidates(eds, local_cfg.max_pair_distance)
                 else:
                     cands = []
                 row_cands.append(cands)
                 for c in cands:
                     flat_prem.append(text)
-                    flat_hyp.append(c["hypothesis"])
+                    flat_hyp.append(c.hypothesis)
             flat_ents = [e for eds in all_entities for e in eds]
             ids = _resolve_norms([e["norm"] for e in flat_ents], ent_ctx, amap, emb)
             for e, eid in zip(flat_ents, ids):
@@ -185,9 +190,9 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
                     sc = float(scores[pos]); pos += 1
                     if sc >= local_cfg.relation_threshold:
                         kept.append({
-                            **c, "score": sc,
-                            "subj_id": arg_id[c["subj_begin"], c["subj_end"]],
-                            "obj_id": arg_id[c["obj_begin"], c["obj_end"]]})
+                            **vars(c), "score": sc,
+                            "subj_id": arg_id[c.subj_begin, c.subj_end],
+                            "obj_id": arg_id[c.obj_begin, c.obj_end]})
                 out_cands.append(kept)
             yield pd.DataFrame({
                 "url": pdf["url"], "sent_idx": pdf["sent_idx"],
