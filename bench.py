@@ -243,13 +243,14 @@ def host_parallel_capacity(low_hot: int = 4, high_hot: int = 16,
     widths' hot-thread counts (Spark local[N] drives ~2N hot threads:
     JVM task thread + Python model worker per core), best-of-``repeats``:
 
-      ceiling = wall(low_hot workers) / wall(high_hot workers)
+      ceiling = min(1, wall(low_hot workers) / wall(high_hot workers))
 
     == s(low)/s(high), the per-worker slowdown ratio, which is exactly the
     maximum scaling efficiency ANY job (even embarrassingly parallel) can
     record between those widths on this host right now. Reported alongside
     the raw efficiency so a contended host is distinguishable from a plan
-    that stopped scaling."""
+    that stopped scaling. A ratio above 1 is timing noise, not spare
+    capacity, hence the clamp."""
     import multiprocessing as mp
     walls: dict[int, float] = {}
     for workers in (1, low_hot, high_hot):
@@ -266,7 +267,7 @@ def host_parallel_capacity(low_hot: int = 4, high_hot: int = 16,
         "solo_sec": round(walls[1], 3),
         f"wall_{low_hot}way_sec": round(walls[low_hot], 3),
         f"wall_{high_hot}way_sec": round(walls[high_hot], 3),
-        "ceiling": round(walls[low_hot] / walls[high_hot], 4),
+        "ceiling": min(1.0, round(walls[low_hot] / walls[high_hot], 4)),
     }
 
 

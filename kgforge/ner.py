@@ -148,9 +148,10 @@ def featurize(texts: list[str], cfg: PipelineConfig, tokenizer=None) -> Features
     flat_ids = gather(ids, CLS_ID)
     flat_ids[last] = SEP_ID
     # get_reference_feature_flag (:885-928): an interior window edge disowns
-    # doc_stride/2 pieces plus its special token (content is never special)
+    # doc_stride/2 pieces plus its special token (content is never special);
+    # for an odd stride the start edge takes the extra middle piece
     half = stride // 2
-    start_cut = np.where(lo_a > 0, half + 1, 0)
+    start_cut = np.where(lo_a > 0, stride - half + 1, 0)
     end_cut = np.where(hi_a < np.array(total, dtype=np.int64),
                        width - half - 1, width)
     return Features(

@@ -57,10 +57,10 @@ STAGE_FORMAT = hashlib.sha256("".join(
 # --------------------------------------------------------------------------
 
 def _piece_count(sentence: str) -> int:
-    return sum(
-        (len(m.group(0)) + _SUBWORD_CHUNK - 1) // _SUBWORD_CHUNK
-        for m in _WORD_RE.finditer(sentence)
-    )
+    """``len(tokenize_with_offsets(sentence).ids)`` without building the
+    pieces: a word of n chars is ceil(n / _SUBWORD_CHUNK) pieces."""
+    return sum((len(w) + _SUBWORD_CHUNK - 1) // _SUBWORD_CHUNK
+               for w in _WORD_RE.findall(sentence))
 
 
 def stage_extract_sentences(

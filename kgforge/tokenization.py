@@ -11,6 +11,7 @@ Ports the *semantics* (not the code) of the reference's featurizer:
   ``end - doc_stride`` with loop guard ``len(spans) * doc_stride < n_tokens``
   (src/pipelines/token_classification.rs:836-882);
 - per-token ownership ("reference_feature") flags with cutoff ``doc_stride/2``
+  (rounded up at the start edge, so an odd stride's overlap is owned once)
   plus leading/trailing special tokens at interior span edges
   (src/pipelines/token_classification.rs:885-928).
 
@@ -936,6 +937,9 @@ def _reference_feature_flag(
 
     Port of get_reference_feature_flag (token_classification.rs:885-928):
     interior span edges disown doc_stride/2 tokens (+ adjacent specials).
+    For an odd stride the start edge disowns the extra middle token, so the
+    ``doc_stride`` overlap is owned exactly once (the reference's two
+    ``doc_stride / 2`` cutoffs own it twice).
     """
     if start_token > 0:
         leading_special = 0
@@ -943,7 +947,7 @@ def _reference_feature_flag(
             if m != MASK_SPECIAL:
                 break
             leading_special += 1
-        start_cutoff = doc_stride // 2 + leading_special
+        start_cutoff = doc_stride - doc_stride // 2 + leading_special
     else:
         start_cutoff = 0
     if end_token < total_length:

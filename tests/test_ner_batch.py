@@ -80,16 +80,22 @@ def test_batch_entities_equal_per_example_reference(
 
 
 def test_batch_entities_windowed_gazetteer_text():
-    # a long text in 16-piece windows, split across micro-batches of 2
+    # a long text in short windows, split across micro-batches of 2; 12 and
+    # 20 have an odd doc_stride, where a twice-owned overlap piece once
+    # gave "Amy Silvaa" and "São Paul Paulo"
     text = ("filler words here and there. Amy Silva works for Acme Corp "
             "in São Paulo. ") * 6
-    cfg = PipelineConfig(max_length=16, batch_size=2)
-    enc = get_token_classifier(cfg.seed, cfg.tokenizer)
-    assert len(generate_features(text, 0, 16)) > 2
-    want = [consolidate_entities(t) for t in predict_tokens([text], enc, cfg)]
-    got = predict_entity_lists([text], enc, cfg)
-    assert _key(got) == _key(want)
-    assert sum(e.word == "Amy Silva" for e in got[0]) == 6
+    for max_length in (12, 16, 20):
+        cfg = PipelineConfig(max_length=max_length, batch_size=2)
+        enc = get_token_classifier(cfg.seed, cfg.tokenizer)
+        assert len(generate_features(text, 0, max_length)) > 2
+        want = [consolidate_entities(t)
+                for t in predict_tokens([text], enc, cfg)]
+        got = predict_entity_lists([text], enc, cfg)
+        assert _key(got) == _key(want)
+        assert sum(e.word == "Amy Silva" for e in got[0]) == 6
+        assert ({e.word for e in got[0]}
+                == {"Amy Silva", "Acme Corp", "São Paulo"}), max_length
 
 
 @given(texts=texts_st, kind=st.sampled_from(TOKENIZERS),

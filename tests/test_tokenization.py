@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 
+from kgforge.config import PipelineConfig
+from kgforge.ner import featurize
 from kgforge.tokenization import (
     MASK_SPECIAL,
     generate_features,
@@ -51,34 +53,55 @@ def test_window_stride_and_loop_guard():
     assert len(feats) == len(starts)
 
 
+# 12 and 20 have an odd doc_stride (3, 5): the overlap's middle piece is
+# where a cutoff of doc_stride//2 on both edges owned a piece twice
+EXACT_COVER_LENGTHS = (12, 16, 20, 32)
+
+
+def _owned_pieces(text: str, max_length: int) -> tuple[list, list]:
+    """(begin, end) of every owned content piece, from ``generate_features``
+    and from the batch path ``ner.featurize``."""
+    ref = [(f.begins[pos], f.ends[pos])
+           for f in generate_features(text, 0, max_length=max_length)
+           for pos, flag in enumerate(f.reference_feature)
+           if flag and f.masks[pos] != MASK_SPECIAL]
+    feats = featurize([text], PipelineConfig(max_length=max_length))
+    owned = feats.owned & (feats.masks != MASK_SPECIAL)
+    batch = list(zip(feats.begins[owned].tolist(), feats.ends[owned].tolist()))
+    return ref, batch
+
+
 def test_ownership_exact_cover():
     """Every content token is owned by exactly one span (the invariant the
-    reference's start/end cutoffs exist to guarantee)."""
-    for n_words in (1, 5, 29, 30, 31, 60, 100, 250):
-        text = " ".join(f"w{i}" for i in range(n_words))
-        tok = tokenize_with_offsets(text)
-        feats = generate_features(text, 0, max_length=32)
-        owned_begins = []
-        for f in feats:
-            for pos, flag in enumerate(f.reference_feature):
-                if flag and f.masks[pos] != MASK_SPECIAL:
-                    owned_begins.append((f.begins[pos], f.ends[pos]))
-        assert sorted(owned_begins) == sorted(zip(tok.begins, tok.ends)), n_words
-        assert len(owned_begins) == len(set(owned_begins)) == len(tok.ids)
+    reference's start/end cutoffs exist to guarantee), on both paths."""
+    for max_length in EXACT_COVER_LENGTHS:
+        for n_words in (1, 5, 29, 30, 31, 60, 100, 250):
+            text = " ".join(f"w{i}" for i in range(n_words))
+            tok = tokenize_with_offsets(text)
+            for owned in _owned_pieces(text, max_length):
+                assert sorted(owned) == list(zip(tok.begins, tok.ends)), (
+                    max_length, n_words)
 
 
 @settings(max_examples=50, deadline=None)
-@given(st.text(alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)),
-               max_size=400))
-def test_ownership_exact_cover_property(text):
+@given(text=st.text(alphabet=st.characters(codec="utf-8",
+                                           exclude_categories=("Cs",)),
+                    max_size=400),
+       max_length=st.sampled_from(EXACT_COVER_LENGTHS))
+def test_ownership_exact_cover_property(text, max_length):
     tok = tokenize_with_offsets(text)
-    feats = generate_features(text, 0, max_length=16)
-    owned = sum(
-        1 for f in feats
-        for pos, flag in enumerate(f.reference_feature)
-        if flag and f.masks[pos] != MASK_SPECIAL
-    )
-    assert owned == len(tok.ids)
+    for owned in _owned_pieces(text, max_length):
+        assert sorted(owned) == list(zip(tok.begins, tok.ends))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)),
+               max_size=300))
+def test_piece_count_equals_tokenizer_length(text):
+    """The length bucketing in stage_extract_sentences counts pieces
+    without tokenizing; the count must be the chunk tokenizer's."""
+    from kgforge.pipeline import _piece_count
+    assert _piece_count(text) == len(tokenize_with_offsets(text).ids)
 
 
 def test_empty_text_no_spans():
