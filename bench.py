@@ -7,6 +7,14 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ..., "extra": {...}}
 
+--queries q1,q2 [--noop] [--repeats N]: the same probe, warm-up and
+per-query timing (``time_query``) on any ``kgforge.queries.QUERIES`` names,
+N ``count()`` samples each (default 3); --noop adds N noop-sink samples,
+which compute every column a ``count()`` may prune. One JSON line.
+
+--queries q1,q2 --explain: print each query's ``.explain("formatted")``
+plan to stdout; no probe, no warm-up.
+
 --scaling: evidence the north rule's two-cluster-size criterion in-sandbox by
 running the identical KG job at local[2] and local[8] (the defaults; fresh
 JVM each, via subprocess) on the same input, and writing throughput at both
@@ -15,6 +23,10 @@ host's 32 vCPUs are ~16 physical cores and local[N] saturates at N~8
 (JVM+Python = 2 hot threads/core) — see BENCH/BASELINE.md.
 
 --kg-only --cpus N: internal child mode for --scaling (one JSON line).
+
+Examples:
+  python bench.py --sf-dir /tmp/sf1.0 --queries tfidf_topterms --noop
+  python bench.py --queries tfidf_topterms,neardup_clusters --explain
 """
 
 from __future__ import annotations
@@ -113,21 +125,55 @@ def _warmup(spark, sf_dir: str, cpus: int) -> float:
     return round(time.time() - t0, 3)
 
 
+def _warm_session(sf_dir: str, cpus: int):
+    """(probe, spark, warmup_sec): the host capacity probe BEFORE Spark
+    starts (~8s), then the session and its untimed warm-up. Hypervisor
+    neighbors intermittently cap this box's wide-parallelism capacity
+    (observed ceiling 0.70 vs ~1.0 hours apart on identical code, which
+    alone moves every headline number ~2x) — recording the ceiling in the
+    same JSON line makes a contended-window bench distinguishable from a
+    regression."""
+    probe = host_parallel_capacity(4, 16, repeats=2)
+    spark = build_spark(cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    return probe, spark, _warmup(spark, sf_dir, cpus)
+
+
+def time_query(spark, fn, sf_dir: str, repeats: int,
+               noop: bool = False) -> dict:
+    """Time ``fn(spark, sf_dir)`` ``repeats`` times to a ``count()`` sink,
+    building the frame inside each sample, and with ``noop`` as many times
+    more to a noop write. Returns every sample, the best (min) and the
+    rows ``count()`` saw, plus ``noop_samples``/``noop_best`` with
+    ``noop``. Then one untimed JVM GC: the pipeline's heavy allocations
+    otherwise surface as a multi-second full-GC pause INSIDE the next
+    query's first timed sample (observed 28-54s on a ~1s JVM-only query,
+    twice, always immediately after kg_triples)."""
+    def timed(sink) -> tuple[list[float], object]:
+        samples, out = [], None
+        for _ in range(repeats):
+            t0 = time.time()
+            out = sink(fn(spark, sf_dir))
+            samples.append(round(time.time() - t0, 3))
+        return samples, out
+
+    samples, rows = timed(lambda df: df.count())
+    result = {"samples": samples, "best": min(samples), "rows": rows}
+    if noop:
+        noop_samples, _ = timed(
+            lambda df: df.write.format("noop").mode("overwrite").save())
+        result.update(noop_samples=noop_samples, noop_best=min(noop_samples))
+    spark.sparkContext._jvm.System.gc()
+    return result
+
+
 def run_default(sf_dir: str, cpus: int, repeats: int = 2) -> dict:
     """Headline bench: untimed session warm-up, then each query timed
     ``repeats`` times in-session, BEST wall kept — the same min-of-N
     protocol as the scaling evidence (BENCH/BASELINE.md): this host's
     hypervisor injects up to ±50% noise on identical runs, and min-of-N
     measures capability, not the hypervisor."""
-    # host capacity probe BEFORE Spark starts (~8s): hypervisor neighbors
-    # intermittently cap this box's wide-parallelism capacity (observed
-    # ceiling 0.70 vs ~1.0 hours apart on identical code, which alone moves
-    # every headline number ~2x) — recording the ceiling in the same JSON
-    # line makes a contended-window bench distinguishable from a regression.
-    host_probe = host_parallel_capacity(4, 16, repeats=2)
-    spark = build_spark(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    warmup_sec = _warmup(spark, sf_dir, cpus)
+    host_probe, spark, warmup_sec = _warm_session(sf_dir, cpus)
     from kgforge.queries import QUERIES
 
     per_query: dict[str, float] = {}
@@ -137,31 +183,21 @@ def run_default(sf_dir: str, cpus: int, repeats: int = 2) -> dict:
                                 "host_capacity_probe": host_probe}
     total = 0.0
     for name in HEADLINE:
-        fn = QUERIES[name]
-        samples = []
-        n = 0
         # cheap queries get a third sample: a single hypervisor stall can
         # inflate one sample ~50x (r3 observed 54s on a 1.2s query), and a
         # sub-second extra run is free insurance; the kg pipeline stays at
         # best-of-2 (each sample is many seconds of real work)
         n_rep = repeats if name == "kg_triples" else max(repeats, 3)
         extra["best_of"][name] = n_rep
-        for _ in range(n_rep):
-            t0 = time.time()
-            n = fn(spark, sf_dir).count()
-            samples.append(round(time.time() - t0, 3))
-        dt = min(samples)
+        timing = time_query(spark, QUERIES[name], sf_dir, n_rep)
+        dt = timing["best"]
         per_query[name] = dt
-        extra["samples"][name] = samples
+        extra["samples"][name] = timing["samples"]
         total += dt
         if name == "kg_triples":
+            n = timing["rows"]
             extra["kg_triples_rows"] = n
             extra["kg_triples_per_sec"] = round(n / dt, 2) if dt > 0 else None
-        # untimed GC between queries: the pipeline's heavy allocations
-        # otherwise surface as a multi-second full-GC pause INSIDE the next
-        # query's first timed sample (observed 28-54s on a ~1s JVM-only
-        # query, twice, always immediately after kg_triples)
-        spark.sparkContext._jvm.System.gc()
     spark.stop()
     return {
         "metric": "kgforge_headline_total",
@@ -171,6 +207,34 @@ def run_default(sf_dir: str, cpus: int, repeats: int = 2) -> dict:
         "sf": _sf_of(sf_dir),
         "extra": extra,
     }
+
+
+def run_queries(sf_dir: str, cpus: int, names: list[str], repeats: int,
+                noop: bool) -> dict:
+    """--queries: the default mode's probe, warm-up and ``time_query`` on
+    any QUERIES names, ``repeats`` samples each."""
+    probe, spark, warmup_sec = _warm_session(sf_dir, cpus)
+    from kgforge.queries import QUERIES
+
+    out = {"sf_dir": sf_dir, "cpus": cpus, "warmup_sec": warmup_sec,
+           "host_capacity_probe": probe,
+           "queries": {name: time_query(spark, QUERIES[name], sf_dir,
+                                        repeats, noop)
+                       for name in names}}
+    spark.stop()
+    return out
+
+
+def explain_queries(sf_dir: str, cpus: int, names: list[str]) -> None:
+    """--queries --explain: each query's formatted plan to stdout."""
+    spark = build_spark(cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    from kgforge.queries import QUERIES
+
+    for name in names:
+        print(f"== {name} ==")
+        QUERIES[name](spark, sf_dir).explain("formatted")
+    spark.stop()
 
 
 def run_kg_only(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
@@ -409,7 +473,14 @@ def _write_baseline_md(report: dict, low: int, high: int,
         f.write("\n".join(lines) + "\n")
 
 
-def main() -> None:
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
@@ -417,14 +488,36 @@ def main() -> None:
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--pages", type=int, default=None,
                     help="use the distributed synthetic generator with N pages")
-    ap.add_argument("--repeats", type=int, default=3,
+    ap.add_argument("--repeats", type=_positive_int, default=3,
                     help="samples per width in --scaling (best-of-N; the "
                          "+/-25%% hypervisor noise makes 3 the floor — a "
                          "2-sample run can swing the efficiency RATIO by "
-                         "0.15 on one lucky/unlucky draw)")
-    args = ap.parse_args()
+                         "0.15 on one lucky/unlucky draw), and per query "
+                         "and sink with --queries")
+    ap.add_argument("--queries", default=None,
+                    help="comma-separated QUERIES names to time (or explain)")
+    ap.add_argument("--noop", action="store_true",
+                    help="with --queries: also time a noop-sink write")
+    ap.add_argument("--explain", action="store_true",
+                    help="with --queries: print formatted plans, time nothing")
+    args = ap.parse_args(argv)
+    names = args.queries.split(",") if args.queries else []
+    if (args.noop or args.explain) and not names:
+        ap.error("--noop and --explain need --queries")
+    if names:
+        from kgforge.queries import QUERIES
 
-    if args.scaling:
+        unknown = [n for n in names if n not in QUERIES]
+        if unknown:
+            ap.error(f"--queries: unknown {', '.join(unknown)}")
+
+    if args.explain:
+        explain_queries(args.sf_dir, args.cpus, names)
+        return
+    if names:
+        report = run_queries(args.sf_dir, args.cpus, names, args.repeats,
+                             args.noop)
+    elif args.scaling:
         # 600k pages, not less: short runs are startup-dominated (JVM +
         # ~2 CPU-s/worker Python imports), which deflates the wide config's
         # throughput and understates scaling efficiency; real cluster jobs

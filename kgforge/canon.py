@@ -176,17 +176,16 @@ def connected_components(
     return out
 
 
-def components(
-    edges: DataFrame, collect_threshold: int = COLLECT_THRESHOLD
-) -> DataFrame:
+def components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, component) frame of the nodes whose
     component is not the node itself, ids in the edge columns' type. At
-    most ``collect_threshold`` edges (one Arrow download) run
+    most ``COLLECT_THRESHOLD`` edges (one Arrow download) run
     ``cc_unionfind`` and come back through ``moved_frame``; more run
-    ``connected_components``' materialized mapping. Both are looked up in
-    this module per call, so wrappers patched onto it see either branch."""
-    table = edges.limit(collect_threshold + 1).toArrow()
-    if table.num_rows <= collect_threshold:
+    ``connected_components``' materialized mapping. The threshold and both
+    branches are looked up in this module per call, so a patched threshold
+    switches the branch and wrappers patched onto it see either one."""
+    table = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
+    if table.num_rows <= COLLECT_THRESHOLD:
         mapping = cc_unionfind(list(zip(table.column("src").to_pylist(),
                                         table.column("dst").to_pylist())))
         return moved_frame(edges.sparkSession, mapping,

@@ -1,8 +1,11 @@
 """Stage 4 — entity linking: alias-dictionary match + embedding rerank.
 
 Two-tier resolution, exactly the shape mandated by the north star:
-1. normalized mention -> broadcast alias-dictionary hash join (the dictionary
-   is small relative to pages; Spark side uses ``broadcast()``);
+1. normalized mention -> alias-dictionary lookup. The dictionary is small
+   relative to pages: the driver collects it once per run, grouped by alias
+   (``pipeline._collect_alias_map``), and ships it as a broadcast variable
+   into the fused NER/NLI eval, which resolves each Arrow batch's mentions
+   map-side (``pipeline._resolve_norms``) — no join, no shuffle;
 2. ambiguous aliases (2+ candidate entities) -> dense-embedding rerank:
    cosine(embed(mention sentence context), embed(entity description)), the
    block being the alias itself — a degenerate-but-exact form of blocked ANN

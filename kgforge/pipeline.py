@@ -291,9 +291,7 @@ def stage_link(mentions: DataFrame, alias_dict: DataFrame,
 # --------------------------------------------------------------------------
 
 def surface_components(
-    resolved: DataFrame,
-    mentions: DataFrame | None = None,
-    collect_threshold: int = canon.COLLECT_THRESHOLD,
+    resolved: DataFrame, mentions: DataFrame | None = None
 ) -> DataFrame:
     """Connected components over the UNRESOLVED-surface graph.
 
@@ -309,24 +307,26 @@ def surface_components(
 
     The answer follows the one CC policy, ``canon.components``: a
     (node, component) frame of the surfaces that moved, on either branch.
-    The common case is ONE Arrow download of at most ``collect_threshold``
-    graph rows (``_graph_rows``) with the edges built in Python — the JVM
-    edge frame's shuffles are a Spark job each. Every coref edge comes from a
-    distinct multi-word row and every self edge from a distinct unresolved
-    row, so the edges number at most twice the rows and the row gate
-    bounds driver memory. Rows grow with pages, edges with vocabulary: if
+    The common case is ONE Arrow download of at most
+    ``canon.COLLECT_THRESHOLD`` graph rows (``_graph_rows``), read per
+    call, with the edges built in Python — the JVM edge frame's shuffles
+    are a Spark job each. Every coref edge comes from a distinct
+    multi-word row and every self edge from a distinct unresolved row, so
+    the edges number at most twice the rows and the row gate bounds driver
+    memory. Rows grow with pages, edges with vocabulary: if
     the rows overflow, ``canon.components`` decides on the JVM edge
     frame."""
     if mentions is not None and mentions is not resolved:
         raise ValueError("surface_components: mentions must be None or "
                          "the resolved frame itself")
     rows = _graph_rows(resolved)
-    table = rows.limit(collect_threshold + 1).toArrow()
-    if table.num_rows <= collect_threshold:
+    threshold = canon.COLLECT_THRESHOLD
+    table = rows.limit(threshold + 1).toArrow()
+    if table.num_rows <= threshold:
         return canon.moved_frame(resolved.sparkSession,
                                  canon.cc_unionfind(_surface_edges(table)),
                                  pa.string())
-    return canon.components(_surface_edge_frame(rows), collect_threshold)
+    return canon.components(_surface_edge_frame(rows))
 
 
 def _graph_rows(resolved: DataFrame) -> DataFrame:

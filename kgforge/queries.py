@@ -505,7 +505,7 @@ def q_neardup_clusters(spark, sf_dir):
     edges = q_ngram_jaccard_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # the constant is read per call, so patching it switches the branch
-    moved = canon.components(edges, canon.COLLECT_THRESHOLD).select(
+    moved = canon.components(edges).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
     return (
         _docs(spark, sf_dir).select("doc_id")
@@ -2610,8 +2610,14 @@ def gold_for_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _alias_df(spark: SparkSession) -> DataFrame:
+    """The synthetic alias dictionary as one Arrow table: a LocalRelation,
+    so a run's alias collect launches no Spark job (local rows would make
+    a Python RDD and a whole Python stage for a few dozen rows)."""
+    import pyarrow as pa
+
     from .synth import alias_rows
-    return spark.createDataFrame(alias_rows(), schema=schemas.ALIAS_DICT)
+    return spark.createDataFrame(pa.Table.from_pylist(alias_rows()),
+                                 schema=schemas.ALIAS_DICT)
 
 
 def q_kg_triples(spark, sf_dir):

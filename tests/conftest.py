@@ -52,7 +52,6 @@ def gold_triples_df(spark, tiny_pages):
 
 @pytest.fixture(scope="session")
 def alias_df(spark):
-    from kgforge import schemas
-    from kgforge.synth import alias_rows
+    from kgforge.queries import _alias_df
 
-    return spark.createDataFrame(alias_rows(), schema=schemas.ALIAS_DICT)
+    return _alias_df(spark)

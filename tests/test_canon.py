@@ -94,12 +94,13 @@ def test_release_local_checkpoint_frees_blocks_through_projections(spark):
         assert rid not in persisted_rdd_ids()
 
 
-def test_components_picks_branch_at_threshold(spark):
+def test_components_picks_branch_at_threshold(spark, monkeypatch):
     """At exactly T edges canon.components runs cc_unionfind, at T+1 the
     distributed operator; both answer with a (node, component) frame of
     exactly union-find's moved nodes, in the edge columns' type. Zero edges
     give an empty frame of that type, and the distributed call leaves only
     its materialized mapping cached."""
+    from kgforge import canon
     from kgforge.canon import _release_local_checkpoint, components
     from perfbench.workloads import canon_metrics, watch_components
 
@@ -117,9 +118,11 @@ def test_components_picks_branch_at_threshold(spark):
         want = _moved(cc_unionfind(edges))
         assert want
         for distributed in (False, True):
+            monkeypatch.setattr(canon, "COLLECT_THRESHOLD",
+                                len(edges) - distributed)
             before = n_cached()
             with watch_components() as seen:
-                frame = components(df, len(edges) - distributed)
+                frame = components(df)
             assert canon_metrics(seen)["canon.distributed"] == distributed
             assert n_cached() - before <= 1
             assert typed(frame) == typed(df.toDF("node", "component"))
@@ -128,6 +131,7 @@ def test_components_picks_branch_at_threshold(spark):
             assert len(rows) == len(want)
             assert {type(v) for r in rows for v in r} == {type(edges[0][0])}
             _release_local_checkpoint(frame)
+    monkeypatch.undo()
     for schema in ("src string, dst string", "src bigint, dst bigint"):
         empty = spark.createDataFrame([], schema)
         frame = components(empty)
@@ -135,10 +139,10 @@ def test_components_picks_branch_at_threshold(spark):
         assert frame.count() == 0
 
 
-def test_watch_components_sees_distributed_surface_graph(spark):
+def test_watch_components_sees_distributed_surface_graph(spark, monkeypatch):
     """perfbench's trace spies on canon's module globals; a forced-
     distributed surface_components call must still show up there."""
-    from kgforge import schemas
+    from kgforge import canon, schemas
     from kgforge.canon import _release_local_checkpoint
     from kgforge.pipeline import surface_components
     from perfbench.workloads import canon_metrics, watch_components
@@ -147,8 +151,9 @@ def test_watch_components_sees_distributed_surface_graph(spark):
         ("https://t/a", 0, "s", "Orla Quizzle", "PER", 0, 2, "orla quizzle", None),
         ("https://t/a", 1, "s", "Quizzle", "PER", 0, 1, "quizzle", None),
     ], schema=schemas.RESOLVED)
+    monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 0)
     with watch_components() as seen:
-        moved = surface_components(resolved, resolved, collect_threshold=0)
+        moved = surface_components(resolved, resolved)
     assert canon_metrics(seen)["canon.distributed"] == 1
     want = _surface_oracle(resolved)
     assert want == {"s:quizzle": "s:orla quizzle"}

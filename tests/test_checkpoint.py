@@ -95,11 +95,12 @@ def test_partial_resume_recomputes_only_missing_stage(spark, tmp_path):
     from kgforge import schemas
     from kgforge.config import PipelineConfig
     from kgforge.pipeline import run_pipeline
-    from kgforge.synth import alias_rows, gen_pages
+    from kgforge.queries import _alias_df
+    from kgforge.synth import gen_pages
 
     pages, _ = gen_pages(0, 40)
     pages_df = spark.createDataFrame(pages, schema=schemas.PAGES)
-    alias_df = spark.createDataFrame(alias_rows(), schema=schemas.ALIAS_DICT)
+    alias_df = _alias_df(spark)
     cfg = PipelineConfig()
     wd = str(tmp_path / "wd")
 

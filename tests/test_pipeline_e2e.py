@@ -3,7 +3,6 @@ scale) + local-vs-Spark equivalence + checkpoint/resume."""
 
 from __future__ import annotations
 
-import functools
 import os
 
 import pytest
@@ -94,12 +93,13 @@ def _pages_df(spark, texts: dict[str, str]):
         schema=schemas.PAGES)
 
 
-def test_surface_graph_driver_edges_match_jvm_edges(spark):
+def test_surface_graph_driver_edges_match_jvm_edges(spark, monkeypatch):
     """kg-web-sized graphs carry no coref edge, so the coref cases are
     hand-built: the driver-side edges must equal the JVM edge frame, and
     every gate outcome (rows fit; rows overflow but edges fit; edges
     overflow -> distributed) must give union-find's moved surfaces over
     it."""
+    from kgforge import canon
     from kgforge.canon import cc_unionfind
     from kgforge.pipeline import (_graph_rows, _surface_edge_frame,
                                   _surface_edges, surface_components)
@@ -149,10 +149,11 @@ def test_surface_graph_driver_edges_match_jvm_edges(spark):
 
     assert _moved_by(lambda: surface_components(resolved, resolved)) == (moved, 0)
     # 7 rows overflow, 6 edges fit: still the driver branch
+    monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 6)
+    assert _moved_by(lambda: surface_components(resolved)) == (moved, 0)
+    monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 5)
     assert _moved_by(lambda: surface_components(
-        resolved, collect_threshold=6)) == (moved, 0)
-    assert _moved_by(lambda: surface_components(
-        resolved, resolved, collect_threshold=5)) == (moved, 1)
+        resolved, resolved)) == (moved, 1)
     with pytest.raises(ValueError):
         surface_components(resolved, resolved.select("*"))
 
@@ -165,11 +166,13 @@ def test_in_memory_run_collects_alias_map_once(spark, tiny_pages_df, alias_df,
     assert len(alias_collects) == 1
 
 
-def test_distributed_cc_branch_matches_driver_unionfind(spark, alias_df, cfg):
-    """The at-scale fallback (surface graph > collect_threshold -> the
+def test_distributed_cc_branch_matches_driver_unionfind(spark, alias_df, cfg,
+                                                        monkeypatch):
+    """The at-scale fallback (surface graph > COLLECT_THRESHOLD -> the
     distributed large-star/small-star operator) must produce exactly the
     driver-side union-find moved surfaces, a non-empty set on these pages,
     and leave only that mapping cached."""
+    from kgforge import canon
     from kgforge.canon import _release_local_checkpoint
     from kgforge.pipeline import surface_components
 
@@ -192,7 +195,8 @@ def test_distributed_cc_branch_matches_driver_unionfind(spark, alias_df, cfg):
     assert mapping(driver) == want
 
     before = n_cached()
-    distributed = surface_components(resolved, resolved, collect_threshold=0)
+    monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 0)
+    distributed = surface_components(resolved, resolved)
     assert mapping(distributed) == want
     # cache discipline: edges and every retired CC iteration state are
     # freed eagerly; only the materialized mapping itself remains
@@ -226,15 +230,14 @@ def test_no_lingering_intermediate_caches(spark, tiny_pages_df, alias_df, cfg,
     resolved, surface edges, the CC mapping) on both CC branches —
     long-lived sessions must not accumulate cached stages. Only the
     returned result's own localCheckpoint survives."""
-    import kgforge.pipeline as pl
+    from kgforge import canon
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
     for forced_distributed in (False, True):
         if forced_distributed:
-            monkeypatch.setattr(pl, "surface_components", functools.partial(
-                pl.surface_components, collect_threshold=0))
+            monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 0)
         before = n_cached()
         t = run_pipeline(spark, tiny_pages_df, alias_df, cfg)
         assert t.count() > 0
@@ -392,6 +395,7 @@ def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     run_pipeline on both CC branches, whose moved surfaces stage 5 joins
     in."""
     import kgforge.pipeline as pl
+    from kgforge import canon
 
     pages_df = _pages_df(spark, _QUIZZLE_PAGES)
     resolved = stage_link(stage_mentions(stage_ner_score(
@@ -399,8 +403,9 @@ def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     mentions = resolved.collect()
     mapping = _surface_oracle(resolved)
     assert _moved_by(lambda: pl.surface_components(resolved)) == (mapping, 0)
-    assert _moved_by(lambda: pl.surface_components(
-        resolved, collect_threshold=0)) == (mapping, 1)
+    monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 0)
+    assert _moved_by(lambda: pl.surface_components(resolved)) == (mapping, 1)
+    monkeypatch.undo()
     resolved.unpersist()
     quizzle = [r for r in mentions if "Quizzle" in r["word"]]
     assert len(quizzle) == 3 and all(r["entity_id"] is None for r in quizzle)
@@ -412,8 +417,7 @@ def test_unlinked_mentions_cluster_via_cc(spark, alias_df, cfg, monkeypatch):
     assert locs["Paris"].startswith("LOC_") and locs["Berlin"].startswith("LOC_")
 
     driver = sorted(map(tuple, run_pipeline(spark, pages_df, alias_df, cfg).collect()))
-    monkeypatch.setattr(pl, "surface_components", functools.partial(
-        pl.surface_components, collect_threshold=0))
+    monkeypatch.setattr(canon, "COLLECT_THRESHOLD", 0)
     triples = run_pipeline(spark, pages_df, alias_df, cfg).collect()
     assert sorted(map(tuple, triples)) == driver
     args = {(r[f"{side}_word"], r[f"{side}_id"])
