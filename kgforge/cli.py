@@ -5,7 +5,7 @@
         --alias /data/alias_dict.parquet \
         --out   /data/triples \
         --workdir /data/checkpoints \
-        [--langs en] [--threshold 0.5] [--synthetic-pages N]
+        [--threshold 0.5] [--synthetic-pages N]
 
 Reads the mandated pages table (url, warc_ts, html, text, lang), runs the
 five-stage pipeline with per-stage lineage checkpoints (exact resume on
@@ -29,7 +29,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--alias", help="alias_dict parquet path (default: built-in synthetic dict)")
     ap.add_argument("--out", required=True, help="output triples table path")
     ap.add_argument("--workdir", default=None, help="checkpoint/lineage dir (enables exact resume)")
-    ap.add_argument("--langs", default="en", help="comma-separated language allowlist")
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument("--max-length", type=int, default=64)
     args = ap.parse_args(argv)

@@ -14,20 +14,18 @@ dangling-mass scalar, whose float summation order is the one part of the
 classic formulation that cannot be made deterministic without a
 single-row collect.
 
-Determinism: with ``deterministic=True`` (default) each node's incoming
-contributions are collected, sorted by source id, and folded in that fixed
-order (``aggregate`` over ``array_sort``), so the result is bit-identical
-across partition counts and runs — the property the golden-digest gate
-requires. The row holding a node's contributions is bounded by in-degree,
-and in-degree on entity graphs is power-law, so the sorted fold is CAPPED:
-nodes whose in-degree exceeds ``det_fold_cap`` (hubs — the rows that
-would be hot) fall back to a plain ``sum`` within the SAME single
-aggregation pass (their ``collect_list`` input is nulled out, so no giant
-row is ever built; sums partial-combine map-side). Below the cap —
-everything, on non-adversarial graphs — the fold is bit-stable as before.
-``deterministic=False`` switches every node to the plain ``sum``
-(map-side partial combine, no collect at all) whose result differs only
-in float last-bits — the same trade every production PageRank makes.
+Determinism: each node's incoming contributions are collected, sorted by
+source id, and folded in that fixed order (``aggregate`` over
+``array_sort``), so the result is bit-identical across partition counts
+and runs — the property the golden-digest gate requires. The row holding
+a node's contributions is bounded by in-degree, and in-degree on entity
+graphs is power-law, so the sorted fold is CAPPED: nodes whose in-degree
+exceeds ``DET_FOLD_CAP`` (hubs — the rows that would be hot) fall back to
+a plain ``sum`` within the SAME single aggregation pass (their
+``collect_list`` input is nulled out, so no giant row is ever built; sums
+partial-combine map-side) whose result differs only in float last-bits —
+the same trade every production PageRank makes. Below the cap —
+everything, on non-adversarial graphs — the fold is bit-stable.
 
 Iteration hygiene mirrors kgforge.canon: the tiny per-node rank frame is
 ``localCheckpoint``ed each round (a K-round loop would otherwise build a
@@ -45,13 +43,13 @@ DAMPING = 0.85
 
 # in-degree above which the deterministic sorted-fold falls back to a plain
 # sum for that node: a hub's contribution row would otherwise grow with its
-# in-degree (power-law on entity graphs — unbounded at 100x scale)
+# in-degree (power-law on entity graphs — unbounded at 100x scale). Read
+# per call.
 DET_FOLD_CAP = 1024
 
 
-def pagerank(edges: DataFrame, iters: int = 10, damping: float = DAMPING,
-             deterministic: bool = True,
-             det_fold_cap: int = DET_FOLD_CAP) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 10,
+             damping: float = DAMPING) -> DataFrame:
     """Iterate PageRank over a directed edge list (``src``, ``dst``).
 
     Returns (node, rank). Edges are deduplicated; sinks get self-loops
@@ -78,7 +76,7 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = DAMPING,
     # nothing per iteration. The hub frame holds only nodes OVER the cap
     # (empty on non-adversarial graphs) and broadcasts.
     hubs = (full.groupBy("dst").agg(F.count(F.lit(1)).alias("in_deg"))
-            .where(F.col("in_deg") > det_fold_cap)
+            .where(F.col("in_deg") > DET_FOLD_CAP)
             .select("dst", F.lit(True).alias("is_hot")))
     e = (full.join(deg, "src")
          .join(F.broadcast(hubs), "dst", "left")
@@ -99,26 +97,23 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = DAMPING,
                     .select("dst", "src", "is_hot",
                             (F.col("rank") / F.col("out_deg"))
                             .alias("contrib")))
-        if deterministic:
-            # ONE aggregation pass computes both variants per group:
-            # collect_list skips nulls, so a hub group (is_hot on every
-            # row of the group) collects an EMPTY list — the giant sorted
-            # row is never built — and takes the map-side-combined sum
-            # instead; sub-cap groups fold exactly as before (bit-stable).
-            summed = (contribs.groupBy("dst")
-                      .agg(F.aggregate(
-                          F.array_sort(F.collect_list(
-                              F.when(~F.col("is_hot"),
-                                     F.struct("src", "contrib")))),
-                          F.lit(0.0),
-                          lambda acc, s: acc + s["contrib"]).alias("cold_s"),
-                           F.sum(F.when(F.col("is_hot"), F.col("contrib")))
-                           .alias("hot_s"),
-                           F.max("is_hot").alias("hot"))
-                      .select("dst", F.when(F.col("hot"), F.col("hot_s"))
-                              .otherwise(F.col("cold_s")).alias("s")))
-        else:
-            summed = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
+        # ONE aggregation pass computes both variants per group:
+        # collect_list skips nulls, so a hub group (is_hot on every row of
+        # the group) collects an EMPTY list — the giant sorted row is never
+        # built — and takes the map-side-combined sum instead; sub-cap
+        # groups fold in source order (bit-stable).
+        summed = (contribs.groupBy("dst")
+                  .agg(F.aggregate(
+                      F.array_sort(F.collect_list(
+                          F.when(~F.col("is_hot"),
+                                 F.struct("src", "contrib")))),
+                      F.lit(0.0),
+                      lambda acc, s: acc + s["contrib"]).alias("cold_s"),
+                       F.sum(F.when(F.col("is_hot"), F.col("contrib")))
+                       .alias("hot_s"),
+                       F.max("is_hot").alias("hot"))
+                  .select("dst", F.when(F.col("hot"), F.col("hot_s"))
+                          .otherwise(F.col("cold_s")).alias("s")))
         nxt = (nodes.join(summed, nodes["node"] == summed["dst"], "left")
                .select("node",
                        (F.lit(base) + F.lit(damping)

@@ -44,8 +44,8 @@ from .tokenization import (
     MASK_SPECIAL,
     PAD_ID,
     SEP_ID,
-    tokenize_with_offsets,
 )
+from .workers import get_tokenizer
 
 
 @dataclass(slots=True)
@@ -92,11 +92,12 @@ class Features:
     example: np.ndarray  # int64 (n_spans,) text index of each span
 
 
-def featurize(texts: list[str], cfg: PipelineConfig, tokenizer=None) -> Features:
+def featurize(texts: list[str], cfg: PipelineConfig) -> Features:
     """``generate_features`` (token_classification.rs:808-928) for a whole
-    batch at once. Only the tokenizer and the window loop run per text;
-    special tokens, offsets and ownership flags are index arithmetic over
-    the concatenated pieces."""
+    batch at once, with the tokenizer ``cfg.tokenizer`` names. Only the
+    tokenizer and the window loop run per text; special tokens, offsets and
+    ownership flags are index arithmetic over the concatenated pieces."""
+    tokenize = get_tokenizer(cfg.tokenizer).tokenize_with_offsets
     max_content, stride = cfg.max_content_length, cfg.doc_stride
     ids: list[int] = []
     begins: list[int] = []
@@ -108,8 +109,7 @@ def featurize(texts: list[str], cfg: PipelineConfig, tokenizer=None) -> Features
     example: list[int] = []
     base: list[int] = []     # offset of the window's text in the piece lists
     for ex, text in enumerate(texts):
-        tok = (tokenizer.tokenize_with_offsets(text) if tokenizer is not None
-               else tokenize_with_offsets(text))
+        tok = tokenize(text)
         n, offset = len(tok.ids), len(ids)
         ids += tok.ids
         begins += tok.begins
@@ -213,8 +213,7 @@ def forward_spans(feats: Features, texts: list[str], encoder,
 
 def _featurize_forward(texts: list[str], encoder, cfg: PipelineConfig
                        ) -> tuple[Features, np.ndarray, np.ndarray]:
-    from .workers import get_tokenizer
-    kind = getattr(cfg, "tokenizer", "chunk")
+    kind = cfg.tokenizer
     enc_kind = getattr(encoder, "tokenizer_kind", None)
     if enc_kind is not None and enc_kind != kind:
         # the gazetteer is keyed on ITS tokenizer's pieces; featurizing with
@@ -223,7 +222,7 @@ def _featurize_forward(texts: list[str], encoder, cfg: PipelineConfig
         raise ValueError(
             f"encoder gazetteer keyed for tokenizer {enc_kind!r} but "
             f"cfg.tokenizer={kind!r}")
-    feats = featurize(texts, cfg, get_tokenizer(kind))
+    feats = featurize(texts, cfg)
     return (feats, *forward_spans(feats, texts, encoder, cfg))
 
 

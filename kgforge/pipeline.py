@@ -130,7 +130,8 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
     NER runs once per Arrow batch (``ner.predict_entity_lists``): the
     batch is featurized, forwarded and decoded as flat arrays, and only
     the entities become Python objects. Candidates stay ``Candidate``
-    objects until a kept one becomes its output dict.
+    objects until a kept one becomes its output dict, which holds only the
+    fields stage 5 reads.
 
     Every entity gets its ``norm`` and, against the ``alias_dict`` table
     (collected once and broadcast), its ``entity_id``: all
@@ -190,7 +191,8 @@ def stage_ner_score(sentences: DataFrame, cfg: PipelineConfig,
                     sc = float(scores[pos]); pos += 1
                     if sc >= local_cfg.relation_threshold:
                         kept.append({
-                            **vars(c), "score": sc,
+                            "pred": c.pred, "subj_word": c.subj_word,
+                            "obj_word": c.obj_word, "score": sc,
                             "subj_id": arg_id[c.subj_begin, c.subj_end],
                             "obj_id": arg_id[c.obj_begin, c.obj_end]})
                 out_cands.append(kept)

@@ -38,30 +38,20 @@ ENTITY = StructType([
     StructField("end", IntegerType(), False),
 ])
 
-
-CANDIDATE = StructType([
-    StructField("subj_word", StringType(), False),
-    StructField("subj_type", StringType(), False),
-    StructField("subj_begin", IntegerType(), False),
-    StructField("subj_end", IntegerType(), False),
-    StructField("obj_word", StringType(), False),
-    StructField("obj_type", StringType(), False),
-    StructField("obj_begin", IntegerType(), False),
-    StructField("obj_end", IntegerType(), False),
-    StructField("pred", StringType(), False),
-    StructField("hypothesis", StringType(), False),
-])
-
 # The fused NER/NLI output (stages 2b-4): every entity carries its
-# normalized surface and dictionary id (null: unresolved), every kept
-# candidate its score and its two arguments' ids (an unresolved argument's
-# id is its surface node, "s:" + norm).
+# normalized surface and dictionary id (null: unresolved). A kept
+# candidate carries only what stage 5 reads: its predicate, its two
+# argument words and ids (an unresolved argument's id is its surface node,
+# "s:" + norm) and its score.
 NER_SCORED = StructType(SENTENCES.fields[:4] + [
     StructField("entities", ArrayType(StructType(ENTITY.fields + [
         StructField("norm", StringType(), False),
         StructField("entity_id", StringType(), True),
     ])), False),
-    StructField("cands", ArrayType(StructType(CANDIDATE.fields + [
+    StructField("cands", ArrayType(StructType([
+        StructField("pred", StringType(), False),
+        StructField("subj_word", StringType(), False),
+        StructField("obj_word", StringType(), False),
         StructField("score", DoubleType(), False),
         StructField("subj_id", StringType(), False),
         StructField("obj_id", StringType(), False),

@@ -28,7 +28,7 @@ from dataclasses import dataclass, field
 
 from .config import NER_LABEL2ID, RELATIONS
 from .textnorm import normalize_mention
-from .tokenization import _SUBWORD_CHUNK, token_id
+from .tokenization import CHUNK, Tokenizer
 
 SEED = 42
 
@@ -125,7 +125,7 @@ def entity_catalog() -> list[EntityDef]:
 
 
 def build_gazetteer(catalog: list[EntityDef] | None = None,
-                    tokenizer=None) -> dict[int, int]:
+                    tokenizer: Tokenizer = CHUNK) -> dict[int, int]:
     """Sub-word-piece-id -> NER label id, over every surface form.
 
     Tags are assigned PER WORD (first word -> B-<type>, later words ->
@@ -138,11 +138,10 @@ def build_gazetteer(catalog: list[EntityDef] | None = None,
     piece collisions ("##a" is shared by PER/ORG/LOC words). Deterministic
     first-wins on the (rare) initial-piece collision.
 
-    ``tokenizer``: None keys on the chunk tokenizer's initial piece
-    (word[:4]); a WordPieceTokenizer keys on ITS initial piece for the same
-    word — the gazetteer must agree with whatever tokenizer featurizes the
-    sentences (a real checkpoint's label head is trained against its own
-    vocab in exactly this sense)."""
+    Each word is keyed on ``tokenizer``'s initial piece for it — the
+    gazetteer must agree with whatever tokenizer featurizes the sentences
+    (a real checkpoint's label head is trained against its own vocab in
+    exactly this sense)."""
     catalog = catalog or entity_catalog()
     gaz: dict[int, int] = {}
     for ent in catalog:
@@ -150,23 +149,19 @@ def build_gazetteer(catalog: list[EntityDef] | None = None,
             for wi, word in enumerate(surface.split()):
                 tag = "B" if wi == 0 else "I"
                 label = NER_LABEL2ID[f"{tag}-{ent.etype}"]
-                if tokenizer is None:
-                    marked = word[:_SUBWORD_CHUNK]
-                else:
-                    t = tokenizer.tokenize_with_offsets(word)
-                    if not t.pieces:
-                        continue
-                    # never plant a degenerate single-char key for a longer
-                    # word (a char-fallback piece like "J" for "J.Crew"
-                    # would tag EVERY corpus word starting with that char);
-                    # the vocab includes the surface's sub-words, so this
-                    # only fires for genuinely unmatchable fragments
-                    if len(word) > 1 and t.ends[0] - t.begins[0] == 1:
-                        continue
-                    if t.pieces[0] == getattr(tokenizer, "UNK", None):
-                        continue    # ditto: [UNK] would match every OOV word
-                    marked = t.pieces[0]
-                gaz.setdefault(token_id(marked), label)
+                t = tokenizer.tokenize_with_offsets(word)
+                if not t.pieces:
+                    continue
+                # never plant a degenerate single-char key for a longer
+                # word (a char-fallback piece like "J" for "J.Crew" would
+                # tag EVERY corpus word starting with that char); the
+                # vocab includes the surface's sub-words, so this only
+                # fires for genuinely unmatchable fragments
+                if len(word) > 1 and t.ends[0] - t.begins[0] == 1:
+                    continue
+                if t.pieces[0] == getattr(tokenizer, "UNK", None):
+                    continue    # ditto: [UNK] would match every OOV word
+                gaz.setdefault(t.ids[0], label)
     return gaz
 
 

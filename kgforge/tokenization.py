@@ -5,8 +5,11 @@ Ports the *semantics* (not the code) of the reference's featurizer:
 - tokenize with CHARACTER offsets (the reference slices the original sentence
   by char, src/pipelines/token_classification.rs:1108-1117 — so Python
   code-point indexing matches natively);
-- deterministic WordPiece-like sub-word split so that sub-token consolidation
-  has real work to do;
+- one ``Tokenizer.tokenize_with_offsets`` loop for the four tokenizer
+  families (chunk, WordPiece, BPE, unigram); each supplies only its
+  per-word ``split_word``. The default chunk family (``CHUNK``) splits
+  words into 4-char pieces so that sub-token consolidation has real work
+  to do;
 - sliding spans of ``max_length - n_special`` tokens advancing by
   ``end - doc_stride`` with loop guard ``len(spans) * doc_stride < n_tokens``
   (src/pipelines/token_classification.rs:836-882);
@@ -39,6 +42,7 @@ N_RESERVED_IDS = 8
 
 _WORD_RE = re.compile(r"\w+|[^\w\s]", re.UNICODE)
 _SUBWORD_CHUNK = 4  # pieces of ≤4 chars → multi-piece words exercise consolidation
+_WORD_CACHE_SIZE = 1 << 16  # words per tokenizer; a full cache is emptied
 
 _SENT_RE = re.compile(r"[^.!?\n]*[.!?]+|[^.!?\n]+", re.UNICODE)
 
@@ -79,59 +83,85 @@ def split_sentences(text: str) -> list[tuple[int, str]]:
     return out
 
 
-def tokenize_with_offsets(text: str) -> TokenizedInput:
-    """Word-level regex tokenize, then deterministic sub-word chunking.
+class Tokenizer:
+    """One tokenizer family behind the shared ``tokenize_with_offsets``
+    contract: ``_WORD_RE`` pre-tokenizes the text into words (runs of
+    ``\\w`` chars, and single punctuation chars), and the family's
+    ``split_word`` splits each word into pieces. A piece's ``[begin, end)``
+    is a CHARACTER offset into the original text inside its word's span,
+    its id is ``token_id(piece)``, and its mask is MASK_NONE on the word's
+    first piece and MASK_CONTINUATION on the rest (the continuation
+    bookkeeping the reference's consolidation relies on,
+    token_classification.rs:1016-1022). Pieces are in text order, one
+    entry per piece in each of the five lists.
 
-    A word of n chars becomes ceil(n/4) pieces; the first piece has
-    MASK_NONE, later pieces MASK_CONTINUATION (mirrors WordPiece '##'
-    continuation bookkeeping the reference relies on for consolidation,
-    token_classification.rs:1016-1022).
-    """
-    pieces: list[str] = []
-    ids: list[int] = []
-    begins: list[int] = []
-    ends: list[int] = []
-    masks: list[int] = []
-    for m in _WORD_RE.finditer(text):
-        word = m.group(0)
-        start = m.start()
+    Each word's pieces, ids, word-relative offsets and masks are a pure
+    function of the word, so they are cached per instance: the word
+    vocabulary repeats while the per-word split is the tokenizer's
+    hottest path."""
+
+    def __init__(self) -> None:
+        self._words: dict[str, tuple] = {}
+
+    def split_word(self, word: str) -> list[tuple[str, int, int]]:
+        """-> (piece, begin, end) per piece, offsets relative to the word."""
+        raise NotImplementedError
+
+    def _split_cached(self, word: str) -> tuple:
+        split = self.split_word(word)
+        pieces = tuple(p for p, _, _ in split)
+        entry = (pieces, tuple(map(token_id, pieces)),
+                 tuple(b for _, b, _ in split), tuple(e for _, _, e in split),
+                 (MASK_NONE,) + (MASK_CONTINUATION,) * (len(split) - 1))
+        if len(self._words) >= _WORD_CACHE_SIZE:
+            self._words.clear()
+        self._words[word] = entry
+        return entry
+
+    def tokenize_with_offsets(self, text: str) -> TokenizedInput:
+        pieces: list[str] = []
+        ids: list[int] = []
+        begins: list[int] = []
+        ends: list[int] = []
+        masks: list[int] = []
+        cached = self._words.get
+        for m in _WORD_RE.finditer(text):
+            word = m.group()
+            wp, wi, wb, we, wm = cached(word) or self._split_cached(word)
+            start = m.start()
+            if len(wp) == 1:       # the common single-piece word
+                pieces.append(wp[0])
+                ids.append(wi[0])
+                begins.append(start + wb[0])
+                ends.append(start + we[0])
+                masks.append(MASK_NONE)
+            else:
+                pieces += wp
+                ids += wi
+                begins += [start + b for b in wb]
+                ends += [start + e for e in we]
+                masks += wm
+        return TokenizedInput(pieces, ids, begins, ends, masks)
+
+
+class ChunkTokenizer(Tokenizer):
+    """The default stand-in: a word of n chars becomes ceil(n/4) pieces,
+    later pieces marked ``##`` like WordPiece continuations, so multi-piece
+    words exercise sub-token consolidation."""
+
+    def split_word(self, word: str) -> list[tuple[str, int, int]]:
         n = len(word)
-        if n <= _SUBWORD_CHUNK:    # fast path: the overwhelmingly common
-            pieces.append(word)    # single-piece word skips the chunk loop
-            ids.append(token_id(word))
-            begins.append(start)
-            ends.append(start + n)
-            masks.append(MASK_NONE)
-            continue
-        wp, wi, rb, re_, wm = _word_pieces(word)
-        pieces.extend(wp)
-        ids.extend(wi)
-        begins.extend(start + b for b in rb)
-        ends.extend(start + e for e in re_)
-        masks.extend(wm)
-    return TokenizedInput(pieces, ids, begins, ends, masks)
+        return [(word[i:i + _SUBWORD_CHUNK] if i == 0
+                 else "##" + word[i:i + _SUBWORD_CHUNK],
+                 i, min(i + _SUBWORD_CHUNK, n))
+                for i in range(0, n, _SUBWORD_CHUNK)]
 
 
-@lru_cache(maxsize=1 << 16)
-def _word_pieces(word: str) -> tuple[tuple, tuple, tuple, tuple, tuple]:
-    """Multi-piece chunking of one word — a pure function of the word
-    string (piece texts, ids, word-relative offsets, masks), cached
-    because the word vocabulary repeats while the per-word slicing loop
-    is the tokenizer's hottest path."""
-    n = len(word)
-    pieces, ids, rb, re_, masks = [], [], [], [], []
-    for i in range(0, n, _SUBWORD_CHUNK):
-        piece = word[i:i + _SUBWORD_CHUNK]
-        marked = piece if i == 0 else "##" + piece
-        pieces.append(marked)
-        ids.append(token_id(marked))
-        rb.append(i)
-        re_.append(min(i + _SUBWORD_CHUNK, n))
-        masks.append(MASK_NONE if i == 0 else MASK_CONTINUATION)
-    return tuple(pieces), tuple(ids), tuple(rb), tuple(re_), tuple(masks)
+CHUNK = ChunkTokenizer()
+tokenize_with_offsets = CHUNK.tokenize_with_offsets
 
 
-class WordPieceTokenizer:
+class WordPieceTokenizer(Tokenizer):
     """WordPiece: longest-match-first sub-word split with ``##``
     continuations and the BERT ``lower_case`` / ``strip_accents``
     normalization flags the reference exposes
@@ -144,10 +174,8 @@ class WordPieceTokenizer:
     back to source char indices, so accent-expanding or case-expanding
     inputs keep char-exact spans. A word with any unmatchable position (or
     longer than ``max_input_chars_per_word``) becomes one ``[UNK]`` piece
-    spanning the whole word — BERT's whole-word-UNK rule.
-
-    Same ``tokenize_with_offsets`` contract as the default chunk tokenizer;
-    plug into the pipeline with ``PipelineConfig(tokenizer="wordpiece")``.
+    spanning the whole word — BERT's whole-word-UNK rule. Plug into the
+    pipeline with ``PipelineConfig(tokenizer="wordpiece")``.
     """
 
     UNK = "[UNK]"
@@ -155,6 +183,7 @@ class WordPieceTokenizer:
     def __init__(self, vocab, lower_case: bool = False,
                  strip_accents: bool | None = None,
                  max_input_chars_per_word: int = 100):
+        super().__init__()
         self.vocab = frozenset(vocab)
         self.lower_case = lower_case
         # unset strip_accents follows lower_case — BERT BasicTokenizer's
@@ -246,34 +275,15 @@ class WordPieceTokenizer:
             start = end
         return out
 
-    def tokenize_with_offsets(self, text: str) -> TokenizedInput:
-        pieces: list[str] = []
-        ids: list[int] = []
-        begins: list[int] = []
-        ends: list[int] = []
-        masks: list[int] = []
-        for m in _WORD_RE.finditer(text):
-            word = m.group(0)
-            start = m.start()
-            sub = None
-            if len(word) <= self.max_input_chars_per_word:
-                norm, idx_map = self._normalize(word)
-                if norm:
-                    sub = self._wordpiece(norm)
-            if sub is None:
-                pieces.append(self.UNK)
-                ids.append(token_id(self.UNK))
-                begins.append(start)
-                ends.append(start + len(word))
-                masks.append(MASK_NONE)
-                continue
-            for piece, s, e in sub:
-                pieces.append(piece)
-                ids.append(token_id(piece))
-                begins.append(start + idx_map[s])
-                ends.append(start + idx_map[e - 1] + 1)
-                masks.append(MASK_NONE if s == 0 else MASK_CONTINUATION)
-        return TokenizedInput(pieces, ids, begins, ends, masks)
+    def split_word(self, word: str) -> list[tuple[str, int, int]]:
+        sub = None
+        if len(word) <= self.max_input_chars_per_word:
+            norm, idx_map = self._normalize(word)
+            if norm:
+                sub = self._wordpiece(norm)
+        if sub is None:
+            return [(self.UNK, 0, len(word))]
+        return [(piece, idx_map[s], idx_map[e - 1] + 1) for piece, s, e in sub]
 
 
 def clean_up_tokenization(text: str) -> str:
@@ -328,7 +338,7 @@ def longest_first_keep(n_a: int, n_b: int, max_content: int) -> tuple[int, int]:
 
 
 def truncate_pairs(texts_a: list[str], texts_b: list[str], max_length: int,
-                   n_special: int = 3, tokenizer=None
+                   n_special: int = 3, tokenizer: Tokenizer = CHUNK
                    ) -> tuple[list[str], list[str]]:
     """Joint LongestFirst truncation over a BATCH of (premise, hypothesis)
     pairs — the shared hot-path form behind score_candidates and
@@ -337,9 +347,9 @@ def truncate_pairs(texts_a: list[str], texts_b: list[str], max_length: int,
     label-independent), then the per-pair LongestFirst math is cheap.
 
     The char-count precheck (len(chars) <= budget implies len(tokens) <=
-    budget) applies ONLY to the default chunk tokenizer, where every piece
-    covers >= 1 char; byte-level BPE emits up to 4 tokens per char, so a
-    pluggable tokenizer always takes the tokenize path.
+    budget) applies ONLY to ``CHUNK``, whose pieces never share a char;
+    byte-level BPE emits up to 4 tokens per char, so every other tokenizer
+    always takes the tokenize path.
 
     Budget softness: the cut is CHAR-granular (each side is sliced at its
     last kept token's END offset). For byte-level tokenizers a kept-token
@@ -355,9 +365,7 @@ def truncate_pairs(texts_a: list[str], texts_b: list[str], max_length: int,
     def tok(t: str) -> TokenizedInput:
         got = cache.get(t)
         if got is None:
-            got = (tokenizer.tokenize_with_offsets(t) if tokenizer is not None
-                   else tokenize_with_offsets(t))
-            cache[t] = got
+            got = cache[t] = tokenizer.tokenize_with_offsets(t)
         return got
 
     def cut(text, ti, keep):
@@ -368,7 +376,7 @@ def truncate_pairs(texts_a: list[str], texts_b: list[str], max_length: int,
     out_a: list[str] = []
     out_b: list[str] = []
     for a, b in zip(texts_a, texts_b):
-        if tokenizer is None and len(a) + len(b) <= budget:
+        if tokenizer is CHUNK and len(a) + len(b) <= budget:
             out_a.append(a)
             out_b.append(b)
             continue
@@ -380,7 +388,8 @@ def truncate_pairs(texts_a: list[str], texts_b: list[str], max_length: int,
 
 
 def encode_pair_truncated(text_a: str, text_b: str, max_length: int,
-                          n_special: int = 3, tokenizer=None) -> tuple[str, str]:
+                          n_special: int = 3,
+                          tokenizer: Tokenizer = CHUNK) -> tuple[str, str]:
     """Single-pair form of ``truncate_pairs``: tokenize both sides, apply
     LongestFirst to the content budget ``max_length - n_special`` (BERT
     pair layout [CLS] A [SEP] B [SEP] -> 3 specials), and slice each
@@ -417,7 +426,7 @@ _B2U = _bytes_to_unicode()
 _U2B = {u: b for b, u in _B2U.items()}
 
 
-class BPETokenizer:
+class BPETokenizer(Tokenizer):
     """Byte-level BPE (the GPT-2/RoBERTa family of the reference's
     TokenizerOption closed enum, src/pipelines/common.rs:258-330; HF adapter
     surface hf_tokenizers.rs:105-497). The rust_tokenizers crate backing the
@@ -442,20 +451,18 @@ class BPETokenizer:
     multibyte char's bytes; the two pieces then both cover that char
     (begins/ends overlap by one char) — exactly how byte-level offsets
     degrade on astral/multibyte input, property-tested. ``decode`` inverts
-    the proxy alphabet back to bytes (round-trip exact per word).
-
-    Same ``tokenize_with_offsets`` contract as chunk/WordPiece; plug in
+    the proxy alphabet back to bytes (round-trip exact per word). Plug in
     with ``PipelineConfig(tokenizer="bpe")``.
     """
 
     def __init__(self, merges: list[tuple[str, str]],
                  vocab: dict[str, int] | None = None):
+        super().__init__()
         self.ranks: dict[tuple[str, str], int] = {
             pair: i for i, pair in enumerate(merges)}
         # token -> checkpoint id, when mounted from a vocab.json; the
         # pipeline's hash ids stay the default (convert_token_to_id)
         self.vocab = dict(vocab) if vocab else None
-        self._cache: dict[tuple[str, ...], list[str]] = {}
 
     @classmethod
     def from_files(cls, vocab_path, merges_path) -> "BPETokenizer":
@@ -555,10 +562,7 @@ class BPETokenizer:
     def _bpe(self, seq: tuple[str, ...]) -> list[str]:
         """Apply merges by rank: the present pair with the LOWEST rank is
         merged (all adjacent occurrences) each pass — the GPT-2 encode
-        loop. Per-word memoized: natural-language words repeat heavily."""
-        hit = self._cache.get(seq)
-        if hit is not None:
-            return hit
+        loop."""
         word = list(seq)
         while len(word) > 1:
             ranked = [(self.ranks[p], p) for p in zip(word, word[1:])
@@ -567,34 +571,22 @@ class BPETokenizer:
                 break
             _, pair = min(ranked)
             word = list(self._merge_seq(tuple(word), pair))
-        self._cache[seq] = word
         return word
 
-    def tokenize_with_offsets(self, text: str) -> TokenizedInput:
-        pieces: list[str] = []
-        ids: list[int] = []
-        begins: list[int] = []
-        ends: list[int] = []
-        masks: list[int] = []
-        for m in _WORD_RE.finditer(text):
-            word = m.group(0)
-            start = m.start()
-            proxies: list[str] = []
-            byte_char: list[int] = []    # source char index per byte
-            for ci, ch in enumerate(word):
-                for b in ch.encode("utf-8"):
-                    proxies.append(_B2U[b])
-                    byte_char.append(ci)
-            pos = 0
-            for j, piece in enumerate(self._bpe(tuple(proxies))):
-                b0, b1 = pos, pos + len(piece)
-                pos = b1
-                pieces.append(piece)
-                ids.append(token_id(piece))
-                begins.append(start + byte_char[b0])
-                ends.append(start + byte_char[b1 - 1] + 1)
-                masks.append(MASK_NONE if j == 0 else MASK_CONTINUATION)
-        return TokenizedInput(pieces, ids, begins, ends, masks)
+    def split_word(self, word: str) -> list[tuple[str, int, int]]:
+        proxies: list[str] = []
+        byte_char: list[int] = []    # source char index per byte
+        for ci, ch in enumerate(word):
+            for b in ch.encode("utf-8"):
+                proxies.append(_B2U[b])
+                byte_char.append(ci)
+        out = []
+        pos = 0
+        for piece in self._bpe(tuple(proxies)):
+            out.append((piece, byte_char[pos],
+                        byte_char[pos + len(piece) - 1] + 1))
+            pos += len(piece)
+        return out
 
     def decode(self, pieces) -> str:
         """pieces -> original bytes -> text (exact inverse of the proxy
@@ -604,7 +596,7 @@ class BPETokenizer:
                      for ch in piece).decode("utf-8", errors="replace")
 
 
-class UnigramTokenizer:
+class UnigramTokenizer(Tokenizer):
     """SentencePiece-unigram-style tokenizer (the T5/XLNet/Marian/Albert
     side of the reference's TokenizerOption enum, common.rs:258-330):
     segment each word into the piece sequence MAXIMIZING the sum of piece
@@ -622,8 +614,8 @@ class UnigramTokenizer:
     Never [UNK]: any char not in the piece table gets an implicit deeply
     penalized single-char fallback score, so Viterbi always finds a path
     (SentencePiece's byte-fallback analog). Offsets are codepoint-exact
-    into the original text. Same ``tokenize_with_offsets`` contract;
-    plug in with ``PipelineConfig(tokenizer="unigram")``.
+    into the original text. Plug in with
+    ``PipelineConfig(tokenizer="unigram")``.
     """
 
     WORD_SCORE = -1.0      # in-vocab full words / learned pieces
@@ -631,6 +623,7 @@ class UnigramTokenizer:
     FALLBACK_SCORE = -100.0  # unknown single char (never blocks a path)
 
     def __init__(self, pieces: dict[str, float]):
+        super().__init__()
         self.pieces = dict(pieces)
         self.max_piece_len = max((len(p) for p in self.pieces), default=1)
 
@@ -703,23 +696,8 @@ class UnigramTokenizer:
         spans.reverse()
         return spans
 
-    def tokenize_with_offsets(self, text: str) -> TokenizedInput:
-        pieces: list[str] = []
-        ids: list[int] = []
-        begins: list[int] = []
-        ends: list[int] = []
-        masks: list[int] = []
-        for m in _WORD_RE.finditer(text):
-            word = m.group(0)
-            start = m.start()
-            for j, (s, e) in enumerate(self._viterbi(word)):
-                piece = word[s:e]
-                pieces.append(piece)
-                ids.append(token_id(piece))
-                begins.append(start + s)
-                ends.append(start + e)
-                masks.append(MASK_NONE if j == 0 else MASK_CONTINUATION)
-        return TokenizedInput(pieces, ids, begins, ends, masks)
+    def split_word(self, word: str) -> list[tuple[str, int, int]]:
+        return [(word[s:e], s, e) for s, e in self._viterbi(word)]
 
 
 # --------------------------------------------------------------------------
@@ -969,7 +947,7 @@ def _reference_feature_flag(
 
 def generate_features(
     text: str, example_index: int, max_length: int = 64, n_special: int = 2,
-    tokenizer: WordPieceTokenizer | None = None,
+    tokenizer: Tokenizer = CHUNK,
 ) -> list[InputFeature]:
     """Split one text into overlapping spans.
 
@@ -982,8 +960,7 @@ def generate_features(
           if end == n_tokens: break
           start = end - doc_stride
     """
-    tok = (tokenizer.tokenize_with_offsets(text) if tokenizer is not None
-           else tokenize_with_offsets(text))
+    tok = tokenizer.tokenize_with_offsets(text)
     total = len(tok.ids)
     max_content_length = max_length - n_special
     doc_stride = max_length // 4

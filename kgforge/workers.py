@@ -29,21 +29,24 @@ def get_token_classifier(seed: int = 42,
 
 
 def get_tokenizer(kind: str = "chunk"):
-    """None for the default chunk tokenizer; a per-worker singleton for the
-    sub-word tokenizers (``wordpiece`` | ``bpe`` | ``unigram`` — the three
-    algorithm families of the reference's TokenizerOption closed enum,
-    common.rs:258-330), each built once from the synthetic catalog + trigger
-    vocab. A real deployment would construct the tokenizer from the
-    checkpoint's vocab/merges/model file here — same contract."""
+    """``tokenization.CHUNK`` for the default chunk tokenizer; a per-worker
+    singleton for the sub-word tokenizers (``wordpiece`` | ``bpe`` |
+    ``unigram`` — the three algorithm families of the reference's
+    TokenizerOption closed enum, common.rs:258-330), each built once from
+    the synthetic catalog + trigger vocab. A real deployment would construct
+    the tokenizer from the checkpoint's vocab/merges/model file here — same
+    contract."""
+    # imported here, so a worker that only embeds or scores NLI never
+    # loads the tokenizers
+    from .tokenization import (CHUNK, BPETokenizer, UnigramTokenizer,
+                               WordPieceTokenizer)
     if kind == "chunk":
-        return None
+        return CHUNK
     if kind not in ("wordpiece", "bpe", "unigram"):
         raise ValueError(f"unknown tokenizer kind: {kind!r}")
     key = ("tokenizer", kind)
     if key not in _CACHE:
         from .synth import wordpiece_vocab_words
-        from .tokenization import (BPETokenizer, UnigramTokenizer,
-                                   WordPieceTokenizer)
         words = wordpiece_vocab_words()
         if kind == "wordpiece":
             _CACHE[key] = WordPieceTokenizer.from_words(words,

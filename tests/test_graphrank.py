@@ -59,29 +59,33 @@ def test_pagerank_partition_invariant_and_deterministic(spark):
     assert a == b  # exact float equality, not approx
 
 
-def test_pagerank_plain_sum_mode_close_but_scale_shaped(spark):
-    """deterministic=False (the hot-row-free scale path) agrees to float
-    tolerance and its aggregation is a plain partial-combine sum."""
+def test_pagerank_plain_sum_mode_close_but_scale_shaped(spark, monkeypatch):
+    """With every node over the fold cap (DET_FOLD_CAP = -1), every node
+    takes the hot-row-free plain partial-combine sum, and it agrees with
+    the sorted fold to float tolerance."""
+    from kgforge import graphrank
     from kgforge.graphrank import pagerank
     edges = spark.createDataFrame(EDGES, ["src", "dst"])
     det = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
-    fast = {r["node"]: r["rank"]
-            for r in pagerank(edges, deterministic=False).collect()}
+    monkeypatch.setattr(graphrank, "DET_FOLD_CAP", -1)
+    fast = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
     for v in det:
         assert fast[v] == pytest.approx(det[v], rel=1e-12)
 
 
-def test_pagerank_hub_cap_forces_sum_branch(spark):
-    """A node whose in-degree exceeds det_fold_cap takes the plain-sum
-    branch INSIDE the deterministic mode (no giant collected row): values
-    still match the pure-Python oracle to float tolerance, and sub-cap
-    nodes keep the bit-stable fold (partition-invariant)."""
+def test_pagerank_hub_cap_forces_sum_branch(spark, monkeypatch):
+    """A node whose in-degree exceeds DET_FOLD_CAP takes the plain-sum
+    branch in the same aggregation (no giant collected row): values still
+    match the pure-Python oracle to float tolerance, and sub-cap nodes
+    keep the bit-stable fold (partition-invariant)."""
+    from kgforge import graphrank
     from kgforge.graphrank import pagerank
+    monkeypatch.setattr(graphrank, "DET_FOLD_CAP", 4)
     hub_edges = EDGES + [(f"x{i}", "c") for i in range(8)]  # c in-deg > 4
     one = spark.createDataFrame(hub_edges, ["src", "dst"]).coalesce(1)
     many = spark.createDataFrame(hub_edges, ["src", "dst"]).repartition(7)
     got = {r["node"]: r["rank"]
-           for r in pagerank(one, det_fold_cap=4).collect()}
+           for r in pagerank(one).collect()}
     want = _reference_pagerank(hub_edges)
     assert set(got) == set(want)
     for v in want:
@@ -90,7 +94,7 @@ def test_pagerank_hub_cap_forces_sum_branch(spark):
     # they propagate through later rounds), but everything agrees to
     # float tolerance — the trade the cap buys
     b = {r["node"]: r["rank"]
-         for r in pagerank(many, det_fold_cap=4).collect()}
+         for r in pagerank(many).collect()}
     for v in want:
         assert got[v] == pytest.approx(b[v], rel=1e-12), v
 

@@ -104,7 +104,7 @@ def test_batch_entities_windowed_gazetteer_text():
 def test_featurize_matches_generate_features(texts, kind, max_length):
     cfg = PipelineConfig(tokenizer=kind, max_length=max_length)
     tokenizer = get_tokenizer(kind)
-    feats = featurize(texts, cfg, tokenizer)
+    feats = featurize(texts, cfg)
     want = [f for i, t in enumerate(texts)
             for f in generate_features(t, i, cfg.max_length,
                                        cfg.n_special_tokens, tokenizer)]

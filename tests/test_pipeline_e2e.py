@@ -477,7 +477,12 @@ def test_checkpoint_of_older_stage_format_is_recomputed(spark, tiny_pages_df,
     from kgforge.extract import extractor_hash
 
     wd = str(tmp_path / "wd")
-    old_cand = [f.name for f in schemas.CANDIDATE.fields] + ["score"]
+    # that format's candidate: every Candidate field and the score, no
+    # argument ids; the fields today's format dropped get placeholders
+    old_cand = [("subj_word", None), ("subj_type", ""), ("subj_begin", 0),
+                ("subj_end", 0), ("obj_word", None), ("obj_type", ""),
+                ("obj_begin", 0), ("obj_end", 0), ("pred", None),
+                ("hypothesis", ""), ("score", None)]
     ner = stage_ner_score(
         repartition_by_length(stage_extract_sentences(tiny_pages_df), cfg), cfg)
     old = ner.select(
@@ -486,7 +491,8 @@ def test_checkpoint_of_older_stage_format_is_recomputed(spark, tiny_pages_df,
             *[e[c].alias(c) for c in schemas.ENTITY.fieldNames()])
         ).alias("entities"),
         F.transform("cands", lambda c: F.struct(
-            *[c[n].alias(n) for n in old_cand])).alias("cands"))
+            *[(c[n] if v is None else F.lit(v)).alias(n)
+              for n, v in old_cand])).alias("cands"))
     path = os.path.join(wd, "s2s3_ner_scored")
     write_stage(old, path, "s2s3_ner_scored", cfg.config_hash(),
                 f"{cfg.model_name}:{extractor_hash()}")

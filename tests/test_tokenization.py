@@ -4,16 +4,22 @@ reference (generate_features token_classification.rs:808-883; ownership flags
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from kgforge.config import PipelineConfig
 from kgforge.ner import featurize
 from kgforge.tokenization import (
+    _WORD_RE,
+    MASK_CONTINUATION,
+    MASK_NONE,
     MASK_SPECIAL,
     generate_features,
     split_sentences,
+    token_id,
     tokenize_with_offsets,
 )
+from kgforge.workers import get_tokenizer
 
 
 def test_offsets_are_char_exact_multibyte():
@@ -116,12 +122,63 @@ def test_sentence_split_offsets_compose():
 
 
 # --------------------------------------------------------------------------
+# the one tokenize_with_offsets contract, shared by every tokenizer family
+# --------------------------------------------------------------------------
+
+_contract_texts = st.text(
+    alphabet=st.one_of(
+        st.characters(codec="utf-8", exclude_categories=("Cs",)),
+        # combining marks, "_", digits, non-ASCII letters, spaces
+        st.sampled_from("\u0301\u0308\u0327_0123456789 éøßİ日語 .-")),
+    max_size=200)
+
+
+@pytest.mark.parametrize("kind", ["chunk", "wordpiece", "bpe", "unigram"])
+@settings(max_examples=150, deadline=None)
+@given(text=_contract_texts)
+@example(text="")
+@example(text="e\u0301 __init__ 2024 İstanbul")
+def test_tokenizer_contract(kind, text):
+    """Equal list lengths; ids are token_id of the pieces; each _WORD_RE
+    word is one MASK_NONE piece followed by MASK_CONTINUATION pieces, each
+    inside the word's span."""
+    t = get_tokenizer(kind).tokenize_with_offsets(text)
+    n = len(t.pieces)
+    assert len(t.ids) == len(t.begins) == len(t.ends) == len(t.masks) == n
+    assert t.ids == [token_id(p) for p in t.pieces]
+    k = 0
+    for m in _WORD_RE.finditer(text):
+        assert k < n and t.masks[k] == MASK_NONE, (m.group(), k)
+        first = k
+        k += 1
+        while k < n and t.masks[k] == MASK_CONTINUATION:
+            k += 1
+        for j in range(first, k):
+            assert m.start() <= t.begins[j] < t.ends[j] <= m.end()
+    assert k == n
+
+
+def test_chunk_gazetteer_keys_on_first_four_chars():
+    """The chunk gazetteer keys each catalog word on its first 4 chars,
+    the chunk tokenizer's initial piece."""
+    from kgforge.config import NER_LABEL2ID
+    from kgforge.synth import build_gazetteer, entity_catalog
+    want: dict[int, int] = {}
+    for ent in entity_catalog():
+        for surface in {ent.canonical, *ent.aliases}:
+            for wi, word in enumerate(surface.split()):
+                tag = "B" if wi == 0 else "I"
+                want.setdefault(token_id(word[:4]),
+                                NER_LABEL2ID[f"{tag}-{ent.etype}"])
+    assert build_gazetteer() == want
+
+
+# --------------------------------------------------------------------------
 # WordPiece tokenizer (longest-match-first, ##, lower_case/strip_accents —
 # the flags of token_classification.rs:237-242)
 # --------------------------------------------------------------------------
 
-from kgforge.tokenization import (MASK_CONTINUATION, MASK_NONE,
-                                  WordPieceTokenizer)
+from kgforge.tokenization import WordPieceTokenizer
 
 
 def test_wordpiece_longest_match_first():
