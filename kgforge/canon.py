@@ -51,6 +51,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # overhead where union-find over sf1.0's 286k near-dup pairs takes ~0.2 s.
 COLLECT_THRESHOLD = 2_000_000
 
+# Star-round budget of connected_components. Alternating rounds converge in
+# O(log n): a 64-node path needs fewer than 10. Read per call.
+MAX_ITERATIONS = 20
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> new edges after one large-star round."""
@@ -95,23 +99,21 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"] or 0), int(row["h"] or 0)
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 20, materialize: bool = False
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, component), node ids of one orderable type
     (e.g. prefixed strings, bigint).
 
     component is the minimum node id of the node's component in that type's
-    order. Deterministic; converges in O(log n) alternating rounds.
+    order. Deterministic; converges in O(log n) alternating rounds, at most
+    ``MAX_ITERATIONS`` of them.
 
     Each round localCheckpoints its edge set (lineage would otherwise grow
     exponentially through the self-joins); RETIRED rounds' blocks are freed
     eagerly via ``_release_local_checkpoint`` — DataFrame.unpersist cannot
     release localCheckpoint storage, and the SQL listener pins the plans so
-    ContextCleaner never reclaims them within a session. With
-    ``materialize=True`` the final mapping itself is localCheckpointed and
-    the last iteration state freed, so the caller may drop the input edges
-    cache immediately.
+    ContextCleaner never reclaims them within a session. The returned
+    mapping is itself localCheckpointed and the last iteration state freed,
+    so the caller may drop the input edges cache immediately.
     """
     spark = edges.sparkSession
     # Spark 4.1's UnionBase.rewriteConstraints crashes ("key not found:
@@ -130,7 +132,7 @@ def connected_components(
         )
         prev_sig = None
         converged = False
-        for _ in range(max_iterations):
+        for _ in range(MAX_ITERATIONS):
             nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
             sig = _checksum(nxt)
             _release_local_checkpoint(cur)   # retired iteration state
@@ -145,8 +147,8 @@ def connected_components(
             # never return it silently
             warnings.warn(
                 f"connected_components: edge-set checksum did not stabilize "
-                f"within max_iterations={max_iterations}; the returned "
-                f"mapping may be unconverged — raise max_iterations",
+                f"within MAX_ITERATIONS={MAX_ITERATIONS} rounds; the returned "
+                f"mapping may be unconverged — raise canon.MAX_ITERATIONS",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -169,10 +171,9 @@ def connected_components(
               "node", "left_anti")
         .withColumn("component", F.col("node"))
     )
-    out = members.unionByName(roots).unionByName(singletons)
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        _release_local_checkpoint(cur)
+    out = (members.unionByName(roots).unionByName(singletons)
+           .localCheckpoint(eager=True))
+    _release_local_checkpoint(cur)
     return out
 
 
@@ -181,9 +182,10 @@ def components(edges: DataFrame) -> DataFrame:
     component is not the node itself, ids in the edge columns' type. At
     most ``COLLECT_THRESHOLD`` edges (one Arrow download) run
     ``cc_unionfind`` and come back through ``moved_frame``; more run
-    ``connected_components``' materialized mapping. The threshold and both
-    branches are looked up in this module per call, so a patched threshold
-    switches the branch and wrappers patched onto it see either one."""
+    ``connected_components``, whose mapping is localCheckpointed. The
+    threshold and both branches are looked up in this module per call, so
+    a patched threshold switches the branch and wrappers patched onto it
+    see either one."""
     table = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
     if table.num_rows <= COLLECT_THRESHOLD:
         mapping = cc_unionfind(list(zip(table.column("src").to_pylist(),
@@ -191,12 +193,12 @@ def components(edges: DataFrame) -> DataFrame:
         return moved_frame(edges.sparkSession, mapping,
                            table.schema.field("src").type)
     # connected_components reads its input twice; persist (not
-    # localCheckpoint, which unpersist cannot release). The materialized
-    # mapping frees the edges and the CC iteration state here — a lazy plan
-    # would pin them in storage for the session lifetime.
+    # localCheckpoint, which unpersist cannot release). Its mapping is
+    # materialized, so the edges and the CC iteration state go here — a
+    # lazy plan would pin them in storage for the session lifetime.
     edges = edges.persist()
     try:
-        return connected_components(edges, materialize=True).where(
+        return connected_components(edges).where(
             F.col("node") != F.col("component"))
     finally:
         edges.unpersist(blocking=True)

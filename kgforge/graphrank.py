@@ -41,6 +41,10 @@ from .canon import _release_local_checkpoint
 
 DAMPING = 0.85
 
+# fixed rounds: at corpus scale a fixed small K is the norm (a convergence
+# test costs a full pass each). Read per call.
+ITERS = 10
+
 # in-degree above which the deterministic sorted-fold falls back to a plain
 # sum for that node: a hub's contribution row would otherwise grow with its
 # in-degree (power-law on entity graphs — unbounded at 100x scale). Read
@@ -48,13 +52,12 @@ DAMPING = 0.85
 DET_FOLD_CAP = 1024
 
 
-def pagerank(edges: DataFrame, iters: int = 10,
-             damping: float = DAMPING) -> DataFrame:
-    """Iterate PageRank over a directed edge list (``src``, ``dst``).
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Iterate PageRank over a directed edge list (``src``, ``dst``) for
+    ``ITERS`` rounds with damping ``DAMPING``.
 
     Returns (node, rank). Edges are deduplicated; sinks get self-loops
-    (see module docstring). ``iters`` fixed rounds — at corpus scale a
-    fixed small K is the norm (convergence tests cost a full pass each)."""
+    (see module docstring)."""
     # Materialization boundaries matter: edges may carry an ARBITRARILY
     # expensive lineage (kg_pagerank feeds the full pipeline's triples in),
     # and the loop runs one job per round — so the deduped edge set is
@@ -91,8 +94,8 @@ def pagerank(edges: DataFrame, iters: int = 10,
         return nodes.select("node", F.lit(0.0).alias("rank"))
     ranks = (nodes.select("node", (F.lit(1.0) / n_nodes).alias("rank"))
              .localCheckpoint(eager=True))
-    base = (1.0 - damping) / n_nodes
-    for _ in range(iters):
+    base = (1.0 - DAMPING) / n_nodes
+    for _ in range(ITERS):
         contribs = (e.join(ranks, e["src"] == ranks["node"])
                     .select("dst", "src", "is_hot",
                             (F.col("rank") / F.col("out_deg"))
@@ -116,7 +119,7 @@ def pagerank(edges: DataFrame, iters: int = 10,
                           .otherwise(F.col("cold_s")).alias("s")))
         nxt = (nodes.join(summed, nodes["node"] == summed["dst"], "left")
                .select("node",
-                       (F.lit(base) + F.lit(damping)
+                       (F.lit(base) + F.lit(DAMPING)
                         * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"))
                .localCheckpoint(eager=True))
         _release_local_checkpoint(ranks)

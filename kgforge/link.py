@@ -13,9 +13,9 @@ Two-tier resolution, exactly the shape mandated by the north star:
    sentence-embeddings semantics (masked mean pooling + L2 normalize,
    src/pipelines/sentence_embeddings/layers.rs:39-76, pipeline.rs:403-411).
 
-``rerank_ambiguous`` is the pure core; the Spark stage feeds it grouped
-Arrow batches. ``cosine_topk_blocked`` is the general blocked brute-force
-ANN used for similarity search over an embeddings table.
+``rerank_ambiguous`` is the pure core; ``pipeline._resolve_norms`` calls it
+once per Arrow batch of the fused eval. ``cosine_topk`` is the exact
+brute-force top-k that tests compare the ANN indexes against.
 """
 
 from __future__ import annotations

@@ -479,8 +479,11 @@ def run_pipeline(
     return triples
 
 
-def materialize_triples(triples: DataFrame, path: str,
-                        write_buckets: int = 8) -> None:
+# writer tasks per predicate directory in materialize_triples; read per call
+WRITE_BUCKETS = 8
+
+
+def materialize_triples(triples: DataFrame, path: str) -> None:
     """Partitioned table write: predicate-partitioned, url-sorted within
     partitions (the parquet analog of the Iceberg layout in the north star;
     the writer is isolated here so an Iceberg `writeTo` is a one-line swap).
@@ -488,14 +491,14 @@ def materialize_triples(triples: DataFrame, path: str,
     Write parallelism: repartitioning on `pred` alone would funnel the whole
     output through <= n_predicates tasks (4 here) and one hot predicate would
     serialize ~everything — a scale-killer invisible at sf0.1. Instead we
-    repartition on (pred, pmod(xxhash64(url), B)) so each predicate directory
-    is written by B tasks, while partitionBy('pred') still gives the
-    one-directory-per-predicate layout."""
+    repartition on (pred, pmod(xxhash64(url), WRITE_BUCKETS)) so each
+    predicate directory is written by WRITE_BUCKETS tasks, while
+    partitionBy('pred') still gives the one-directory-per-predicate layout."""
     (
         triples
         .repartition(
             F.col("pred"),
-            F.pmod(F.xxhash64("url"), F.lit(write_buckets)))
+            F.pmod(F.xxhash64("url"), F.lit(WRITE_BUCKETS)))
         .sortWithinPartitions("url")
         .write.mode("overwrite")
         .partitionBy("pred")

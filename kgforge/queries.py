@@ -341,11 +341,11 @@ FROM s
 
 
 NGRAM_HOT_BAND_CAP = 4096  # docs per band above which the bucket row is
-                           # not collected (see q_ngram_jaccard_pairs)
+                           # not collected (see q_ngram_jaccard_pairs);
+                           # read when the plan is built
 
 
-def q_ngram_jaccard_pairs(spark, sf_dir,
-                          hot_band_cap: int = NGRAM_HOT_BAND_CAP):
+def q_ngram_jaccard_pairs(spark, sf_dir):
     """Near-dup candidate pairs: same-lang docs blocked by shared minhash
     band (mh1), then exact word-set Jaccard (ratio of exact ints).
     Blocking-first is the scale path: the quadratic compare runs only inside
@@ -358,12 +358,12 @@ def q_ngram_jaccard_pairs(spark, sf_dir,
     Exchange (hash on band) feeds a window count n = |band|, then bands
     route by size:
 
-    - n <= hot_band_cap (everything, in non-adversarial data): the fused
+    - n <= NGRAM_HOT_BAND_CAP (everything, in non-adversarial data): the fused
       shape — collect the bucket into one row and generate the i<j pairs
       map-side with posexplode + slice. No join, no second shuffle (the
       groupBy reuses the window's hash partitioning), and the bucket row is
-      BOUNDED at hot_band_cap structs.
-    - n > hot_band_cap (a pathological hot band — boilerplate shingle
+      BOUNDED at NGRAM_HOT_BAND_CAP structs.
+    - n > NGRAM_HOT_BAND_CAP (a pathological hot band — boilerplate shingle
       shared by millions of docs): the same pairs via an exact per-band
       self-join, which never materializes the bucket in one row. Both join
       sides are branches of the same windowed frame, so at runtime AQE
@@ -412,7 +412,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir,
     dn = (d.withColumn("n", F.count(F.lit(1))
                        .over(Window.partitionBy("band")))
           .where(F.col("n") >= 2))
-    bucket = (dn.where(F.col("n") <= hot_band_cap)
+    bucket = (dn.where(F.col("n") <= NGRAM_HOT_BAND_CAP)
               .groupBy("band")
               .agg(F.collect_list(F.struct("doc_id", "lang", "ws")).alias("docs")))
     # unordered i<j pairs, generated per bucket without a self-join: for the
@@ -428,7 +428,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir,
                         F.col("y.doc_id").alias("id_b"),
                         F.col("y.lang").alias("lang_b"),
                         F.col("y.ws").alias("ws_b")))
-    hot = dn.where(F.col("n") > hot_band_cap)
+    hot = dn.where(F.col("n") > NGRAM_HOT_BAND_CAP)
     xy_hot = (hot.select("band", F.col("doc_id").alias("id_a"),
                          F.col("lang").alias("lang_a"),
                          F.col("ws").alias("ws_a"))
@@ -1186,9 +1186,6 @@ def q_embedding_neardup(spark, sf_dir):
     emb = _emb(spark, sf_dir).select(
         "vec_id", "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("label").alias("block"),
                    F.col("v").alias("va"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("label").alias("block"),
@@ -1196,9 +1193,7 @@ def q_embedding_neardup(spark, sf_dir):
     return (
         a.join(b, "block")
         .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b",
-                (dot(F.col("va"), F.col("vb"))
-                 / (norm(F.col("va")) * norm(F.col("vb")))).alias("cos"))
+        .select("vec_a", "vec_b", _cosine("va", "vb").alias("cos"))
         .where(F.col("cos") >= 0.3)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cos_sim"))
     )
@@ -1225,37 +1220,56 @@ SELECT vec_a, vec_b, round(cos, 6) AS cos_sim FROM sims WHERE cos >= 0.3
 # similarity search over embeddings
 # --------------------------------------------------------------------------
 
-def q_embedding_topk(spark, sf_dir, n_queries: int = 5, k: int = 5):
+# The top-k queries' settings, read when a plan is built: query vectors are
+# vec_id < EMB_QUERIES, each keeps its EMB_K best; LSH hashes LSH_TABLES
+# tables of LSH_PLANES hyperplanes; IVF trains IVF_CENTROIDS centroids on
+# vec_id < IVF_TRAIN and probes IVF_PROBE inverted lists per query.
+EMB_QUERIES = EMB_K = 5
+LSH_PLANES = LSH_TABLES = 8
+IVF_CENTROIDS, IVF_PROBE, IVF_TRAIN = 16, 4, 256
+
+
+def _cosine(a, b):
+    """Cosine of two numeric array columns: elements cast to double and
+    folded in list order (identical on both engines)."""
+    def dot(u, v):
+        return F.aggregate(
+            F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0), lambda acc, x: acc + x)
+    a, b = F.col(a), F.col(b)
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+def _top_k(pairs: DataFrame) -> DataFrame:
+    """(query_id, corpus_id, cos) -> each query's EMB_K best corpus ids by
+    (cos desc, corpus_id), with rank and the cosine rounded to 6 dp."""
+    from pyspark.sql import Window
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("corpus_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= EMB_K)
+        .select("query_id", "corpus_id", "rank", F.round("cos", 6).alias("cos_sim"))
+    )
+
+
+def q_embedding_topk(spark, sf_dir):
     """Brute-force cosine top-k (the exact ANN baseline): query vectors
-    vec_id < n_queries vs the whole corpus. Ranking is decided on exact
+    vec_id < EMB_QUERIES vs the whole corpus. Ranking is decided on exact
     doubles folded in list order (identical on both engines); the reported
     score is rounded to 6 dp."""
     # _fanout on the corpus side: the per-pair fold-based cosine is the
     # whole cost and a single-row-group scan would evaluate it serially
     emb = _fanout(_emb(spark, sf_dir).select("vec_id", "embedding")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < EMB_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = emb.select(F.col("vec_id").alias("corpus_id"), F.col("v").alias("cv"))
-    sims = (
+    return _top_k(
         q.join(c, F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id",
-                (dot(F.col("qv"), F.col("cv"))
-                 / (norm(F.col("qv")) * norm(F.col("cv")))).alias("cos"))
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("corpus_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", F.round("cos", 6).alias("cos_sim"))
-    )
+        .select("query_id", "corpus_id", _cosine("qv", "cv").alias("cos")))
 
 
-SQL_EMBEDDING_TOPK = """
+SQL_EMBEDDING_TOPK = f"""
 WITH e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
@@ -1266,7 +1280,7 @@ WITH e AS (
          / (sqrt(list_reduce(list_transform(q.v, x -> x * x), (acc, x) -> acc + x))
             * sqrt(list_reduce(list_transform(c.v, x -> x * x), (acc, x) -> acc + x)))
            AS cos
-  FROM e q JOIN e c ON q.vec_id < 5 AND q.vec_id <> c.vec_id
+  FROM e q JOIN e c ON q.vec_id < {EMB_QUERIES} AND q.vec_id <> c.vec_id
 ), ranked AS (
   SELECT query_id, corpus_id,
          row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank,
@@ -1274,20 +1288,18 @@ WITH e AS (
   FROM sims
 )
 SELECT query_id, corpus_id, rank, round(cos, 6) AS cos_sim
-FROM ranked WHERE rank <= 5
+FROM ranked WHERE rank <= {EMB_K}
 """
 
 
-def q_embedding_ann_topk(spark, sf_dir, n_queries: int = 5, k: int = 5,
-                         n_planes: int = 8, n_tables: int = 8):
+def q_embedding_ann_topk(spark, sf_dir):
     """LSH-bucketed ANN top-k (the scale path; brute force above is the
     exact baseline). Signatures are computed in one Arrow pass; candidate
     generation is an equi-join on (table, bucket) — at corpus scale this is
     the move that replaces the all-pairs cross join. Deterministic but
     approximate, so no SQL oracle (recall vs brute force is pytest-gated)."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (ArrayType, FloatType, IntegerType,
-                                   LongType, StructField, StructType)
+    from pyspark.sql.types import (ArrayType, FloatType, LongType,
+                                   StructField, StructType)
 
     def sig_gen(batches):
         import numpy as np
@@ -1296,7 +1308,7 @@ def q_embedding_ann_topk(spark, sf_dir, n_queries: int = 5, k: int = 5,
         for pdf in batches:
             vecs = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             if planes is None and len(vecs):
-                planes = hyperplanes(vecs.shape[1], n_planes, n_tables, 42)
+                planes = hyperplanes(vecs.shape[1], LSH_PLANES, LSH_TABLES, 42)
             rows = {"vec_id": pdf["vec_id"],
                     "embedding": pdf["embedding"],
                     "sigs": list(signatures(vecs, planes).astype("int64"))
@@ -1313,46 +1325,31 @@ def q_embedding_ann_topk(spark, sf_dir, n_queries: int = 5, k: int = 5,
     buckets = sigged.select(
         "vec_id", "embedding", F.posexplode("sigs").alias("table_id", "bucket"))
 
-    q = (buckets.where(F.col("vec_id") < n_queries)
+    q = (buckets.where(F.col("vec_id") < EMB_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"), "table_id", "bucket"))
     c = buckets.select(F.col("vec_id").alias("corpus_id"),
                        F.col("embedding").alias("cv"), "table_id", "bucket")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
     cands = (
         q.join(c, ["table_id", "bucket"])
         .where(F.col("query_id") != F.col("corpus_id"))
         .select("query_id", "corpus_id", "qv", "cv")
         .dropDuplicates(["query_id", "corpus_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("corpus_id"))
-    return (
-        cands
-        .withColumn("cos", dot(F.col("qv"), F.col("cv"))
-                    / (norm(F.col("qv")) * norm(F.col("cv"))))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", F.round("cos", 6).alias("cos_sim"))
-    )
+    return _top_k(cands.withColumn("cos", _cosine("qv", "cv")))
 
 
-def q_embedding_ivf_topk(spark, sf_dir, n_queries: int = 5, k: int = 5,
-                         n_centroids: int = 16, n_probe: int = 4,
-                         train_n: int = 256):
+def q_embedding_ivf_topk(spark, sf_dir):
     """IVF ANN top-k (inverted-file index, the FAISS coarse-quantizer
     design; LSH above is the other scale path). Centroids are trained on a
-    BOUNDED deterministic sample collected to the driver (train_n rows —
+    BOUNDED deterministic sample collected to the driver (IVF_TRAIN rows —
     at 100 TB this stays a seeded bounded sample, the standard IVF recipe),
     then shipped in the task closure: corpus assignment is one Arrow map
     pass, probing is an equi-join on centroid_id, exact cosine reranks
-    JVM-side. Candidate work per query is ~N*n_probe/n_centroids instead
-    of O(N). Deterministic but approximate -> no SQL oracle (recall vs
-    brute force is pytest-gated; values pinned by golden digest)."""
+    JVM-side. Candidate work per query is ~N*IVF_PROBE/IVF_CENTROIDS
+    instead of O(N). Deterministic but approximate -> no SQL oracle (recall
+    vs brute force is pytest-gated; values pinned by golden digest)."""
     import numpy as np
-    from pyspark.sql import Window
     from pyspark.sql.types import (ArrayType, FloatType, LongType,
                                    StructField, StructType)
 
@@ -1364,9 +1361,9 @@ def q_embedding_ivf_topk(spark, sf_dir, n_queries: int = 5, k: int = 5,
     # guard's exchange to their scans, so those branches stay tiny
     emb = _fanout(_emb(spark, sf_dir).select("vec_id", "embedding"))
     train = np.array([np.asarray(r["embedding"], dtype=np.float64)
-                      for r in emb.where(F.col("vec_id") < train_n)
+                      for r in emb.where(F.col("vec_id") < IVF_TRAIN)
                                   .orderBy("vec_id").collect()])
-    cents = kmeans_fit(train, n_centroids, seed=42)
+    cents = kmeans_fit(train, IVF_CENTROIDS, seed=42)
 
     def assign_gen(probes_per_row):
         def gen(batches):
@@ -1390,30 +1387,19 @@ def q_embedding_ivf_topk(spark, sf_dir, n_queries: int = 5, k: int = 5,
     # inverted list. Query side: a separate tiny pass over the
     # pushdown-filtered scan — a vec_id filter cannot push through
     # MapInPandas, so filtering AFTER one shared pass would re-execute the
-    # full-corpus assignment just to keep n_queries rows.
+    # full-corpus assignment just to keep EMB_QUERIES rows.
     c = (emb.mapInPandas(assign_gen(1), schema=sig_schema)
          .select(F.col("vec_id").alias("corpus_id"),
                  F.col("embedding").alias("cv"),
                  F.element_at("probes", 1).alias("centroid_id")))
-    q = (emb.where(F.col("vec_id") < n_queries)
-         .mapInPandas(assign_gen(n_probe), schema=sig_schema)
+    q = (emb.where(F.col("vec_id") < EMB_QUERIES)
+         .mapInPandas(assign_gen(IVF_PROBE), schema=sig_schema)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.explode("probes").alias("centroid_id")))
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("corpus_id"))
-    return (
-        q.join(c, "centroid_id")
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .withColumn("cos", dot(F.col("qv"), F.col("cv"))
-                    / (norm(F.col("qv")) * norm(F.col("cv"))))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", F.round("cos", 6).alias("cos_sim"))
-    )
+    return _top_k(q.join(c, "centroid_id")
+                  .where(F.col("query_id") != F.col("corpus_id"))
+                  .withColumn("cos", _cosine("qv", "cv")))
 
 
 def q_kg_zero_shot(spark, sf_dir):
@@ -1452,38 +1438,11 @@ def q_kg_zero_shot(spark, sf_dir):
         ]))
 
 
-def doc_embeddings_raw(spark, sf_dir):
-    """Raw sentence-embedding vectors over documents (reference
-    sentence_embeddings semantics: masked mean pooling + L2 normalize,
-    layers.rs:39-76 / pipeline.rs:403-411) as ArrayType(FloatType) — the
-    library-facing form of the operator (users compose it with the
-    similarity ops); the driver-contract query ``kg_doc_embeddings`` exposes
-    the scalar digest of the same vectors because the driver's value canon
-    cannot sort array columns."""
-    from pyspark.sql.types import (ArrayType, FloatType, LongType,
-                                   StructField, StructType)
-    from .workers import get_embedder
-
-    def gen(batches):
-        emb = get_embedder(64, 42)
-        for pdf in batches:
-            vecs = emb.encode([str(t) for t in pdf["text"]])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "embedding": [v.tolist() for v in vecs]})
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        gen, schema=StructType([
-            StructField("doc_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]))
-
-
 def q_kg_doc_embeddings(spark, sf_dir):
     """Sentence-embedding op over documents, contract form: scalar/hashable
     columns only (the driver's value canonicalizer cannot sort array columns).
     Emits per-doc vector digest: dim, rounded L2 norm, md5 of the
-    6dp-rounded component string. The raw-vector variant is
-    ``doc_embeddings_raw``; the pooling math itself is pytest-gated
+    6dp-rounded component string. The pooling math itself is pytest-gated
     (tests/test_embeddings.py)."""
     import hashlib
 

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import inspect
 import random
 
+import pytest
 
+from kgforge import canon
 from kgforge.canon import cc_unionfind, connected_components
 
 
@@ -51,14 +54,31 @@ def test_cc_random_graphs_match_unionfind(spark):
     _check(spark, edges)
 
 
-def test_cc_long_path_log_rounds(spark):
-    # a 64-node path converges well within max_iterations (log-rounds claim)
+def test_cc_long_path_log_rounds(spark, monkeypatch):
+    # a 64-node path converges well within 10 rounds (log-rounds claim)
+    monkeypatch.setattr(canon, "MAX_ITERATIONS", 10)
     edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(63)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {r["node"]: r["component"] for r in
-           connected_components(df, max_iterations=10).collect()}
+           connected_components(df).collect()}
     assert set(got.values()) == {"p00"}
     assert len(got) == 64
+
+
+def test_cc_warns_when_round_budget_runs_out(spark, monkeypatch):
+    """One star round cannot settle a 64-node path: the edge-set checksum
+    never repeats, so the call must say its mapping may be unconverged."""
+    monkeypatch.setattr(canon, "MAX_ITERATIONS", 1)
+    edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(63)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with pytest.warns(RuntimeWarning, match="MAX_ITERATIONS=1 rounds"):
+        connected_components(df)
+
+
+def test_connected_components_takes_only_edges():
+    """The round budget is canon.MAX_ITERATIONS and the mapping is always
+    materialized: no caller-side switch is left on the signature."""
+    assert list(inspect.signature(connected_components).parameters) == ["edges"]
 
 
 def _moved(mapping: dict) -> dict:

@@ -241,7 +241,7 @@ def test_text_analysis_queries_have_no_shuffle(spark):
 
 def test_ivf_probe_join_broadcasts_query_side(spark):
     """IVF candidate generation: the exploded query-probe side is tiny
-    (n_queries * n_probe rows) and must broadcast — a sort-merge join here
+    (EMB_QUERIES * IVF_PROBE rows) and must broadcast — a sort-merge join here
     would shuffle the whole corpus by centroid_id for nothing."""
     from kgforge.queries import q_embedding_ivf_topk
     plan = _plan(q_embedding_ivf_topk(spark, SF))
@@ -251,6 +251,35 @@ def test_ivf_probe_join_broadcasts_query_side(spark):
     # pass — a vec_id filter cannot push through MapInPandas, so a shared
     # full-corpus assignment would run TWICE (once per join side)
     assert "LessThan(vec_id,5)" in plan, plan
+
+
+def test_fanout_guards_no_op_on_multi_file_input(spark, tmp_path):
+    """Written as 8 files, a scan already has the session's parallelism:
+    _fanout and _fanout_by hand back the very frame they got, and
+    embedding_topk over such an embeddings table runs no round-robin
+    exchange. A single-file scan is one partition, and both guards
+    repartition it to the session's parallelism."""
+    from kgforge.queries import _fanout, _fanout_by, q_embedding_topk
+    want = spark.sparkContext.defaultParallelism
+    for table in ("documents", "embeddings"):
+        (spark.read.parquet(f"{SF}/{table}.parquet").repartition(8)
+         .write.parquet(str(tmp_path / f"{table}.parquet")))
+    many = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    assert many.rdd.getNumPartitions() >= want
+    assert _fanout(many) is many
+    assert _fanout_by(many, "doc_id") is many
+    one = spark.read.parquet(f"{SF}/documents.parquet")
+    assert one.rdd.getNumPartitions() == 1
+    assert _fanout(one).rdd.getNumPartitions() == want
+    assert _fanout_by(one, "doc_id").rdd.getNumPartitions() >= want
+
+    def executed(df):
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "RoundRobinPartitioning" in executed(q_embedding_topk(spark, SF))
+    plan = executed(q_embedding_topk(spark, str(tmp_path)))
+    assert "RoundRobinPartitioning" not in plan, plan
 
 
 def test_pivot_is_single_shuffle(spark):
@@ -311,14 +340,16 @@ def test_ngram_jaccard_pairs_single_scan_single_shuffle(spark):
     assert "posexplode" in final_main, final_main
 
 
-def test_ngram_jaccard_forced_hot_band_value_parity(spark):
+def test_ngram_jaccard_forced_hot_band_value_parity(spark, monkeypatch):
     """Force every band through the self-join spill branch (cap=1): the
     pair set and jaccard values must be identical to the fused branch —
     the guard is a row-size bound, never a semantic change."""
+    from kgforge import queries
     from kgforge.queries import q_ngram_jaccard_pairs
     base = sorted((r.doc_a, r.doc_b, round(r.jaccard, 12))
                   for r in q_ngram_jaccard_pairs(spark, SF).collect())
-    forced = q_ngram_jaccard_pairs(spark, SF, hot_band_cap=1)
+    monkeypatch.setattr(queries, "NGRAM_HOT_BAND_CAP", 1)
+    forced = q_ngram_jaccard_pairs(spark, SF)
     got = sorted((r.doc_a, r.doc_b, round(r.jaccard, 12))
                  for r in forced.collect())
     assert base and got == base

@@ -92,6 +92,17 @@ def test_oracle_keys_subset_of_queries(entry_mod):
     }
 
 
+def test_query_builders_take_only_spark_and_sf_dir(entry_mod):
+    """A builder's settings are module constants read when its plan is
+    built (e.g. queries.NGRAM_HOT_BAND_CAP, queries.EMB_K), so the
+    driver's (spark, sf_dir) call is the only form a query has."""
+    import inspect
+    extra = {name: str(inspect.signature(fn))
+             for name, fn in entry_mod.queries().items()
+             if list(inspect.signature(fn).parameters) != ["spark", "sf_dir"]}
+    assert not extra, extra
+
+
 def test_entry_returns_rows(spark, entry_mod):
     df = entry_mod.entry(spark)
     assert df.count() > 0
